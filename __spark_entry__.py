@@ -1128,8 +1128,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB twin recomputes bit-for-bit, and the pigeonhole blocking
     is recall-COMPLETE for hamming ≤ 3 — so the blocked result equals
     the all-pairs filter and the row carries a full value ORACLE
-    (formerly rows-only). The numpy signature path (simhash_fast)
-    stays the no-oracle production alternative, pinned by pytest."""
+    (formerly rows-only)."""
     from ariadne_spark.operators.dedup import (
         simhash_near_pairs,
         simhash_portable,

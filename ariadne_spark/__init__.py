@@ -11,7 +11,6 @@ from .index import Index
 from .plans.locate import Band
 from .sources.datasource import register as register_data_source
 from .sql.advisor import advise_indexes
-from .storage.backend import migrate_table, open_table, register_backend
 from .sql.surface import (
     disable_sql_interception,
     enable_sql_interception,
@@ -42,8 +41,5 @@ __all__ = [
     "register_data_source",
     "enable_sql_interception",
     "disable_sql_interception",
-    "open_table",
-    "register_backend",
-    "migrate_table",
 ]
 __version__ = "0.1.0"

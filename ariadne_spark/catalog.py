@@ -60,32 +60,22 @@ _DESCRIBE_SCHEMA = T.StructType(
 def _file_counts(spark: SparkSession, names: list[str]) -> dict[str, int]:
     """FileList row counts for all named indexes in ONE Spark job.
 
-    Manifest-backed filelists are counted from a single parquet scan
-    over every live segment of every index (explicit schema, so no
+    Filelists are counted from a single parquet scan over every
+    live segment of every index (explicit schema, so no
     per-table schema-inference job; the per-table ``read()`` plan
     union previously cost one listing/inference job per index — 500
     indexes would mean 500 jobs before the count even ran). Rows are
     attributed to their index from the file path. ``count_distinct``
     over raw segment rows equals each table's replace-per-key read
     count because the FileList keys on ``filename`` (re-adds append
-    duplicate keys that the read collapses). Non-manifest backends
-    fall back to the unioned per-table read."""
+    duplicate keys that the read collapses)."""
     from pyspark.sql import functions as F
-
-    from .storage.table import ParquetTable
 
     counts: dict[str, int] = {name: 0 for name in names}
     seg_dirs: list[str] = []
-    fallback: list[str] = []
     for name in names:
         tbl = Index.for_name(name, spark=spark).filelist.table
-        if isinstance(tbl, ParquetTable):
-            m = tbl._read_manifest()
-            seg_dirs.extend(
-                f"{tbl.path}/{s['dir']}" for s in (m["segments"] if m else [])
-            )
-        else:
-            fallback.append(name)
+        seg_dirs.extend(tbl.segment_dirs())
     if seg_dirs:
         rows = (
             spark.read.schema("filename string")
@@ -103,16 +93,6 @@ def _file_counts(spark: SparkSession, names: list[str]) -> dict[str, int]:
         for r in rows:
             if r["__index"] in counts:
                 counts[r["__index"]] = r["n"]
-    if fallback:
-        counted = None
-        for name in fallback:
-            fl = Index.for_name(name, spark=spark).files.select(
-                F.lit(name).alias("__index")
-            )
-            counted = fl if counted is None else counted.unionByName(fl)
-        rows = counted.groupBy("__index").agg(F.count("*").alias("n")).collect()
-        for r in rows:
-            counts[r["__index"]] = r["n"]
     return counts
 
 

@@ -72,7 +72,7 @@ from .storage.metadata import (
     save_metadata,
 )
 from .storage.paths import IndexPaths
-from .storage.backend import open_table
+from .storage.table import ParquetTable
 
 log = logging.getLogger("ariadne")
 
@@ -92,7 +92,7 @@ class Index:
         # segment_unique: every update() batch appends exactly one row
         # per file (build.py attach_file_sizes frames a unique file
         # list), so reads take the max_by partial-agg dedup path
-        self.table = open_table(
+        self.table = ParquetTable(
             spark, paths.index, key_cols=("filename",), segment_unique=True
         )
         self._selection: list[str] | None = None
@@ -317,22 +317,32 @@ class Index:
         exact FileList ∖ index computation, so the fast path can never
         hide an unindexed file."""
         names = [normalize_path(p) for p in paths]
-        cur = self._tables_fingerprint()
-        if cur == getattr(self, "_synced_fingerprint", None):
+        pre = self._tables_fingerprint()
+        if pre == getattr(self, "_synced_fingerprint", None):
             base: set | None = set()
         elif (
             getattr(self, "_pending_files", None) is not None
-            and cur == getattr(self, "_pending_fingerprint", None)
+            and pre == getattr(self, "_pending_fingerprint", None)
         ):
             base = set(self._pending_files)
         else:
             base = None
         self.filelist.add(names)
-        if base is not None and names:
-            self._pending_files = base | set(names)
-            self._pending_fingerprint = self._tables_fingerprint()
-        elif base is None:
+        if not names:
+            return self
+        if base is not None:
+            post = self._tables_fingerprint()
+            # version continuity: the only commit since ``pre`` must be
+            # this add's own FileList commit — a foreign add that landed
+            # in between would otherwise be absorbed into the fingerprint
+            # without being in the pending set
+            if post != ((pre[0] or 0) + 1, pre[1]):
+                base = None
+        if base is None:
             self._pending_files = None
+        else:
+            self._pending_files = base | set(names)
+            self._pending_fingerprint = post
         return self
 
     def has_file(self, path: str) -> bool:
@@ -386,7 +396,7 @@ class Index:
         return self._totals_cache
 
     def large_df(self, column: str) -> DataFrame | None:
-        t = open_table(
+        t = ParquetTable(
             self.spark, self.paths.large_index(column), key_cols=("filename",)
         )
         if not t.exists:
@@ -409,40 +419,27 @@ class Index:
     def unindexed_files(self) -> list[str]:
         """FileList ∖ index (reference J1: Index.scala:166-183).
 
-        Manifest-backed tables take a two-scan fast path: raw
-        filename-only reads of the live segments (explicit schema, so
-        parquet prunes to one tiny column and no shuffle runs) with
-        the set difference on the driver — exact because both tables
-        key on filename (see ``ParquetTable.segment_dirs``), and
-        driver-sized because ``update()`` materializes this list
-        anyway. The replace-per-key read + anti-join plan this
-        replaces cost 5 Spark jobs per update against 2."""
-        from .storage.table import ParquetTable
-
-        fl_tbl = self.filelist.table
-        if isinstance(fl_tbl, ParquetTable) and isinstance(
-            self.table, ParquetTable
-        ):
-            fl_dirs = fl_tbl.segment_dirs()
-            if not fl_dirs:
-                return []
-            reader = self.spark.read.schema("filename string")
-            fl_names = {
-                r[0] for r in reader.parquet(*fl_dirs).collect()
-            }
-            ix_dirs = self.table.segment_dirs()
-            ix_names = (
-                {r[0] for r in reader.parquet(*ix_dirs).collect()}
-                if ix_dirs
-                else set()
-            )
-            return sorted(fl_names - ix_names)
-        files = self.filelist.files.select("filename")
-        idx = self.index_df
-        if idx is None:
-            return [r[0] for r in files.collect()]
-        missing = files.join(idx.select("filename"), "filename", "left_anti")
-        return [r[0] for r in missing.collect()]
+        Two raw filename-only reads of the live segments (explicit
+        schema, so parquet prunes to one tiny column and no shuffle
+        runs) with the set difference on the driver — exact because
+        both tables key on filename (see ``ParquetTable.segment_dirs``),
+        and driver-sized because ``update()`` materializes this list
+        anyway. A replace-per-key read + anti-join plan costs 5 Spark
+        jobs per update against 2."""
+        fl_dirs = self.filelist.table.segment_dirs()
+        if not fl_dirs:
+            return []
+        reader = self.spark.read.schema("filename string")
+        fl_names = {
+            r[0] for r in reader.parquet(*fl_dirs).collect()
+        }
+        ix_dirs = self.table.segment_dirs()
+        ix_names = (
+            {r[0] for r in reader.parquet(*ix_dirs).collect()}
+            if ix_dirs
+            else set()
+        )
+        return sorted(fl_names - ix_names)
 
     def _files_needing_column_update(self) -> list[str]:
         """Column backfill: if a newly-registered index column is absent
@@ -486,19 +483,21 @@ class Index:
             # since the last verified-synced update are this handle's
             # own add_files calls — proven by the version fingerprint,
             # re-checked here UNDER the lock — the unindexed set is
-            # exactly the pending set, no read jobs needed.
+            # exactly the pending set, no read jobs needed. The
+            # FileList version is taken BEFORE the unindexed set is
+            # computed, so _mark_synced can tell whether a foreign
+            # add_files landed while this update ran.
+            fp = self._tables_fingerprint()
             pend = getattr(self, "_pending_files", None)
-            if pend is not None and (
-                self._tables_fingerprint()
-                == getattr(self, "_pending_fingerprint", None)
+            if pend is not None and fp == getattr(
+                self, "_pending_fingerprint", None
             ):
                 unindexed = set(pend)
             else:
                 unindexed = set(self.unindexed_files())
             todo = unindexed | set(self._files_needing_column_update())
             if not todo:
-                self._pending_files = None
-                self._synced_fingerprint = self._tables_fingerprint()
+                self._mark_synced(fp[0])
                 return self
             use_footers = (
                 footer_stats
@@ -561,7 +560,7 @@ class Index:
                         temporal_cols=temporal_cols,
                     )
                     for col, ldf in large.items():
-                        open_table(
+                        ParquetTable(
                             self.spark,
                             self.paths.large_index(col),
                             key_cols=("filename",),
@@ -587,12 +586,19 @@ class Index:
                 self._compact_tables()
                 self.meta.batches_since_compact = 0
             save_metadata(self.paths.metadata, self.meta, fs=self.fs)
-            # every registered file is now indexed: record the synced
-            # fingerprint (taken AFTER all appends/compactions) so the
-            # next add_files→update pair can take the pending fast path
-            self._pending_files = None
-            self._synced_fingerprint = self._tables_fingerprint()
+            self._mark_synced(fp[0])
         return self
+
+    def _mark_synced(self, filelist_version: int | None) -> None:
+        """Record the synced fingerprint (taken AFTER all appends and
+        compactions) so the next add_files→update pair can take the
+        pending fast path — but only while the FileList is still at
+        ``filelist_version``, the version the indexed set was computed
+        against. A foreign add_files that committed during the update
+        may not be indexed, so the next update must recompute."""
+        self._pending_files = None
+        cur = self._tables_fingerprint()
+        self._synced_fingerprint = cur if cur[0] == filelist_version else None
 
     # ------------------------------------------------------------ query
 
@@ -912,7 +918,7 @@ class Index:
             self.table.delete_where(cond)
         self._invalidate()
         for cfg in self.meta.indexes:
-            t = open_table(
+            t = ParquetTable(
                 self.spark, self.paths.large_index(cfg.column), key_cols=("filename",)
             )
             if t.exists:
@@ -928,20 +934,15 @@ class Index:
         metadata v9's total_indexed_file_size). Recomputed exactly from
         the index table: one tiny aggregation beats incremental
         bookkeeping that can drift."""
-        from .storage.table import ParquetTable
-
-        if isinstance(self.table, ParquetTable):
-            # column-pruned replace-per-key read: the default plan
-            # packs every index column into the max_by struct, so this
-            # one SUM would otherwise rescan every bloom blob and
-            # value array after each update
-            idx = (
-                self.table.read(columns=["file_size"])
-                if self.table.exists
-                else None
-            )
-        else:
-            idx = self.index_df
+        # column-pruned replace-per-key read: the default plan packs
+        # every index column into the max_by struct, so this one SUM
+        # would otherwise rescan every bloom blob and value array
+        # after each update
+        idx = (
+            self.table.read(columns=["file_size"])
+            if self.table.exists
+            else None
+        )
         if idx is None:
             self.meta.total_indexed_bytes = 0
             return
@@ -952,7 +953,7 @@ class Index:
         self.table.compact()
         self._invalidate()
         for cfg in self.meta.indexes:
-            t = open_table(
+            t = ParquetTable(
                 self.spark, self.paths.large_index(cfg.column), key_cols=("filename",)
             )
             if t.exists:
@@ -974,7 +975,7 @@ class Index:
         Delta's VACUUM retention contract)."""
         self.table.vacuum(retention_hours=retention_hours)
         for cfg in self.meta.indexes:
-            t = open_table(
+            t = ParquetTable(
                 self.spark, self.paths.large_index(cfg.column), key_cols=("filename",)
             )
             if t.exists:

@@ -3,27 +3,23 @@ Jaccard — the standard near-dup arsenal of an LLM data pipeline,
 designed shuffle-light for 100 TB:
 
 * exact dedup: one hash shuffle on the dedup keys.
-* MinHash: shingles are exploded ONCE and all k minhash values are
-  computed in a single groupBy (k aggregate expressions, one
-  shuffle) — not k passes. LSH banding turns candidate generation
-  into an equi-join on (band, band_hash); exact Jaccard is verified
-  only on banded candidates (never all pairs).
+* MinHash: all k minhash values come from one Arrow-batched numpy
+  pass per row (no explode, no shuffle). LSH banding turns
+  candidate generation into an equi-join on (band, band_hash); exact
+  Jaccard is verified only on banded candidates (never all pairs).
 * SimHash: 64 per-bit sums in one groupBy; candidate pairs via
   16-bit chunk blocking (Hamming ≤ 3 must share ≥1 of 4 chunks).
 
 Everything is deterministic: hashes are ``xxhash64`` (seeded by
-literal suffixes), so results are stable across runs and cluster
-sizes.
+literal suffixes), sha256-derived MinHash constants or md5 (SimHash),
+so results are stable across runs and cluster sizes.
 """
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .text import char_ngrams, word_tokens
 from .util import ensure_parallelism as _ensure_parallelism
 
 
@@ -87,33 +83,6 @@ def exact_dedup_normalized(
 
 # ------------------------------------------------------------------ minhash
 
-def shingle_rows(
-    df: DataFrame, text_col: str, id_col: str, shingle_len: int = 5
-) -> DataFrame:
-    """(id, shingle) distinct rows — the exploded form used by both
-    signature building and exact-Jaccard verification."""
-    # per-row array_distinct makes (id, shingle) pairs unique without a
-    # global distinct() shuffle — ids differ across rows by definition
-    return df.select(
-        F.col(id_col).alias("__id"),
-        F.explode(
-            F.array_distinct(char_ngrams(F.lower(F.col(text_col)), shingle_len))
-        ).alias("__shingle"),
-    )
-
-
-def minhash_signatures(
-    shingles: DataFrame, num_hashes: int = 64
-) -> DataFrame:
-    """One row per id with k minhash columns h0..h{k-1}; single
-    groupBy shuffle, k vectorized aggregate expressions."""
-    aggs = [
-        F.min(F.xxhash64(F.col("__shingle"), F.lit(i))).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    return shingles.groupBy("__id").agg(*aggs)
-
-
 def _minhash_fast_udf(num_hashes: int, shingle_len: int):
     """Vectorized minhash: numpy sliding-window shingling + one
     polynomial gram hash + k affine permutations (uint64 wraparound
@@ -171,7 +140,7 @@ def minhash_signatures_fast(
     shingle_len: int = 5,
 ) -> DataFrame:
     """Zero-shuffle minhash signatures straight from the text column;
-    columns __id, h0..h{k-1} (same shape as minhash_signatures)."""
+    columns __id, h0..h{k-1}."""
     df = _ensure_parallelism(df)
     arr = _minhash_fast_udf(num_hashes, shingle_len)(F.col(text_col))
     sig = df.select(F.col(id_col).alias("__id"), arr.alias("__sig"))
@@ -437,93 +406,6 @@ def near_dup_clusters(
 
 # ------------------------------------------------------------------ simhash
 
-def _simhash_fast_udf(bits: int = 64):
-    """Vectorized SimHash: split to word tokens, hash each token via a
-    padded-matrix polynomial (numpy matmul in uint64 wraparound, token
-    length mixed in), unpack hash bits, sum ±1 per bit position, sign
-    → signature. One Arrow batch in, one int64 out — no explode, no
-    64-aggregate groupBy."""
-    import re
-
-    import numpy as np
-    import pandas as pd
-
-    assert bits == 64
-    PAD = 16
-    R = np.uint64(1099511628211)
-    powers = np.array([R ** np.uint64(PAD - 1 - i) for i in range(PAD)], dtype=np.uint64)
-    LEN_MIX = np.uint64(0x9E3779B97F4A7C15)
-    token_re = re.compile(r"[^\W_]+", re.UNICODE)
-
-    def sig(texts: pd.Series) -> pd.Series:
-        out = []
-        with np.errstate(over="ignore"):
-            for t in texts:
-                if t is None:
-                    out.append(None)
-                    continue
-                toks = token_re.findall(t.lower())
-                if not toks:
-                    out.append(0)
-                    continue
-                mat = np.zeros((len(toks), PAD), dtype=np.uint64)
-                lens = np.empty(len(toks), dtype=np.uint64)
-                for i, tok in enumerate(toks):
-                    cp = np.frombuffer(
-                        tok[:PAD].encode("utf-32-le"), dtype=np.uint32
-                    )
-                    mat[i, : len(cp)] = cp
-                    lens[i] = len(tok)
-                h = (mat * powers[None, :]).sum(axis=1) + lens * LEN_MIX
-                # per-bit ±1 sums over token-hash bits
-                bytes_view = h.view(np.uint8).reshape(len(toks), 8)
-                bit_matrix = np.unpackbits(bytes_view, axis=1, bitorder="little")
-                sums = bit_matrix.astype(np.int32).sum(axis=0) * 2 - len(toks)
-                sig_bits = (sums > 0).astype(np.uint8)
-                val = int(np.packbits(sig_bits, bitorder="little").view(np.uint64)[0])
-                out.append(val - (1 << 64) if val >= (1 << 63) else val)
-        return pd.Series(out, dtype="object")
-
-    sig.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    return F.pandas_udf(sig, "long")
-
-
-def simhash_fast(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Zero-shuffle SimHash signatures (same output shape as
-    ``simhash``; different — but deterministic — hash family)."""
-    df = _ensure_parallelism(df)
-    return df.select(
-        F.col(id_col), _simhash_fast_udf()(F.col(text_col)).alias("simhash")
-    )
-
-
-def simhash(
-    df: DataFrame, text_col: str, id_col: str, bits: int = 64
-) -> DataFrame:
-    """64-bit SimHash over word tokens: per bit, sum +1/-1 weighted by
-    token-hash bit, sign → bit. One explode + one groupBy with
-    ``bits`` aggregate expressions."""
-    toks = df.select(
-        F.col(id_col).alias("__id"),
-        F.explode(word_tokens(F.lower(F.col(text_col)))).alias("__tok"),
-    )
-    h = F.xxhash64(F.col("__tok"))
-    aggs = [
-        F.sum(
-            F.when(F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"b{b}")
-        for b in range(bits)
-    ]
-    sums = toks.groupBy("__id").agg(*aggs)
-    sig = reduce(
-        lambda acc, b: acc
-        + F.when(F.col(f"b{b}") > 0, F.lit(1).cast("long") * (1 << b) if b < 63 else F.lit(-(2 ** 63))).otherwise(0),
-        range(bits),
-        F.lit(0).cast("long"),
-    )
-    return sums.select(F.col("__id").alias(id_col), sig.alias("simhash"))
-
-
 def simhash_portable(
     df: DataFrame, text_col: str, id_col: str
 ) -> DataFrame:
@@ -531,16 +413,14 @@ def simhash_portable(
     whitespace token, the first 16 hex chars of md5 are 16 nibbles =
     64 bits; bit ``b`` is bit ``b % 4`` of nibble ``b // 4`` (counted
     from the LEFT). Everything is string/integer built-ins with
-    identical ANSI-SQL spellings, so — unlike :func:`simhash`
-    (xxhash64, no DuckDB twin) and :func:`simhash_fast` (numpy FNV
-    UDF) — the full near-pair result carries a value ORACLE.
+    identical ANSI-SQL spellings, so the full near-pair result
+    carries a value ORACLE.
 
     Shape: one token explode, the 16-hex hash decoded by TWO ``conv``
     calls into 32-bit halves, 64 shift-and-mask bit sums in ONE
     partial-aggregatable groupBy (map-side combine — a hot doc id
     never serializes its tokens through one task), signature packed
-    from the 64 majority votes (bit 63 carries the sign, same
-    convention as :func:`simhash`).
+    from the 64 majority votes (bit 63 carries the sign).
 
     Built from SQL-TEXT expressions on purpose: composing the 129
     sub-expressions through pyspark Column operators costs ~1 s of

@@ -988,22 +988,6 @@ def image_resize(
     return df.mapInPandas(run, out_schema)
 
 
-def resize_stub(df: DataFrame, width: int, height: int) -> DataFrame:
-    """STUB: metadata-only resize for PLANNING passes (cost/shape
-    estimation without touching pixels) — the real pixel operator is
-    :func:`image_resize`."""
-    meta = F.col("media_meta")
-    new_meta = F.struct(
-        meta.getField("media_type").alias("media_type"),
-        meta.getField("format").alias("format"),
-        F.lit(width).cast("int").alias("width"),
-        F.lit(height).cast("int").alias("height"),
-        meta.getField("duration_ms").alias("duration_ms"),
-        meta.getField("byte_len").alias("byte_len"),
-    )
-    return df.withColumn("media_meta", new_meta)
-
-
 def _wav_pcm16(blob: bytes):
     """(samples int16 (frames, ch), rate) for a RIFF/WAVE PCM16 blob,
     or None for anything else (8-bit and non-PCM inputs are feature-

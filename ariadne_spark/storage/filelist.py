@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType, TimestampType
 
-from .backend import open_table
+from .table import ParquetTable
 
 FILELIST_SCHEMA = StructType(
     [
@@ -30,7 +30,7 @@ class FileList:
         self.spark = spark
         # segment_unique: add() dedups each batch (sorted(set(...))),
         # so every segment holds one row per filename -> min_by read
-        self.table = open_table(
+        self.table = ParquetTable(
             spark,
             path,
             key_cols=("filename",),
@@ -46,22 +46,18 @@ class FileList:
         return df
 
     def filenames(self) -> list[str]:
-        from .table import ParquetTable
-
-        if isinstance(self.table, ParquetTable):
-            # one filename-only scan of the live segments (explicit
-            # schema, no shuffle); the driver set() collapses re-adds
-            # exactly like the replace-per-key read would
-            dirs = self.table.segment_dirs()
-            if not dirs:
-                return []
-            rows = (
-                self.spark.read.schema("filename string")
-                .parquet(*dirs)
-                .collect()
-            )
-            return sorted({r[0] for r in rows})
-        return [r[0] for r in self.files.select("filename").collect()]
+        # one filename-only scan of the live segments (explicit schema,
+        # no shuffle); the driver set() collapses re-adds exactly like
+        # the replace-per-key read would
+        dirs = self.table.segment_dirs()
+        if not dirs:
+            return []
+        rows = (
+            self.spark.read.schema("filename string")
+            .parquet(*dirs)
+            .collect()
+        )
+        return sorted({r[0] for r in rows})
 
     def add(self, filenames: list[str]) -> None:
         if not filenames:

@@ -324,9 +324,6 @@ class ParquetTable:
 
         self._commit(build)
 
-    # upsert IS append under replace-per-key read semantics
-    upsert = append
-
     def _check_segment_unique(self, df: DataFrame) -> None:
         """Opt-in invariant check (``spark.ariadne.debugInvariants``):
         ``segment_unique=True`` promises at most one row per key per

@@ -5,8 +5,6 @@ Delta optimistic concurrency)."""
 
 from __future__ import annotations
 
-import pytest
-
 import os
 import subprocess
 import sys
@@ -26,8 +24,6 @@ spark = (SparkSession.builder.master("local[2]")
 spark.sparkContext.setLogLevel("ERROR")
 spark.conf.set("spark.ariadne.storagePath", {storage!r})
 from ariadne_spark import Index
-
-pytestmark = pytest.mark.slow  # JVM-compile / multi-process soak: depth, not breadth
 
 idx = Index.for_name("conc", spark=spark)
 idx.add_files({files!r})

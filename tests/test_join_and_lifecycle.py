@@ -318,3 +318,49 @@ def test_incremental_update_pending_fast_path(spark, storage, orders_files):
     ra = {(r[0].rsplit("/", 1)[-1], tuple(sorted(r[1]))) for r in a.collect()}
     rb = {(r[0].rsplit("/", 1)[-1], tuple(sorted(r[1]))) for r in b.collect()}
     assert ra == rb
+
+
+@pytest.mark.parametrize("window", ["add_files", "update"])
+def test_pending_fast_path_foreign_add_race(
+    spark, storage, orders_files, monkeypatch, window
+):
+    """A second handle's add_files that commits inside one of this
+    handle's fast-path windows must never be absorbed into the pending
+    fingerprint: (add_files) just before this handle's FileList.add;
+    (update) while update() builds the pending batch. Either way the
+    next add_files→update pair indexes the foreign file too."""
+    import ariadne_spark.index as index_mod
+
+    df, files = orders_files
+    name = f"orders_race_{window}"
+    idx = Index.for_name(name, schema=df.schema, format="parquet", spark=spark)
+    idx.add_index("o_custkey")
+    idx.add_files(files[:1]).update()
+    other = Index.for_name(name, spark=spark)
+    fired = []
+
+    def foreign_add():
+        if not fired:
+            fired.append(True)
+            other.add_files([files[2]])
+
+    if window == "add_files":
+        own_add = idx.filelist.add
+
+        def racing_add(names):
+            foreign_add()
+            own_add(names)
+
+        monkeypatch.setattr(idx.filelist, "add", racing_add)
+    else:
+        build = index_mod.build_index_rows
+
+        def racing_build(*args, **kwargs):
+            foreign_add()
+            return build(*args, **kwargs)
+
+        monkeypatch.setattr(index_mod, "build_index_rows", racing_build)
+    idx.add_files([files[1]]).update()
+    assert fired
+    idx.add_files([files[3]]).update()
+    assert idx.unindexed_files() == []

@@ -102,18 +102,6 @@ def test_near_dup_minhash_mass_duplication_bounded(spark):
     assert all(j == 1.0 for j in got.values())
 
 
-def test_simhash_hamming_zero_for_identical(spark):
-    df = spark.createDataFrame(
-        [(1, "alpha beta gamma delta"), (2, "alpha beta gamma delta"), (3, "zzz qqq")],
-        ["id", "t"],
-    )
-    sig = dedup.simhash(df, "t", "id")
-    pairs = dedup.simhash_near_pairs(sig, "id", max_hamming=3)
-    got = {(a, b): h for a, b, h in pairs.collect()}
-    assert got.get((1, 2)) == 0
-    assert (1, 3) not in got and (2, 3) not in got
-
-
 def test_simhash_portable_semantics_and_hand_check(spark):
     """The r07 portable (md5-nibble) hash family: identical texts
     collide at hamming 0, case/whitespace normalize, disjoint texts
@@ -345,24 +333,6 @@ def test_streaming_latest_version(spark, tmp_path):
     }
     # last emission per key must be the max-ts row
     assert (1, 30, "c") in got and (2, 7, "y") in got
-
-
-def test_simhash_fast_matches_semantics(spark):
-    """Vectorized simhash: identical texts collide exactly; disjoint
-    vocabulary stays far."""
-    df = spark.createDataFrame(
-        [(1, "alpha beta gamma delta"), (2, "alpha beta gamma delta"), (3, "zzz qqq www")],
-        ["id", "t"],
-    )
-    sig = dedup.simhash_fast(df, "t", "id")
-    pairs = dedup.simhash_near_pairs(sig, "id", max_hamming=3)
-    got = {(a, b): h for a, b, h in pairs.collect()}
-    assert got.get((1, 2)) == 0
-    assert (1, 3) not in got and (2, 3) not in got
-    # determinism across invocations
-    s1 = {(r["id"], r["simhash"]) for r in sig.collect()}
-    s2 = {(r["id"], r["simhash"]) for r in dedup.simhash_fast(df, "t", "id").collect()}
-    assert s1 == s2
 
 
 def test_salted_join_matches_plain(spark):

@@ -334,88 +334,6 @@ def test_table_restore_rolls_back_as_new_version(spark, storage):
         t.restore(99)
 
 
-# ------------------------------------------------------- backend seam
-
-def test_backend_default_is_parquet_lsm(spark, storage):
-    from ariadne_spark.storage.backend import open_table
-
-    t = open_table(spark, f"{storage}/seam1", key_cols=("k",))
-    assert isinstance(t, ParquetTable)
-    t.append(spark.createDataFrame([(1, "a")], ["k", "v"]))
-    t.append(spark.createDataFrame([(1, "A")], ["k", "v"]))
-    assert rows_set(t.read()) == {(1, "A")}
-
-
-def test_backend_unknown_name_raises(spark, storage):
-    from ariadne_spark.storage.backend import open_table
-
-    spark.conf.set("spark.ariadne.tableBackend", "no_such_backend")
-    try:
-        with pytest.raises(ValueError, match="no_such_backend"):
-            open_table(spark, f"{storage}/seam2")
-    finally:
-        spark.conf.unset("spark.ariadne.tableBackend")
-
-
-def test_backend_delta_requires_delta_spark(spark, storage):
-    """In this environment delta-spark is absent: selecting the delta
-    backend must fail loudly at open time, not corrupt state later."""
-    from ariadne_spark.storage.backend import open_table
-
-    try:
-        import delta  # noqa: F401
-
-        pytest.skip("delta-spark installed; the guard path is moot")
-    except ImportError:
-        pass
-    spark.conf.set("spark.ariadne.tableBackend", "delta")
-    try:
-        with pytest.raises(ImportError, match="delta-spark"):
-            open_table(spark, f"{storage}/seam3")
-    finally:
-        spark.conf.unset("spark.ariadne.tableBackend")
-
-
-def test_backend_custom_registration_reaches_index(spark, storage, tmp_path):
-    """A registered backend is what Index actually opens — the seam is
-    wired through every call site, not just a factory that exists."""
-    from ariadne_spark.storage.backend import (
-        _REGISTRY,
-        open_table,
-        register_backend,
-    )
-
-    opened = []
-
-    def spy(s, path, key_cols=(), dedup="last"):
-        opened.append(path)
-        return ParquetTable(s, path, key_cols, dedup)
-
-    register_backend("spy", spy)
-    spark.conf.set("spark.ariadne.tableBackend", "spy")
-    try:
-        t = open_table(spark, f"{storage}/seam4", key_cols=("k",))
-        t.append(spark.createDataFrame([(1, "a")], ["k", "v"]))
-        assert opened and opened[-1].endswith("seam4")
-
-        from ariadne_spark import Index
-
-        df = spark.range(3).withColumnRenamed("id", "k")
-        src = str(tmp_path / "src")
-        df.write.parquet(src)
-        import glob
-
-        idx = Index.for_name("seam_spy", schema=df.schema, format="parquet")
-        idx.add_index("k")
-        idx.add_files(glob.glob(f"{src}/*.parquet")).update()
-        # index table + filelist both opened through the spy backend
-        assert any(p.endswith("/index") for p in opened)
-        assert any(p.endswith("/filelist") for p in opened)
-    finally:
-        spark.conf.unset("spark.ariadne.tableBackend")
-        _REGISTRY.pop("spy", None)
-
-
 # --------------------------------------------- non-atomic store warning
 
 from ariadne_spark.storage.fs import PosixFS
@@ -476,29 +394,6 @@ def test_hadoop_fs_local_scheme_is_atomic(spark, tmp_path):
     assert not fs.create_exclusive(p, "{}")
 
 
-def test_backend_refuses_foreign_format(spark, storage):
-    """Flipping tableBackend over an existing store must fail loudly,
-    not silently present an empty table."""
-    from ariadne_spark.storage.backend import open_table
-
-    # LSM table on disk, then the delta backend is selected
-    t = open_table(spark, f"{storage}/seam5", key_cols=("k",))
-    t.append(spark.createDataFrame([(1, "a")], ["k", "v"]))
-    spark.conf.set("spark.ariadne.tableBackend", "delta")
-    try:
-        with pytest.raises(ValueError, match="written by the 'parquet'"):
-            open_table(spark, f"{storage}/seam5")
-    finally:
-        spark.conf.unset("spark.ariadne.tableBackend")
-
-    # fake delta table on disk, then the parquet backend (default)
-    import os
-
-    os.makedirs(f"{storage}/seam6/_delta_log", exist_ok=True)
-    with pytest.raises(ValueError, match="written by the 'delta'"):
-        open_table(spark, f"{storage}/seam6")
-
-
 def test_hadoop_fs_conditional_create_branch(spark, tmp_path, monkeypatch):
     """Object stores with conditional-create support take the direct
     create(overwrite=false) path instead of temp+rename. Fake the
@@ -517,40 +412,6 @@ def test_hadoop_fs_conditional_create_branch(spark, tmp_path, monkeypatch):
     assert fs.read_text(p) == '{"v": 1}'
     assert not fs.create_exclusive(p, '{"v": 2}')
     assert fs.read_text(p) == '{"v": 1}'  # loser never clobbers
-
-
-def test_migrate_table_between_backends(spark, storage):
-    """migrate_table rewrites current state (per-key resolution
-    applied) into the target backend's layout."""
-    from ariadne_spark.storage.backend import (
-        ParquetTable,
-        _REGISTRY,
-        migrate_table,
-        open_table,
-        register_backend,
-    )
-
-    src = open_table(spark, f"{storage}/mig1", key_cols=("k",))
-    src.append(spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"]))
-    src.append(spark.createDataFrame([(2, "B")], ["k", "v"]))
-
-    calls = []
-
-    def spy(s, path, key_cols=(), dedup="last"):
-        calls.append("open")
-        return ParquetTable(s, path, key_cols, dedup)
-
-    register_backend("spy_mig", spy)
-    try:
-        migrate_table(spark, f"{storage}/mig1", "spy_mig", key_cols=("k",))
-        assert calls  # target backend actually performed the write
-        t = ParquetTable(spark, f"{storage}/mig1", key_cols=("k",))
-        assert rows_set(t.read()) == {(1, "a"), (2, "B")}
-        assert t.num_segments == 1  # old multi-segment history gone
-        with pytest.raises(ValueError, match="unknown target"):
-            migrate_table(spark, f"{storage}/mig1", "nope")
-    finally:
-        _REGISTRY.pop("spy_mig", None)
 
 
 def test_signature_store_compact(spark, tmp_path):
