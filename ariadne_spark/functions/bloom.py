@@ -13,8 +13,9 @@ implementation detail):
     b"ABF1" | uint64 m_bits | uint32 k | bit array (little-endian packed)
 
 Hashing is Kirsch–Mitzenmacher double hashing over the two 64-bit
-halves of ``sha256(utf8(value))`` — deterministic across Python
-versions and processes (unlike ``hash()``).
+halves of ``sha256(utf8(str(value)))`` — deterministic across Python
+versions and processes (unlike ``hash()``). Only the sha256 runs per
+value; bit positions are set and probed as numpy arrays.
 """
 
 from __future__ import annotations
@@ -29,6 +30,8 @@ _MAGIC = b"ABF1"
 _HEADER = struct.Struct("<4sQI")
 
 _MIN_BITS = 64
+# rows per (chunk × k) position matrix in build and probe
+_CHUNK = 65536
 
 
 def _params(n: int, fpr: float) -> tuple[int, int]:
@@ -37,91 +40,6 @@ def _params(n: int, fpr: float) -> tuple[int, int]:
     m = max(_MIN_BITS, int(math.ceil(-n * math.log(fpr) / (math.log(2) ** 2))))
     k = max(1, int(round(m / n * math.log(2))))
     return m, min(k, 32)
-
-
-def _hash_pair(value) -> tuple[int, int]:
-    d = hashlib.sha256(str(value).encode("utf-8")).digest()
-    h1 = int.from_bytes(d[:8], "little")
-    h2 = int.from_bytes(d[8:16], "little") | 1  # odd => full period mod 2^x
-    return h1, h2
-
-
-def build(values, fpr: float = 0.01) -> bytes | None:
-    """Serialize a bloom filter containing ``values`` (None-safe)."""
-    if values is None:
-        return None
-    vals = [v for v in values if v is not None]
-    m, k = _params(len(vals), fpr)
-    bits = np.zeros((m + 7) // 8, dtype=np.uint8)
-    for v in vals:
-        h1, h2 = _hash_pair(v)
-        idx = (h1 + np.arange(k, dtype=np.uint64) * np.uint64(h2)) % np.uint64(m)
-        np.bitwise_or.at(bits, (idx >> np.uint64(3)).astype(np.int64),
-                         np.uint8(1) << (idx & np.uint64(7)).astype(np.uint8))
-    return _HEADER.pack(_MAGIC, m, k) + bits.tobytes()
-
-
-def _parse(blob: bytes) -> tuple[int, int, np.ndarray]:
-    magic, m, k = _HEADER.unpack_from(blob)
-    if magic != _MAGIC:
-        raise ValueError("not an ariadne bloom filter")
-    bits = np.frombuffer(blob, dtype=np.uint8, offset=_HEADER.size)
-    return m, k, bits
-
-
-def might_contain(blob: bytes | None, value) -> bool:
-    """Single probe. None blob (no filter built) => must read the file."""
-    if blob is None:
-        return True
-    m, k, bits = _parse(blob)
-    h1, h2 = _hash_pair(value)
-    idx = (h1 + np.arange(k, dtype=np.uint64) * np.uint64(h2)) % np.uint64(m)
-    byte = bits[(idx >> np.uint64(3)).astype(np.int64)]
-    return bool(np.all(byte & (np.uint8(1) << (idx & np.uint64(7)).astype(np.uint8))))
-
-
-def might_contain_any(blob: bytes | None, hash_pairs) -> bool:
-    """Probe many pre-hashed values against one filter; True if any
-    value may be present. Accepts a list of (h1, h2) tuples or an
-    (n, 2) uint64 ndarray (the scale path — see ``hash_values_np``)."""
-    if blob is None:
-        return True
-    pairs = np.asarray(hash_pairs, dtype=np.uint64).reshape(-1, 2)
-    for start in range(0, len(pairs), 65536):
-        if might_contain_np(blob, pairs[start : start + 65536]).any():
-            return True
-    return False
-
-
-def might_contain_np(blob: bytes | None, pairs: np.ndarray) -> np.ndarray:
-    """Vectorized membership for an (n, 2) uint64 hash-pair array
-    against one filter: returns a boolean array (True = maybe
-    present). Chunked so the (chunk × k) index matrix stays small;
-    uint64 arithmetic wraps mod 2^64 exactly like ``might_contain``."""
-    if blob is None:
-        return np.ones(len(pairs), dtype=bool)
-    m, k, bits = _parse(blob)
-    ks = np.arange(k, dtype=np.uint64)
-    m64 = np.uint64(m)
-    out = np.empty(len(pairs), dtype=bool)
-    for start in range(0, len(pairs), 65536):
-        chunk = pairs[start : start + 65536]
-        idx = (chunk[:, 0:1] + ks[None, :] * chunk[:, 1:2]) % m64
-        byte = bits[(idx >> np.uint64(3)).astype(np.int64)]
-        out[start : start + 65536] = np.all(
-            byte & (np.uint8(1) << (idx & np.uint64(7)).astype(np.uint8)), axis=1
-        )
-    return out
-
-
-def hash_values(values) -> list[tuple[int, int]]:
-    return [_hash_pair(v) for v in values if v is not None]
-
-
-def hash_values_np(values) -> np.ndarray:
-    """(n, 2) uint64 hash-pair array for driver-side value lists."""
-    pairs = hash_values(values)
-    return np.asarray(pairs, dtype=np.uint64).reshape(-1, 2)
 
 
 def digest16(value) -> bytes:
@@ -133,10 +51,75 @@ def digest16(value) -> bytes:
 
 
 def pairs_from_digests(digests) -> np.ndarray:
-    """Decode collected 16-byte digests into an (n, 2) uint64 pair
-    array, applying the same h2 |= 1 full-period adjustment as
-    ``_hash_pair``."""
-    buf = b"".join(bytes(d) for d in digests)
-    arr = np.frombuffer(buf, dtype="<u8").reshape(-1, 2).copy()
+    """Decode 16-byte digests into an (n, 2) uint64 pair array,
+    h2 |= 1 so the double-hash stride has full period mod 2^x."""
+    arr = np.frombuffer(b"".join(digests), dtype="<u8").reshape(-1, 2).copy()
     arr[:, 1] |= np.uint64(1)
     return arr
+
+
+def hash_values(values) -> np.ndarray:
+    """(n, 2) uint64 hash pairs of the non-None ``values``, in order —
+    the one hasher behind build and every probe."""
+    return pairs_from_digests([digest16(v) for v in values if v is not None])
+
+
+def _positions(pairs: np.ndarray, k: int, m: int) -> np.ndarray:
+    """(n, k) bit positions (h1 + i·h2) mod m; uint64 wraps mod 2^64."""
+    ks = np.arange(k, dtype=np.uint64)
+    return (pairs[:, 0:1] + ks[None, :] * pairs[:, 1:2]) % np.uint64(m)
+
+
+def build(values, fpr: float = 0.01) -> bytes | None:
+    """Serialize a bloom filter containing ``values`` (None-safe)."""
+    if values is None:
+        return None
+    pairs = hash_values(values)
+    m, k = _params(len(pairs), fpr)
+    bits = np.zeros(m, dtype=bool)
+    for start in range(0, len(pairs), _CHUNK):
+        bits[_positions(pairs[start : start + _CHUNK], k, m).ravel()] = True
+    return _HEADER.pack(_MAGIC, m, k) + np.packbits(bits, bitorder="little").tobytes()
+
+
+def _parse(blob: bytes) -> tuple[int, int, np.ndarray]:
+    magic, m, k = _HEADER.unpack_from(blob)
+    if magic != _MAGIC:
+        raise ValueError("not an ariadne bloom filter")
+    bits = np.frombuffer(blob, dtype=np.uint8, offset=_HEADER.size)
+    return m, k, bits
+
+
+def might_contain(blob: bytes | None, value) -> bool:
+    """Single probe. None blob (no filter built) => must read the file;
+    a None value never matches."""
+    return might_contain_any(blob, hash_values([value]))
+
+
+def might_contain_any(blob: bytes | None, pairs: np.ndarray) -> bool:
+    """Probe many pre-hashed values (an (n, 2) uint64 array from
+    ``hash_values`` or ``pairs_from_digests``) against one filter;
+    True if any value may be present."""
+    if blob is None:
+        return True
+    return any(
+        might_contain_np(blob, pairs[start : start + _CHUNK]).any()
+        for start in range(0, len(pairs), _CHUNK)
+    )
+
+
+def might_contain_np(blob: bytes | None, pairs: np.ndarray) -> np.ndarray:
+    """Vectorized membership for an (n, 2) uint64 hash-pair array
+    against one filter: returns a boolean array (True = maybe
+    present). Chunked so the (chunk × k) index matrix stays small."""
+    if blob is None:
+        return np.ones(len(pairs), dtype=bool)
+    m, k, bits = _parse(blob)
+    out = np.empty(len(pairs), dtype=bool)
+    for start in range(0, len(pairs), _CHUNK):
+        idx = _positions(pairs[start : start + _CHUNK], k, m)
+        byte = bits[(idx >> np.uint64(3)).astype(np.int64)]
+        out[start : start + _CHUNK] = np.all(
+            byte & (np.uint8(1) << (idx & np.uint64(7)).astype(np.uint8)), axis=1
+        )
+    return out

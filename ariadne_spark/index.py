@@ -46,7 +46,7 @@ from .exceptions import (
 )
 from .operators.build import build_index_rows, split_large_indexes
 from .operators.join import apply_temporal_dedup, prune_metrics_local
-from .plans.batching import analyze_files, create_batches
+from .plans.batching import analyze_files, create_batches, fits_one_batch
 from .plans.locate import LocateStats
 from .plans.locate import locate_files as _locate
 from .sources.files import (
@@ -505,14 +505,25 @@ class Index:
                 and self.meta.indexes
                 and all(c.type == RANGE for c in self.meta.indexes)
             )
-            if use_footers or len(todo) == 1:
+            if (
+                use_footers
+                or len(todo) == 1
+                or fits_one_batch(
+                    self.spark,
+                    self.meta,
+                    sorted(todo),
+                    self.meta.indexes,
+                    conf.large_index_limit,
+                )
+            ):
                 # range structs hold no collect_set state, so batch
                 # packing (and its HLL analysis scan) is unnecessary;
                 # a single file likewise always forms exactly one
                 # batch (oversize files get their own batch anyway),
                 # so the analysis scan would only re-derive that —
                 # skipping it saves 2 jobs on the steady-state
-                # one-new-file micro-batch path
+                # one-new-file micro-batch path; and scalar indexes
+                # over few enough footer rows fit one batch by count
                 batches = [sorted(todo)]
             else:
                 analyses = analyze_files(

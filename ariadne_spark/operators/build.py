@@ -16,7 +16,8 @@ shuffle for regular + computed + exploded + bloom + range. Exploded
 columns avoid a row-multiplying ``explode`` entirely by aggregating
 ``array_distinct(flatten(collect_set(arr)))``. Only the temporal
 index needs its own two-level aggregation (max ts per (file, value),
-then pack per file), joined back on filename.
+then pack per file), joined back on filename; a temporal-only index
+starts from that frame instead.
 
 At 100 TB the shuffle width is bounded by the batch planner
 (plans/batching.py): each batch's total distinct-value volume is
@@ -142,8 +143,13 @@ def build_index_rows(
             )
             bloom_tmp.append((cfg, tmp))
 
+    temporal = [_temporal_frame(df, cfg) for cfg in configs if cfg.type == TEMPORAL]
     if aggs:
         agg_df = df.groupBy(FILENAME_COL).agg(*aggs)
+    elif temporal:
+        # temporal-only: start from the first temporal frame — the
+        # file-size left join below still emits a row for every file
+        agg_df = temporal.pop(0)
     else:
         agg_df = df.select(FILENAME_COL).distinct()
 
@@ -152,9 +158,8 @@ def build_index_rows(
             cfg.stored_column, _bloom_udf(cfg.fpr or 0.01)(F.col(tmp))
         ).drop(tmp)
 
-    for cfg in configs:
-        if cfg.type == TEMPORAL:
-            agg_df = agg_df.join(_temporal_frame(df, cfg), FILENAME_COL, "full_outer")
+    for frame in temporal:
+        agg_df = agg_df.join(frame, FILENAME_COL, "full_outer")
 
     # left join from the authoritative file list => empty files still
     # get an index row (otherwise they'd be re-indexed forever)

@@ -46,6 +46,51 @@ from pyspark.sql import types as T
 from .similarity import _centroids, _stack, _vec_dim
 
 
+# bytes a forced shortlist broadcast may carry: 32 MiB, the size of
+# 2,000,000 rows of two bigint ids
+_SHORT_BROADCAST_BYTES = 32 << 20
+_FIXED_WIDTH = {
+    T.BooleanType: 1, T.ByteType: 1, T.ShortType: 2, T.IntegerType: 4,
+    T.LongType: 8, T.FloatType: 4, T.DoubleType: 8, T.DateType: 4,
+    T.TimestampType: 8, T.TimestampNTZType: 8,
+}
+
+
+def _candidate_counts(cand: DataFrame) -> list:
+    """Per-query candidate rows ``n`` — plus ``id_bytes``, the summed
+    UTF-8 length of variable-width corpus ids — in one driver-sized
+    agg (|queries| rows)."""
+    aggs = [F.count(F.lit(1)).alias("n")]
+    if type(cand.schema["__cid"].dataType) not in _FIXED_WIDTH:
+        cid = F.col("__cid").cast("string")
+        aggs.append(F.sum(F.octet_length(cid)).alias("id_bytes"))
+    return cand.groupBy("__qpos").agg(*aggs).collect()
+
+
+def _id_width(dtype: T.DataType, total_len: int, n: int) -> float:
+    """Estimated bytes per id in a broadcast row: the fixed width of
+    numeric and date types, else 8 bytes of offset plus the mean
+    length."""
+    w = _FIXED_WIDTH.get(type(dtype))
+    return float(w) if w is not None else 8.0 + total_len / max(n, 1)
+
+
+def _broadcast_shortlist(short: DataFrame, per_q: list, shortlist: int,
+                         qids: list) -> DataFrame:
+    """``short`` (query id, corpus id) with a broadcast hint when its
+    estimated bytes — the exact row count (each query keeps
+    min(candidates, shortlist)) times the estimated row width — stay
+    under ``_SHORT_BROADCAST_BYTES``; above it the planner keeps its
+    runtime choice."""
+    rows = sum(min(r["n"], shortlist) for r in per_q)
+    q_len = sum(len(str(q).encode("utf-8")) for q in qids)
+    c_len = sum(r.asDict().get("id_bytes") or 0 for r in per_q)
+    width = _id_width(short.schema[0].dataType, q_len, len(qids)) + _id_width(
+        short.schema[1].dataType, c_len, sum(r["n"] for r in per_q)
+    )
+    return F.broadcast(short) if rows * width <= _SHORT_BROADCAST_BYTES else short
+
+
 def _normalize_rows(mat: np.ndarray) -> np.ndarray:
     norms = np.linalg.norm(mat, axis=1, keepdims=True)
     norms[norms == 0] = 1.0
@@ -416,7 +461,7 @@ def pq_ann_topk_rerank(
     _IVF_PQ_LIVE.append(cand)
     # one driver-sized agg (|queries| rows) materializes the cache and
     # tells us whether the shortlist bound binds at all
-    per_q = cand.groupBy("__qpos").agg(F.count(F.lit(1)).alias("n")).collect()
+    per_q = _candidate_counts(cand)
     max_n = max((r["n"] for r in per_q), default=0)
     qdt = queries.schema[query_id].dataType.simpleString()
     qpos_df = codes.sparkSession.createDataFrame(
@@ -452,13 +497,10 @@ def pq_ann_topk_rerank(
     # count; without the hint the planner's estimate over the cached
     # candidates flips the build side to the WIDE raw-vector side
     # (collect + rebroadcast of the embedding column). Hint only
-    # under an explicit row bound so lake-scale runs keep the
+    # under an estimated byte bound so lake-scale runs keep the
     # planner's runtime choice.
-    sh = short
-    if sum(min(r["n"], shortlist) for r in per_q) <= 2_000_000:
-        sh = F.broadcast(short)
     scored = (
-        sh.join(v, corpus_id)
+        _broadcast_shortlist(short, per_q, shortlist, qids).join(v, corpus_id)
         .join(F.broadcast(q), query_id)
         .select(F.col(query_id), F.col(corpus_id), sim.alias("cosine"))
     )
@@ -714,7 +756,7 @@ def ivf_pq_topk(
         .persist()
     )
     _IVF_PQ_LIVE.append(cand)
-    per_q = cand.groupBy("__qpos").agg(F.count(F.lit(1)).alias("n")).collect()
+    per_q = _candidate_counts(cand)
     qdt = queries.schema[query_id].dataType.simpleString()
     qpos_df = spark.createDataFrame(
         list(enumerate(qids)), f"__qpos int, {query_id} {qdt}"
@@ -767,14 +809,11 @@ def ivf_pq_topk(
     # the planner's join-cardinality estimate over the cached
     # candidates flipped the build side to the WIDE vector scan
     # (collect + rebroadcast of every located embedding; measured
-    # ~+1 s on the sf0.1 gate row). Hint only under an explicit row
+    # ~+1 s on the sf0.1 gate row). Hint only under an estimated byte
     # bound: a lake-scale full-shortlist run keeps the planner's
     # runtime choice.
-    sh = short
-    if n_short <= 2_000_000:
-        sh = F.broadcast(short)
     scored = (
-        sh.join(vecs, corpus_id)
+        _broadcast_shortlist(short, per_q, shortlist, qids).join(vecs, corpus_id)
         .join(F.broadcast(qv), query_id)
         .select(F.col(query_id), F.col(corpus_id), sim.alias("cosine"))
     )

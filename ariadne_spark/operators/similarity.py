@@ -159,9 +159,11 @@ def _arrow_pair_scores(
     NaN → null), so they travel as a ``__nan`` flag and are
     reconstructed as literal NaN doubles JVM-side; NULL cosines
     (null vector / dim mismatch) travel as genuine nulls. Zero-norm
-    CORPUS rows are outside the parity domain: the expression path
-    raises ANSI DIVIDE_BY_ZERO on them (Spark 4 default), so no
-    previously-computable query contains one; here they score NaN.
+    CORPUS rows are outside the parity domain: the expression path's
+    double divide raises DIVIDE_BY_ZERO on them under ANSI mode (the
+    Spark 4 default), so no previously-computable query contains one;
+    here numpy's IEEE division scores them 0/0 = NaN. The parity test
+    pins both behaviours.
 
     ``topk``: per-batch partial top-k per query under the full
     (NaN first, cosine desc, corpus_id asc) order — only candidate

@@ -14,6 +14,16 @@ use is independent of total lake size. Analysis uses
 ``approx_count_distinct`` (HLL sketch, no exact-distinct shuffle) —
 an upper-ish estimate is fine because the budget only controls
 batching, not correctness.
+
+Footer rule (``fits_one_batch``): a scalar column holds at most one
+distinct value per row, so when every counted index is scalar and the
+parquet footers' ``num_rows`` summed over the files is within the
+budget, the files form one batch by construction. That rule reads
+only the footers, on the driver with pyarrow (no Spark job), and
+needs local parquet paths; anything else — array-shaped indexes
+(exploded aliases, array-expression blooms), other formats, remote
+paths, an unreadable footer or a sum over the budget — runs the HLL
+analysis and the packing.
 """
 
 from __future__ import annotations
@@ -24,8 +34,59 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..sources.files import FILENAME_COL, apply_virtual_columns, read_base, with_filename
+from ..sources.files import (
+    FILENAME_COL,
+    apply_virtual_columns,
+    normalize_path,
+    read_base,
+    with_filename,
+)
 from ..storage.metadata import BLOOM, COMPUTED, EXPLODED, REGULAR, TEMPORAL, IndexConfig, IndexMetadata
+
+
+def _counted(configs: list[IndexConfig]) -> list[IndexConfig]:
+    return [
+        cfg
+        for cfg in configs
+        if cfg.type in (REGULAR, COMPUTED, BLOOM, TEMPORAL, EXPLODED)
+    ]
+
+
+def fits_one_batch(
+    spark: SparkSession,
+    meta: IndexMetadata,
+    files: list[str],
+    configs: list[IndexConfig],
+    budget: int,
+) -> bool:
+    """True when the footer rule proves ``files`` fit one batch under
+    ``budget`` (see the module docstring); False means "analyze"."""
+    if meta.format != "parquet":
+        return False
+    # resolve virtual-column types on an empty frame: analysis only
+    df = apply_virtual_columns(
+        read_base(spark, [], meta.format, meta.schema), configs
+    )
+    if any(
+        isinstance(df.schema[cfg.column].dataType, T.ArrayType)
+        for cfg in _counted(configs)
+    ):
+        return False
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rows = 0
+    for f in files:
+        path = normalize_path(f)
+        if not path.startswith("/"):
+            return False
+        try:
+            rows += pq.read_metadata(path).num_rows
+        except (OSError, pa.ArrowException):
+            return False
+        if rows > budget:
+            return False
+    return True
 
 
 @dataclass
@@ -41,11 +102,7 @@ def analyze_files(
     configs: list[IndexConfig],
 ) -> list[FileAnalysis]:
     """Per-file max estimated distinct count over value-indexed columns."""
-    counted = [
-        cfg
-        for cfg in configs
-        if cfg.type in (REGULAR, COMPUTED, BLOOM, TEMPORAL, EXPLODED)
-    ]
+    counted = _counted(configs)
     if not counted:
         return [FileAnalysis(f, 1) for f in files]
 
@@ -73,8 +130,6 @@ def analyze_files(
         counts = [r[cfg.column] or 0 for cfg in configs if cfg.column in r.asDict()]
         seen[r[FILENAME_COL]] = FileAnalysis(r[FILENAME_COL], max([1] + [int(c) for c in counts]))
     # files with zero rows never appear in the groupBy output
-    from ..sources.files import normalize_path
-
     return [seen.get(normalize_path(f), FileAnalysis(normalize_path(f), 1)) for f in files]
 
 

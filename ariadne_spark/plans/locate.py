@@ -161,7 +161,7 @@ def _collect_hash_pairs(source, values_df: DataFrame, cap: int):
         vals = {v for v in source if v is not None}
         if len(vals) > cap:
             return None
-        return bloomfn.hash_values_np(sorted(vals, key=str))
+        return bloomfn.hash_values(sorted(vals, key=str))
 
     import pandas as pd
 

@@ -99,7 +99,8 @@ def locate_files_local(
         cfg = meta.config_for(col)
         if cfg is None:
             raise KeyError(f"column {col} not indexed")
-        per_col[col] = (cfg, [v for v in values if v is not None])
+        vals = [v for v in values if v is not None]
+        per_col[col] = (cfg, vals, bloomfn.hash_values(vals))
         cols_needed.append(cfg.stored_column)
         if cfg.type in (REGULAR, COMPUTED, EXPLODED):
             cols_needed.append(f"auto_bloom_{col}")
@@ -124,11 +125,11 @@ def locate_files_local(
                 for i in range(n):
                     fname = tbl["filename"][i]
                     ok = True
-                    for col, (cfg, vals) in per_col.items():
+                    for col, (cfg, vals, pairs) in per_col.items():
                         if not vals:
                             ok = False
                             break
-                        if not _match(cfg, vals, tbl, i, schema_names):
+                        if not _match(cfg, vals, pairs, tbl, i):
                             ok = False
                             break
                     if ok:
@@ -160,7 +161,9 @@ def _match_band(cfg, band, tbl, i) -> bool:
     return True
 
 
-def _match(cfg, vals, tbl, i, schema_names) -> bool:
+def _match(cfg, vals, pairs, tbl, i) -> bool:
+    """May file row ``i`` hold one of ``vals``? ``pairs`` are their
+    bloom hash pairs, hashed once per query column."""
     sc = cfg.stored_column
     if cfg.type in (REGULAR, COMPUTED, EXPLODED):
         arr = tbl.get(sc, [None])[i] if sc in tbl else None
@@ -170,13 +173,13 @@ def _match(cfg, vals, tbl, i, schema_names) -> bool:
         ab = f"auto_bloom_{cfg.column}"
         blob = tbl.get(ab, [None])[i] if ab in tbl else None
         if blob is not None:
-            return bloomfn.might_contain_any(blob, bloomfn.hash_values(vals))
+            return bloomfn.might_contain_any(blob, pairs)
         return True  # spilled with no bloom: conservative
     if cfg.type == BLOOM:
         blob = tbl.get(sc, [None])[i] if sc in tbl else None
         if blob is None:
             return True
-        return bloomfn.might_contain_any(blob, bloomfn.hash_values(vals))
+        return bloomfn.might_contain_any(blob, pairs)
     if cfg.type == RANGE:
         rng = tbl.get(sc, [None])[i] if sc in tbl else None
         if rng is None or rng.get("min") is None:

@@ -1,26 +1,23 @@
 """FileList — the ledger of files registered with an index.
 
-A ParquetTable of ``(filename string, added_at timestamp)`` with
-insert-if-absent semantics (re-adding a file keeps the original
-added_at), mirroring the reference's Delta FileList
+A ParquetTable of ``(filename string)`` with insert-if-absent
+semantics, mirroring the reference's Delta FileList
 (reference: src/main/scala/dev/cjfravel/ariadne/FileList.scala:62-67,
-dedup at :112-126).
+dedup at :112-126). It holds no timestamp, so the same adds always
+write the same bytes.
 """
 
 from __future__ import annotations
 
-import datetime
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType, TimestampType
+from pyspark.sql.types import StringType, StructField, StructType
 
 from .table import ParquetTable
 
 FILELIST_SCHEMA = StructType(
     [
         StructField("filename", StringType(), False),
-        StructField("added_at", TimestampType(), False),
     ]
 )
 
@@ -62,9 +59,8 @@ class FileList:
     def add(self, filenames: list[str]) -> None:
         if not filenames:
             return
-        now = datetime.datetime.now()
         df = self.spark.createDataFrame(
-            [(f, now) for f in sorted(set(filenames))], FILELIST_SCHEMA
+            [(f,) for f in sorted(set(filenames))], FILELIST_SCHEMA
         )
         self.table.append(df)
 

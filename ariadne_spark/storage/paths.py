@@ -3,7 +3,7 @@
 Layout under ``{storagePath}``::
 
     indexes/{name}/metadata.json        index metadata document
-    indexes/{name}/filelist/            ParquetTable (filename, added_at)
+    indexes/{name}/filelist/            ParquetTable (filename)
     indexes/{name}/index/               ParquetTable main index (key: filename)
     indexes/{name}/large_indexes/{col}/ ParquetTable (filename, value)
     indexes/{name}/staging/             ParquetTable staging rows

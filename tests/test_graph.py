@@ -241,39 +241,46 @@ def test_star_edges_plan_is_partial_aggregatable(spark):
     assert got == {(i, 0) for i in range(1, 50)}
 
 
-@pytest.mark.slow
-def test_cc_local_finish_matches_distributed(spark):
+def _cc_cases():
+    """Edge lists by shape: random, path (worst case), string ids."""
+    rng = random.Random(11)
+    return {
+        "random": [(rng.randrange(400), rng.randrange(400)) for _ in range(700)],
+        "path": [(i, i + 1) for i in range(200)],
+        "strings": [
+            (f"n{rng.randrange(300):03d}", f"n{rng.randrange(300):03d}")
+            for _ in range(500)
+        ],
+    }
+
+
+@pytest.mark.parametrize(
+    "shape",
+    [
+        "strings",
+        pytest.param("random", marks=pytest.mark.slow),
+        pytest.param("path", marks=pytest.mark.slow),
+    ],
+)
+def test_cc_local_finish_matches_distributed(spark, shape):
     """r11: under the conf-bounded edge limit connected_components
     finishes with a driver union-find instead of more star rounds.
     Labels must be IDENTICAL to the distributed fixpoint's on every
     graph shape — random, path (worst case), star union — and for
     string ids; and a mid-loop handoff (limit between the contracted
-    and the input edge count) must agree too."""
-    rng = random.Random(11)
-    cases = []
-    edges = [(rng.randrange(400), rng.randrange(400)) for _ in range(700)]
-    cases.append(spark.createDataFrame(edges, ["src", "dst"]))
-    cases.append(
-        spark.createDataFrame([(i, i + 1) for i in range(200)], ["src", "dst"])
-    )
-    cases.append(
-        spark.createDataFrame(
-            [(f"n{rng.randrange(300):03d}", f"n{rng.randrange(300):03d}")
-             for _ in range(500)],
-            ["src", "dst"],
-        )
-    )
-    for pairs in cases:
-        results = []
-        for limit in ("0", "200000", "300"):
-            spark.conf.set("spark.ariadne.ccLocalEdgeLimit", limit)
-            try:
-                results.append(
-                    sorted(
-                        (r["node"], r["component"])
-                        for r in connected_components(pairs).collect()
-                    )
+    and the input edge count) must agree too. The string-id case runs
+    in the default gate."""
+    pairs = spark.createDataFrame(_cc_cases()[shape], ["src", "dst"])
+    results = []
+    for limit in ("0", "200000", "300"):
+        spark.conf.set("spark.ariadne.ccLocalEdgeLimit", limit)
+        try:
+            results.append(
+                sorted(
+                    (r["node"], r["component"])
+                    for r in connected_components(pairs).collect()
                 )
-            finally:
-                spark.conf.unset("spark.ariadne.ccLocalEdgeLimit")
-        assert results[0] == results[1] == results[2]
+            )
+        finally:
+            spark.conf.unset("spark.ariadne.ccLocalEdgeLimit")
+    assert results[0] == results[1] == results[2]

@@ -1869,10 +1869,8 @@ def test_cosine_scores_arrow_matches_expression_exactly(spark, emb):
             (900002, [1.0] * (dim - 1)),        # ragged dim  -> NULL cosine
             (900003, [1.0] + [None] * (dim - 1)),  # null element -> NULL
             # NaN element -> NaN cosine via BOTH paths (the __nan
-            # Arrow flag). Zero-norm corpus rows are NOT a parity
-            # case: the expression reference itself raises ANSI
-            # DIVIDE_BY_ZERO on them (Spark 4 default), so no prior
-            # query could compute them.
+            # Arrow flag). Zero-norm corpus rows are checked apart,
+            # below: the expression reference raises on them.
             (900004, [float("nan")] + [1.0] * (dim - 1)),
         ],
         "vec_id long, embedding array<double>",
@@ -1901,3 +1899,15 @@ def test_cosine_scores_arrow_matches_expression_exactly(spark, emb):
         .select("query_id", "vec_id", F.round("cosine", 6).alias("cosine"))
     )
     assert topk_got == topk_want
+
+    # zero-norm corpus row: the Arrow scorer divides in IEEE doubles
+    # (0/0 = NaN); the expression reference's ANSI double divide
+    # raises DIVIDE_BY_ZERO, so no earlier query could score one
+    zero = spark.createDataFrame(
+        [(900005, [0.0] * dim)], "vec_id long, embedding array<double>"
+    )
+    got_zero = canon(cosine_scores(zero, queries))
+    assert len(got_zero) == queries.count()
+    assert {c for _, _, c in got_zero} == {"nan"}
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        _cosine_scores_expr(zero, queries).collect()

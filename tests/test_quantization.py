@@ -650,3 +650,42 @@ def test_pq_rerank_binding_shortlist_matches_old_composition(emb, books):
     assert got == want
     # ledger hygiene: at most the current call's candidate frame cached
     assert len(_IVF_PQ_LIVE) <= 1
+
+
+def test_pq_rerank_shortlist_broadcast_bounded_in_bytes(spark, emb, books, monkeypatch):
+    """The shortlist broadcast hint is bounded by estimated bytes
+    (rows × id widths; string ids by their measured mean length), not
+    by rows; above the bound the hint is dropped and the answer is
+    unchanged."""
+    from ariadne_spark.operators import quantization as qz
+
+    short = spark.createDataFrame([(1, "abc")], "query_id long, vec_id string")
+    cand = spark.createDataFrame(
+        [(0, "abcd"), (0, "ab"), (1, "abc")], "__qpos int, __cid string"
+    )
+    per_q = qz._candidate_counts(cand)
+    assert sorted((r["n"], r["id_bytes"]) for r in per_q) == [(1, 3), (2, 6)]
+    # 3 rows × (8 B bigint + 8 B offset + 3 B mean string) = 57 B
+    monkeypatch.setattr(qz, "_SHORT_BROADCAST_BYTES", 57)
+    assert qz._broadcast_shortlist(short, per_q, 10, [1, 2]) is not short
+    monkeypatch.setattr(qz, "_SHORT_BROADCAST_BYTES", 56)
+    assert qz._broadcast_shortlist(short, per_q, 10, [1, 2]) is short
+    # a binding shortlist counts only the kept rows: 2 × 19 B
+    monkeypatch.setattr(qz, "_SHORT_BROADCAST_BYTES", 38)
+    assert qz._broadcast_shortlist(short, per_q, 1, [1, 2]) is not short
+
+    codes = pq_encode(emb, books)
+    q = emb.where(F.col("vec_id") % 100 == 0).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+
+    def run():
+        return sorted(
+            tuple(r)
+            for r in pq_ann_topk_rerank(codes, emb, q, books, k=5, shortlist=40).collect()
+        )
+
+    monkeypatch.setattr(qz, "_SHORT_BROADCAST_BYTES", 32 << 20)
+    hinted = run()
+    monkeypatch.setattr(qz, "_SHORT_BROADCAST_BYTES", 0)
+    assert run() == hinted
