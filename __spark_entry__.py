@@ -1153,9 +1153,10 @@ def _dup_star_pairs(spark: SparkSession, sf_dir: str):
     groupBy min + duplicate-keys-only join) instead of two chained
     Window.partitionBy shuffles — a mass-duplicated key no longer
     serializes through one window task, the exact hazard star_edges
-    exists for. The keyed projection is localCheckpoint'd (lazily;
-    materialized by the CC entry fingerprint job) so the gram UDF
-    still runs ONCE even though both star_edges calls scan it."""
+    exists for. The keyed projection is localCheckpoint'd eagerly (a
+    lazy checkpoint could deadlock against a broadcast exchange, see
+    ``graph.connected_components``) so the gram UDF still runs ONCE
+    even though both star_edges calls scan it."""
     from ariadne_spark.operators.dedup import _gram_set_key_udf
     from ariadne_spark.operators.graph import star_edges
     from ariadne_spark.operators.util import ensure_parallelism
@@ -1165,7 +1166,7 @@ def _dup_star_pairs(spark: SparkSession, sf_dir: str):
     gkey = _gram_set_key_udf(3)(F.col("text"))
     keyed = docs.select(
         "doc_id", tkey.alias("__tk"), gkey.alias("__gk")
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=True)
     # identical edge relation to the window form: every row points at
     # its key-group min, singletons (min == self) drop out — the
     # window form filtered them with src != dst, star_edges never

@@ -85,7 +85,6 @@ class AriadneConf:
     lock_max_wait: int = 3600
     auto_compact_threshold: int | None = None
     auto_bloom_fpr: float = 0.01
-    broadcast_threshold: int = 50_000_000
     # Cost-model floor for bloom probing: when the index's total
     # indexed bytes are below this, locate skips the probe — for a
     # DataFrame query source the probe EXECUTES that frame (the SQL
@@ -125,6 +124,5 @@ class AriadneConf:
             lock_max_wait=_int("lockMaxWait", 3600),
             auto_compact_threshold=_int("autoCompactThreshold", None),
             auto_bloom_fpr=float(raw_fpr) if raw_fpr is not None else 0.01,
-            broadcast_threshold=_int("broadcastThreshold", 50_000_000),
             min_bloom_prune_bytes=_int("minBloomPruneBytes", 32 * 1024 * 1024),
         )

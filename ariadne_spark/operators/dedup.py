@@ -733,14 +733,6 @@ def _snapshot_read(
     return reader.parquet(*files)
 
 
-def _store_snapshot(
-    spark, store_path: str, kind: str, merge_schema: bool = False
-) -> DataFrame | None:
-    return _snapshot_read(
-        spark, _snapshot_files(spark, store_path, kind), merge_schema
-    )
-
-
 def _read_signature_store(spark, store_path: str) -> DataFrame:
     """Read the store with schema merging: batches appended before the
     ``__seq`` stamp existed coexist with stamped ones, and the sampled

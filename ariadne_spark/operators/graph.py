@@ -14,8 +14,8 @@ star per component in O(log n) rounds even on adversarial path
 graphs (plain min-label propagation needs O(diameter) rounds).
 Everything is DataFrame joins/aggregations — no driver-side graph,
 no collect proportional to data — and each round is truncated with
-``localCheckpoint`` so the lineage (and Catalyst plan) stays flat no
-matter how many rounds run.
+an eager ``localCheckpoint`` so the lineage (and Catalyst plan) stays
+flat no matter how many rounds run.
 
 Scale posture: edges for dedup are generated as *star edges*
 (node → per-key min via one window) so an equality relation of any
@@ -152,20 +152,21 @@ def connected_components(
         ).collect()[0]
         return (row["n"], row["h"])
 
-    # Non-eager checkpoints: the fingerprint collect right after is the
-    # round's FIRST action, so it materializes the checkpoint and
-    # computes the convergence stat in ONE Spark job — an eager
-    # checkpoint plus a separate collect cost two full jobs per round.
     # Entry normalization orients edges large→small, establishing the
     # _ls_ss_round invariant (and collapsing (a,b)/(b,a) duplicates).
     # NULL ids collapse to src == dst under greatest/least and are
     # dropped, exactly as src != dst dropped them before.
+    # Checkpoints are EAGER: each materializes in its own job before
+    # any later plan reads it. A lazy checkpoint, materialized by the
+    # fingerprint job, deadlocked when that job planned a broadcast
+    # exchange: the scheduler and the exchange thread took the
+    # checkpoint RDD's monitors in opposite orders.
     e = _dedupe_edges(
         pairs.select(
             F.greatest(F.col(src), F.col(dst)).alias("src"),
             F.least(F.col(src), F.col(dst)).alias("dst"),
         )
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=True)
 
     # r11 (guide §1.2 "remove unnecessary passes"): the fingerprint
     # already reports the edge count, so once the graph is (or
@@ -186,7 +187,7 @@ def connected_components(
         assign = _finish_local(e)
     else:
         for _ in range(max_iter):
-            e = _ls_ss_round(e).localCheckpoint(eager=False)
+            e = _ls_ss_round(e).localCheckpoint(eager=True)
             fp = _fp(e)
             if fp == prev_fp:
                 break

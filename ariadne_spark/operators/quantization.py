@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .similarity import _centroids, _stack, _vec_dim
+from .similarity import _centroids, _pair_cosine, _stack, _topk_ranked, _vec_dim
 
 
 # bytes a forced shortlist broadcast may carry: 32 MiB, the size of
@@ -89,6 +89,34 @@ def _broadcast_shortlist(short: DataFrame, per_q: list, shortlist: int,
         short.schema[1].dataType, c_len, sum(r["n"] for r in per_q)
     )
     return F.broadcast(short) if rows * width <= _SHORT_BROADCAST_BYTES else short
+
+
+def _shortlist_rerank(short: DataFrame, per_q: list, shortlist: int, qids: list,
+                      vecs: DataFrame, q: DataFrame, k: int, query_id: str,
+                      corpus_id: str) -> DataFrame:
+    """Exact re-rank of the ADC shortlist: join the (query id, corpus
+    id) shortlist to the corpus vectors ``__cv`` and the broadcast
+    query vectors ``__qv``, score each pair, rank.
+
+    Build-side control (guide §3.1): the shortlist is (id, id) rows
+    whose EXACT row count is already known driver-side, while
+    ``vecs`` carries the heavy vector column — without the hint the
+    planner's join-cardinality estimate over the cached candidates
+    flipped the build side to the WIDE vector scan (collect +
+    rebroadcast of every embedding; measured ~+1 s on the sf0.1 gate
+    row). :func:`_broadcast_shortlist` hints only under an estimated
+    byte bound, so a lake-scale full-shortlist run keeps the planner's
+    runtime choice."""
+    scored = (
+        _broadcast_shortlist(short, per_q, shortlist, qids).join(vecs, corpus_id)
+        .join(F.broadcast(q), query_id)
+        .select(
+            F.col(query_id),
+            F.col(corpus_id),
+            _pair_cosine(F.col("__qv"), F.col("__cv")).alias("cosine"),
+        )
+    )
+    return _topk_ranked(scored, k, query_id, corpus_id)
 
 
 def _normalize_rows(mat: np.ndarray) -> np.ndarray:
@@ -389,8 +417,14 @@ def pq_ann_topk_rerank(
     no-op filter) the window is skipped outright; otherwise it runs
     over the CACHED candidates, so the ADC scan never re-executes.
     The kept set is identical by construction: row_number ≤ shortlist
-    keeps every row of a group that is not larger than the bound."""
-    from .similarity import _dot, _norm
+    keeps every row of a group that is not larger than the bound.
+
+    Eager query side: the call itself runs Spark jobs — it collects
+    ``queries`` to the driver (ids and vectors for the ADC lookup
+    tables) and materializes the candidate cache with the per-query
+    count — so the returned frame holds a snapshot of the query rows
+    taken at call time, not a lazy plan over them. Raises ValueError
+    on an empty query set."""
     from pyspark.sql import Window
 
     while _IVF_PQ_LIVE:
@@ -489,29 +523,8 @@ def pq_ann_topk_rerank(
     v = vectors.select(
         F.col(corpus_id), F.col(vec_col).cast("array<double>").alias("__cv")
     )
-    sim = _dot(F.col("__qv"), F.col("__cv")) / (
-        _norm(F.col("__qv")) * _norm(F.col("__cv"))
-    )
-    # build-side control (guide §3.1, same as ivf_pq_topk): the
-    # shortlist is (id, id) rows with an exactly-known driver-side
-    # count; without the hint the planner's estimate over the cached
-    # candidates flips the build side to the WIDE raw-vector side
-    # (collect + rebroadcast of the embedding column). Hint only
-    # under an estimated byte bound so lake-scale runs keep the
-    # planner's runtime choice.
-    scored = (
-        _broadcast_shortlist(short, per_q, shortlist, qids).join(v, corpus_id)
-        .join(F.broadcast(q), query_id)
-        .select(F.col(query_id), F.col(corpus_id), sim.alias("cosine"))
-    )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("cosine").desc(), F.col(corpus_id).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id, corpus_id, "rank", F.round("cosine", 6).alias("cosine"))
-    )
+    return _shortlist_rerank(short, per_q, shortlist, qids, v, q, k, query_id,
+                             corpus_id)
 
 
 def ivf_pq_index_build(
@@ -639,7 +652,6 @@ def ivf_pq_topk(
     :func:`ariadne_spark.operators.similarity.ivf_index_topk`
     (pytest-pinned); smaller shortlists trade recall for scan bytes."""
     from ..storage.fs import get_fs, read_json
-    from .similarity import _dot, _norm
     from pyspark.sql import Window
 
     spark = index.spark
@@ -800,29 +812,5 @@ def ivf_pq_topk(
         [(qid, [float(x) for x in r["__qv"]]) for qid, r in zip(qids, qraw)],
         f"{query_id} {qdt}, __qv array<double>",
     )
-    sim = _dot(F.col("__qv"), F.col("__cv")) / (
-        _norm(F.col("__qv")) * _norm(F.col("__cv"))
-    )
-    # build-side control (guide §3.1): the shortlist is (id, id) rows
-    # and its EXACT row count is already known driver-side, while the
-    # vecs side re-reads the heavy vector column — without the hint
-    # the planner's join-cardinality estimate over the cached
-    # candidates flipped the build side to the WIDE vector scan
-    # (collect + rebroadcast of every located embedding; measured
-    # ~+1 s on the sf0.1 gate row). Hint only under an estimated byte
-    # bound: a lake-scale full-shortlist run keeps the planner's
-    # runtime choice.
-    scored = (
-        _broadcast_shortlist(short, per_q, shortlist, qids).join(vecs, corpus_id)
-        .join(F.broadcast(qv), query_id)
-        .select(F.col(query_id), F.col(corpus_id), sim.alias("cosine"))
-    )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("cosine").desc(), F.col(corpus_id).asc()
-    )
-    out = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id, corpus_id, "rank", F.round("cosine", 6).alias("cosine"))
-    )
-    return out
+    return _shortlist_rerank(short, per_q, shortlist, qids, vecs, qv, k, query_id,
+                             corpus_id)

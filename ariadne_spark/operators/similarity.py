@@ -2,17 +2,17 @@
 
 Two tiers, as a 100 TB pipeline needs both:
 
-* ``cosine_topk`` — exact brute-force scan: queries are broadcast,
-  each embedding partition is scanned once, dot products run in
-  JVM codegen via ``aggregate(zip_with(...))``. Linear in corpus
-  size, embarrassingly parallel, zero shuffle until the final
-  per-query top-k (a tiny windowed sort over k·|Q| candidates
-  after partial pruning).
-* ``lsh_ann_*`` — random-hyperplane LSH: deterministic planes derived
-  from sha256, signatures computed in one vectorized pandas UDF
-  (Arrow batches, numpy matmul), bucket equi-join instead of a cross
-  product, exact cosine re-rank inside buckets. The scale path when
-  |Q| is large.
+* ``cosine_scores`` / ``cosine_topk`` — exact brute-force scoring:
+  the query side is collected to the driver (it is the small side),
+  and ONE Arrow-batched corpus scan scores whole record batches
+  against it with vectorized numpy. Linear in corpus size,
+  embarrassingly parallel, zero shuffle until the final per-query
+  top-k (a windowed sort over each batch's k·|Q| candidates).
+* ``lsh_ann_*`` / ``ivf_*`` — approximate candidates: deterministic
+  sha256-derived hyperplanes or centroids, signatures computed in one
+  vectorized pandas UDF, a bucket equi-join instead of a cross
+  product, then the shared exact re-rank tail (:func:`_bucket_rerank`
+  and :func:`_topk_ranked`). The scale path when |Q| is large.
 """
 
 from __future__ import annotations
@@ -20,7 +20,7 @@ from __future__ import annotations
 import hashlib
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -45,78 +45,85 @@ def _norm(a):
     )
 
 
-def _cosine_scores_expr(
-    corpus: DataFrame,
-    queries: DataFrame,
-    corpus_id: str = "vec_id",
-    query_id: str = "query_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The original JVM-expression pair scorer (broadcast crossJoin,
-    per-pair array fold) — kept verbatim as the semantics REFERENCE
-    and the fallback for query sides the Arrow fast path does not
-    cover (empty/null/ragged/non-finite/zero-norm query vectors).
+def _pair_cosine(a, b) -> Column:
+    """Exact cosine of two array columns, both norms folded per pair —
+    the re-rank scorer of every shortlist/bucket operator."""
+    return _dot(a, b) / (_norm(a) * _norm(b))
 
-    Norms are materialized per ROW before the join (one array fold
-    per vector), not inside the pair projection (which would re-fold
-    both norms once per PAIR — measured 2.6× slower at 331k pairs)."""
-    q = queries.select(
-        F.col(query_id),
-        F.col(vec_col).alias("__qv"),
-        _norm(F.col(vec_col)).alias("__qn"),
-    )
-    c = corpus.select(
-        F.col(corpus_id),
-        F.col(vec_col).alias("__cv"),
-        _norm(F.col(vec_col)).alias("__cn"),
-    )
-    sim = _dot(F.col("__qv"), F.col("__cv")) / (
-        F.col("__qn") * F.col("__cn")
+
+def _topk_ranked(
+    scored: DataFrame, k: int, query_id: str, corpus_id: str
+) -> DataFrame:
+    """The exact re-rank tail shared by every top-k operator: rank
+    each query's ``cosine`` rows (higher cosine first, then smaller
+    corpus id), keep ranks ≤ k, round the cosine to 6 places."""
+    w = Window.partitionBy(query_id).orderBy(
+        F.col("cosine").desc(), F.col(corpus_id).asc()
     )
     return (
-        c.crossJoin(F.broadcast(q))
-        .select(F.col(query_id), F.col(corpus_id), sim.alias("cosine"))
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select(query_id, corpus_id, "rank", F.round("cosine", 6).alias("cosine"))
     )
 
 
-def _collected_queries(queries: DataFrame, query_id: str, vec_col: str):
-    """Driver-collected query side for the Arrow scorer, or None when
-    any query row needs the expression path's per-pair semantics
-    (empty set, NULL/ragged/null-element/non-finite/zero-norm query
-    vectors — all produce NULL/NaN cosines whose exact placement the
-    expression fallback reproduces for free). Queries are the SMALL
-    side by module contract (the crossJoin already collected them to
-    the driver to broadcast), so this is not a new driver burden."""
-    rows = queries.select(F.col(query_id), F.col(vec_col)).collect()
-    if not rows:
-        return None
-    qids, vecs = [], []
-    dim = None
-    for r in rows:
-        v = r[1]
-        if v is None or any(x is None for x in v):
-            return None
-        if dim is None:
-            dim = len(v)
-        elif len(v) != dim:
-            return None
-        qids.append(r[0])
+def _bucket_rerank(
+    c: DataFrame,
+    q: DataFrame,
+    key,
+    k: int,
+    query_id: str,
+    corpus_id: str,
+    cv: str = "__cv",
+) -> DataFrame:
+    """Bucketed ANN tail: join the broadcast query side to the corpus
+    on the bucket ``key``, score each pair exactly, keep one cosine per
+    (query, corpus) pair (a pair meeting in several buckets scores the
+    same), then rank. ``q`` carries its vector as ``__qv``."""
+    scored = (
+        c.join(F.broadcast(q), key)
+        .select(
+            F.col(query_id),
+            F.col(corpus_id),
+            _pair_cosine(F.col("__qv"), F.col(cv)).alias("cosine"),
+        )
+        .groupBy(query_id, corpus_id)
+        .agg(F.max("cosine").alias("cosine"))
+    )
+    return _topk_ranked(scored, k, query_id, corpus_id)
+
+
+def _collected_queries(queries: DataFrame, query_id: str, vec_col: str) -> list:
+    """Driver-collected query side of the Arrow scorer, grouped by
+    vector dimension: one ``(dim, qids, qmat, qn)`` group per
+    dimension, plus one NULL group (``dim`` None, no matrix) for NULL
+    vectors, vectors with a null element and empty vectors. Every pair
+    of a NULL-group query scores NULL, as in the expression semantics:
+    a null product poisons the dot fold, and an empty vector's dot
+    against a non-empty one pads with nulls. Queries are the SMALL side
+    by module contract, so the collect is bounded by the query set."""
+    groups: dict = {}
+    for qid, v in queries.select(F.col(query_id), F.col(vec_col)).collect():
+        dim = None if not v or any(x is None for x in v) else len(v)
+        ids, vecs = groups.setdefault(dim, ([], []))
+        ids.append(qid)
         vecs.append(v)
-    if dim == 0:
-        return None
-    qmat = np.array(vecs, dtype=np.float64)
-    if not np.isfinite(qmat).all():
-        return None
-    # query norms via the same sequential left fold as _norm:
-    # acc = 0.0; acc += x_i * x_i in element order; sqrt — every op
-    # IEEE double, bit-identical to the JVM expression
-    qn = np.zeros(len(qids), dtype=np.float64)
-    for i in range(dim):
-        qn = qn + qmat[:, i] * qmat[:, i]
-    qn = np.sqrt(qn)
-    if (qn == 0.0).any():
-        return None
-    return qids, qmat, qn
+    out = []
+    for dim, (ids, vecs) in groups.items():
+        qids = np.empty(len(ids), dtype=object)
+        qids[:] = ids
+        if dim is None:
+            out.append((None, qids, None, None))
+            continue
+        qmat = np.array(vecs, dtype=np.float64)
+        # query norms via the same sequential left fold as _norm:
+        # acc = 0.0; acc += x_i * x_i in element order; sqrt — every op
+        # IEEE double, bit-identical to the JVM expression
+        qn = np.zeros(len(ids), dtype=np.float64)
+        for i in range(dim):
+            qn = qn + qmat[:, i] * qmat[:, i]
+        out.append((dim, qids, qmat, np.sqrt(qn)))
+    return out
 
 
 def _mask_null_elements(corpus: DataFrame, corpus_id: str, vec_col: str) -> DataFrame:
@@ -135,57 +142,55 @@ def _mask_null_elements(corpus: DataFrame, corpus_id: str, vec_col: str) -> Data
 
 def _arrow_pair_scores(
     corpus: DataFrame,
-    qids: list,
-    qmat: "np.ndarray",
-    qn: "np.ndarray",
+    queries: DataFrame,
     corpus_id: str,
     query_id: str,
-    query_id_type: T.DataType,
     vec_col: str,
     topk: int | None = None,
 ) -> DataFrame:
-    """All (query, corpus) cosines as ONE Arrow-batched corpus scan —
-    the guide §4 move replacing the crossJoin's per-pair JVM array
-    folds (zip_with + aggregate allocate a fresh array per pair) with
-    vectorized numpy over whole record batches.
+    """All (query, corpus) cosines as ONE Arrow-batched corpus scan:
+    vectorized numpy over whole record batches against the
+    driver-collected query groups of :func:`_collected_queries`.
 
-    Bit-exactness contract (what makes this a pure optimization): the
-    scorer replays the expression path's EXACT IEEE op sequence —
-    float→double widening per element, per-pair products left-folded
-    from 0.0 in element order (a dim-step vectorized loop, never a
-    BLAS matmul, whose blocked summation would round differently),
-    norms as the same fold under sqrt, and dot/(qn*cn) in that
-    association. NaN cosines (NaN inputs) cannot cross Arrow (pandas
-    NaN → null), so they travel as a ``__nan`` flag and are
-    reconstructed as literal NaN doubles JVM-side; NULL cosines
-    (null vector / dim mismatch) travel as genuine nulls. Zero-norm
-    CORPUS rows are outside the parity domain: the expression path's
-    double divide raises DIVIDE_BY_ZERO on them under ANSI mode (the
-    Spark 4 default), so no previously-computable query contains one;
-    here numpy's IEEE division scores them 0/0 = NaN. The parity test
-    pins both behaviours.
+    Semantics are the per-pair expression ``dot(q, c) / (|q| * |c|)``
+    over ``array`` columns, replayed bit-for-bit: float→double
+    widening per element, per-pair products left-folded from 0.0 in
+    element order (a dim-step vectorized loop, never a BLAS matmul,
+    whose blocked summation would round differently), norms as the
+    same fold under sqrt, and dot/(qn*cn) in that association. A
+    corpus row is scored against the groups whose dimension it
+    matches; every other pair — NULL vectors, null elements, a
+    dimension mismatch, the NULL query group — scores NULL. NaN
+    cosines cannot cross Arrow (pandas NaN → null), so they travel as
+    a ``__nan`` flag and are rebuilt as literal NaN doubles JVM-side.
+    Zero-norm vectors on either side score IEEE 0/0 = NaN (the
+    expression form's ANSI double divide raises DIVIDE_BY_ZERO there).
 
     ``topk``: per-batch partial top-k per query under the full
     (NaN first, cosine desc, corpus_id asc) order — only candidate
-    rows leave Python, the blocked-top-k shape of guide §3. Rows the
-    batch cannot rank exactly (NULL cosines, null corpus ids) are
-    passed through untruncated for the final window to place."""
+    rows leave Python, the blocked-top-k shape. Rows the batch cannot
+    rank exactly (NULL cosines, null corpus ids) are passed through
+    untruncated for the final window to place."""
     import pandas as pd
 
-    dim = qmat.shape[1]
-    nq = len(qids)
-    qid_arr = np.empty(nq, dtype=object)
-    qid_arr[:] = qids
-    cid_type = corpus.schema[corpus_id].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField(query_id, query_id_type),
-            T.StructField(corpus_id, cid_type),
-            T.StructField("cosine", T.DoubleType()),
-            T.StructField("__nan", T.BooleanType()),
-        ]
-    )
-    cols = [query_id, corpus_id, "cosine", "__nan"]
+    if corpus_id == query_id:
+        raise ValueError(
+            f"corpus_id and query_id must differ (both {corpus_id!r})"
+        )
+    groups = _collected_queries(queries, query_id, vec_col)
+    fields = [
+        T.StructField(query_id, queries.schema[query_id].dataType),
+        T.StructField(corpus_id, corpus.schema[corpus_id].dataType),
+        T.StructField("cosine", T.DoubleType()),
+    ]
+    if not groups:
+        return corpus.sparkSession.createDataFrame([], T.StructType(fields))
+    out_schema = T.StructType(fields + [T.StructField("__nan", T.BooleanType())])
+
+    def frame(qid, cid, cos, nan):
+        return pd.DataFrame(
+            {query_id: qid, corpus_id: cid, "cosine": cos, "__nan": nan}
+        )
 
     def scan(batches):
         for pdf in batches:
@@ -193,110 +198,72 @@ def _arrow_pair_scores(
             if not n:
                 continue
             vecs = pdf[vec_col]
-            cids = pdf[corpus_id]
+            cids = pdf[corpus_id].to_numpy()
             lens = np.fromiter(
                 ((-1 if v is None else len(v)) for v in vecs),
                 dtype=np.int64,
                 count=n,
             )
-            clean = lens == dim
             out_frames = []
-            n_clean = int(clean.sum())
-            if n_clean:
+            for dim, qids, qmat, qn in groups:
+                nq = len(qids)
+                clean = np.zeros(n, dtype=bool) if dim is None else lens == dim
                 pos = np.flatnonzero(clean)
-                mat = np.stack([np.asarray(vecs.iloc[i]) for i in pos]).astype(
-                    np.float64
-                )
-                # the same sequential fold as the JVM expression —
-                # see the bit-exactness contract above
-                acc = np.zeros((n_clean, nq), dtype=np.float64)
-                cn = np.zeros(n_clean, dtype=np.float64)
-                for i in range(dim):
-                    ci = mat[:, i]
-                    acc = acc + ci[:, None] * qmat[None, :, i]
-                    cn = cn + ci * ci
-                cn = np.sqrt(cn)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = acc / (cn[:, None] * qn[None, :])
-                nan = np.isnan(cos)
-                cid_clean = cids.iloc[pos]
-                if topk is None or n_clean <= topk:
-                    out_frames.append(
-                        pd.DataFrame(
-                            {
-                                query_id: np.tile(qid_arr, n_clean),
-                                corpus_id: cid_clean.iloc[
-                                    np.repeat(np.arange(n_clean), nq)
-                                ].reset_index(drop=True),
-                                "cosine": cos.ravel(),
-                                "__nan": nan.ravel(),
-                            }
-                        )
+                n_clean = len(pos)
+                if n_clean:
+                    mat = np.stack([np.asarray(vecs.iloc[i]) for i in pos]).astype(
+                        np.float64
                     )
-                elif cid_clean.isna().any():
+                    # the same sequential fold as the JVM expression —
+                    # see the bit-exactness contract above
+                    acc = np.zeros((n_clean, nq), dtype=np.float64)
+                    cn = np.zeros(n_clean, dtype=np.float64)
+                    for i in range(dim):
+                        ci = mat[:, i]
+                        acc = acc + ci[:, None] * qmat[None, :, i]
+                        cn = cn + ci * ci
+                    cn = np.sqrt(cn)
+                    with np.errstate(divide="ignore", invalid="ignore"):
+                        cos = acc / (cn[:, None] * qn[None, :])
+                    nan = np.isnan(cos)
+                    ids = cids[pos]
                     # null corpus ids tie-break by Spark null ordering,
-                    # which numpy cannot replay — ship the batch whole
+                    # which numpy cannot replay — ship such a batch whole
+                    if topk is None or n_clean <= topk or pd.isna(ids).any():
+                        rows = np.repeat(np.arange(n_clean), nq)
+                        qpos = np.tile(np.arange(nq), n_clean)
+                    else:
+                        sort_cos = np.where(nan, -np.inf, cos)
+                        rows = np.concatenate(
+                            [
+                                # keys read last-first: NaN rows first
+                                # (Spark: NaN > everything in desc), then
+                                # cosine desc, then corpus id asc
+                                np.lexsort((ids, -sort_cos[:, j], ~nan[:, j]))[:topk]
+                                for j in range(nq)
+                            ]
+                        )
+                        qpos = np.repeat(np.arange(nq), topk)
                     out_frames.append(
-                        pd.DataFrame(
-                            {
-                                query_id: np.tile(qid_arr, n_clean),
-                                corpus_id: cid_clean.iloc[
-                                    np.repeat(np.arange(n_clean), nq)
-                                ].reset_index(drop=True),
-                                "cosine": cos.ravel(),
-                                "__nan": nan.ravel(),
-                            }
+                        frame(qids[qpos], ids[rows], cos[rows, qpos], nan[rows, qpos])
+                    )
+                n_dirty = n - n_clean
+                if n_dirty:
+                    # NULL-cosine pairs: never truncated — the final
+                    # window places them
+                    out_frames.append(
+                        frame(
+                            np.tile(qids, n_dirty),
+                            cids[np.repeat(np.flatnonzero(~clean), nq)],
+                            np.full(n_dirty * nq, np.nan),
+                            np.zeros(n_dirty * nq, dtype=bool),
                         )
                     )
-                else:
-                    ids_np = cid_clean.to_numpy()
-                    take_rows: list[np.ndarray] = []
-                    take_q: list[int] = []
-                    sort_cos = np.where(nan, -np.inf, cos)
-                    for j in range(nq):
-                        order = np.lexsort(
-                            # keys read last-first: NaN rows first
-                            # (Spark: NaN > everything in desc), then
-                            # cosine desc, then corpus id asc
-                            (ids_np, -sort_cos[:, j], ~nan[:, j])
-                        )[:topk]
-                        take_rows.append(order)
-                        take_q.extend([j] * len(order))
-                    rows_idx = np.concatenate(take_rows)
-                    qpos = np.asarray(take_q, dtype=np.int64)
-                    out_frames.append(
-                        pd.DataFrame(
-                            {
-                                query_id: qid_arr[qpos],
-                                corpus_id: cid_clean.iloc[rows_idx].reset_index(
-                                    drop=True
-                                ),
-                                "cosine": cos[rows_idx, qpos],
-                                "__nan": nan[rows_idx, qpos],
-                            }
-                        )
-                    )
-            n_dirty = n - n_clean
-            if n_dirty:
-                # NULL-cosine pairs (null vector / dim mismatch):
-                # never truncated — the final window places them
-                dpos = np.flatnonzero(~clean)
-                out_frames.append(
-                    pd.DataFrame(
-                        {
-                            query_id: np.tile(qid_arr, n_dirty),
-                            corpus_id: cids.iloc[dpos]
-                            .iloc[np.repeat(np.arange(n_dirty), nq)]
-                            .reset_index(drop=True),
-                            "cosine": np.full(n_dirty * nq, np.nan),
-                            "__nan": np.zeros(n_dirty * nq, dtype=bool),
-                        }
-                    )
-                )
-            if out_frames:
-                yield pd.concat(out_frames, ignore_index=True)[cols]
+            yield pd.concat(out_frames, ignore_index=True)
 
-    raw = corpus.select(corpus_id, vec_col).mapInPandas(scan, out_schema)
+    raw = _mask_null_elements(corpus, corpus_id, vec_col).mapInPandas(
+        scan, out_schema
+    )
     return raw.select(
         F.col(query_id),
         F.col(corpus_id),
@@ -313,33 +280,16 @@ def cosine_scores(
     query_id: str = "query_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """All (query, corpus) cosine similarities.
+    """All (query, corpus) cosine similarities as ``(query_id,
+    corpus_id, cosine)``: ONE Arrow-batched corpus scan against the
+    driver-collected query matrix (see :func:`_arrow_pair_scores` for
+    the exact-IEEE contract and the NULL/NaN cases).
 
-    Fast path (r11): ONE Arrow-batched corpus scan scoring whole
-    record batches against the driver-collected query matrix — the
-    guide §4 replacement for the broadcast crossJoin whose per-pair
-    ``aggregate(zip_with(...))`` folds allocate a fresh array per
-    pair. Values are bit-identical to the expression form (see
-    :func:`_arrow_pair_scores` for the exact-IEEE argument); query
-    sides the fast path cannot cover verbatim (empty, NULL/ragged/
-    non-finite/zero-norm vectors) fall back to the original
-    expression plan, unchanged."""
-    if corpus_id == query_id:
-        return _cosine_scores_expr(corpus, queries, corpus_id, query_id, vec_col)
-    q = _collected_queries(queries, query_id, vec_col)
-    if q is None:
-        return _cosine_scores_expr(corpus, queries, corpus_id, query_id, vec_col)
-    qids, qmat, qn = q
-    return _arrow_pair_scores(
-        _mask_null_elements(corpus, corpus_id, vec_col),
-        qids,
-        qmat,
-        qn,
-        corpus_id,
-        query_id,
-        queries.schema[query_id].dataType,
-        vec_col,
-    )
+    Eager query side: the call itself runs one Spark job that collects
+    ``queries`` to the driver, so the returned frame holds a snapshot
+    of the query rows taken at call time, not a lazy plan over them.
+    ``corpus_id`` and ``query_id`` must differ (ValueError)."""
+    return _arrow_pair_scores(corpus, queries, corpus_id, query_id, vec_col)
 
 
 def cosine_topk(
@@ -353,35 +303,16 @@ def cosine_topk(
     """Exact top-k per query with deterministic tie-break (higher
     cosine first, then smaller corpus id).
 
-    r11: on the Arrow fast path the scorer emits only each batch's
-    top-k candidates per query (blocked top-k — a globally-top-k row
-    is top-k in its own batch, so truncation is lossless); the final
-    window ranks candidates instead of the full pair set."""
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("cosine").desc(), F.col(corpus_id).asc()
-    )
-    q = None
-    if corpus_id != query_id:
-        q = _collected_queries(queries, query_id, vec_col)
-    if q is None:
-        scores = _cosine_scores_expr(corpus, queries, corpus_id, query_id, vec_col)
-    else:
-        qids, qmat, qn = q
-        scores = _arrow_pair_scores(
-            _mask_null_elements(corpus, corpus_id, vec_col),
-            qids,
-            qmat,
-            qn,
-            corpus_id,
-            query_id,
-            queries.schema[query_id].dataType,
-            vec_col,
-            topk=k,
-        )
-    return (
-        scores.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id, corpus_id, "rank", F.round("cosine", 6).alias("cosine"))
+    The scorer emits only each batch's top-k candidates per query
+    (blocked top-k — a globally-top-k row is top-k in its own batch,
+    so truncation is lossless); the final window ranks candidates
+    instead of the full pair set. Like :func:`cosine_scores`, the call
+    collects ``queries`` to the driver eagerly (one Spark job)."""
+    return _topk_ranked(
+        _arrow_pair_scores(corpus, queries, corpus_id, query_id, vec_col, topk=k),
+        k,
+        query_id,
+        corpus_id,
     )
 
 
@@ -452,23 +383,6 @@ def _signature_udf(planes: np.ndarray):
     return F.pandas_udf(sig, T.LongType())
 
 
-def add_lsh_buckets(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    dim: int | None = None,
-    n_planes: int = 16,
-    seed: str = "ariadne-lsh",
-) -> DataFrame:
-    """Attach an LSH bucket id (n_planes sign bits) to each row."""
-    if dim is None:
-        first = df.select(F.size(F.col(vec_col))).first()
-        dim = first[0] if first else 0
-    planes = _planes(dim, n_planes, seed)
-    return _ensure_parallelism(df).withColumn(
-        "lsh_bucket", _signature_udf(planes)(F.col(vec_col))
-    )
-
-
 def lsh_ann_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -488,9 +402,7 @@ def lsh_ann_topk(
     1-bit multiprobe visits both buckets, so the candidate set
     provably equals the whole corpus and the result equals exact
     :func:`cosine_topk` — hash values never affect the answer."""
-    first = corpus.select(F.size(F.col(vec_col))).first()
-    dim = first[0] if first else 0
-    planes = _planes(dim, n_planes, "ariadne-lsh")
+    planes = _planes(_vec_dim(corpus, vec_col), n_planes, "ariadne-lsh")
     sig = _signature_udf(planes)
     c = _ensure_parallelism(corpus).withColumn("__bucket", sig(F.col(vec_col)))
     q = queries.withColumn("__bucket0", sig(F.col(vec_col)))
@@ -506,23 +418,7 @@ def lsh_ann_topk(
         F.col(vec_col).alias("__qv"),
         F.explode(probes).alias("__bucket"),
     )
-    sim = _dot(F.col("__qv"), F.col(vec_col)) / (
-        _norm(F.col("__qv")) * _norm(F.col(vec_col))
-    )
-    scored = (
-        c.join(F.broadcast(q), "__bucket")
-        .select(F.col(query_id), F.col(corpus_id), sim.alias("cosine"))
-        .groupBy(query_id, corpus_id)
-        .agg(F.max("cosine").alias("cosine"))
-    )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("cosine").desc(), F.col(corpus_id).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id, corpus_id, "rank", F.round("cosine", 6).alias("cosine"))
-    )
+    return _bucket_rerank(c, q, "__bucket", k, query_id, corpus_id, cv=vec_col)
 
 
 def _band_signature_udf(planes_stack: np.ndarray, bands: int, per_band: int):
@@ -576,8 +472,7 @@ def lsh_ann_topk_banded(
 
     One UDF scan per side computes all band signatures; candidates
     come from a (band, sig) equi-join; exact cosine re-ranks."""
-    first = corpus.select(F.size(F.col(vec_col))).first()
-    dim = first[0] if first else 0
+    dim = _vec_dim(corpus, vec_col)
     stack = np.vstack(
         [
             _planes(dim, planes_per_band, f"ariadne-lsh-band{b}")
@@ -605,23 +500,7 @@ def lsh_ann_topk_banded(
         q = q.select(
             query_id, "__qv", "__band", F.explode(flips).alias("__sig")
         )
-    sim = _dot(F.col("__qv"), F.col("__cv")) / (
-        _norm(F.col("__qv")) * _norm(F.col("__cv"))
-    )
-    scored = (
-        c.join(F.broadcast(q), ["__band", "__sig"])
-        .select(F.col(query_id), F.col(corpus_id), sim.alias("cosine"))
-        .groupBy(query_id, corpus_id)
-        .agg(F.max("cosine").alias("cosine"))
-    )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("cosine").desc(), F.col(corpus_id).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id, corpus_id, "rank", F.round("cosine", 6).alias("cosine"))
-    )
+    return _bucket_rerank(c, q, ["__band", "__sig"], k, query_id, corpus_id)
 
 
 # ------------------------------------------------------------------ IVF
@@ -737,23 +616,7 @@ def ivf_ann_topk(
         F.col(vec_col).alias("__qv"),
         F.explode(probe(F.col(vec_col))).alias("__cell"),
     )
-    sim = _dot(F.col("__qv"), F.col("__cv")) / (
-        _norm(F.col("__qv")) * _norm(F.col("__cv"))
-    )
-    scored = (
-        c.join(F.broadcast(q), "__cell")
-        .select(F.col(query_id), F.col(corpus_id), sim.alias("cosine"))
-        .groupBy(query_id, corpus_id)
-        .agg(F.max("cosine").alias("cosine"))
-    )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("cosine").desc(), F.col(corpus_id).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id, corpus_id, "rank", F.round("cosine", 6).alias("cosine"))
-    )
+    return _bucket_rerank(c, q, "__cell", k, query_id, corpus_id)
 
 
 def ivf_index_build(
@@ -848,24 +711,7 @@ def ivf_index_topk(
     c = data.select(
         F.col(corpus_id), F.col(vec_col).alias("__cv"), "ivf_cell"
     ).where(F.col("ivf_cell").isin(cells))
-    sim = _dot(F.col("__qv"), F.col("__cv")) / (
-        _norm(F.col("__qv")) * _norm(F.col("__cv"))
-    )
-    scored = (
-        c.join(F.broadcast(q), "ivf_cell")
-        .select(F.col(query_id), F.col(corpus_id), sim.alias("cosine"))
-        .groupBy(query_id, corpus_id)
-        .agg(F.max("cosine").alias("cosine"))
-    )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("cosine").desc(), F.col(corpus_id).asc()
-    )
-    out = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id, corpus_id, "rank", F.round("cosine", 6).alias("cosine"))
-    )
-    return out
+    return _bucket_rerank(c, q, "ivf_cell", k, query_id, corpus_id)
 
 
 def embedding_near_dup(
@@ -964,9 +810,7 @@ def embedding_near_dup(
         F.col(vec_col).alias("__vb"),
         F.col("__ch").alias("__cb"),
     )
-    sim = _dot(F.col("__va"), F.col("__vb")) / (
-        _norm(F.col("__va")) * _norm(F.col("__vb"))
-    )
+    sim = _pair_cosine(F.col("__va"), F.col("__vb"))
     out = (
         l.join(r, ["__band", "__sig", "__cb"])
         .where(F.col("__ida") != F.col("__idb"))
@@ -1061,10 +905,11 @@ def knn_classify(
     scale swap :func:`cosine_topk` for :func:`ivf_index_topk` and keep
     the voting tail unchanged.
 
-    Shape at scale: scoring is the broadcast crossJoin of the exact
-    top-k path (queries are the small side); voting is two
-    partial-aggregatable groupBys over ≤ queries·k rows — no window
-    over data, no skew exposure."""
+    Shape at scale: scoring is the exact top-k path's Arrow corpus
+    scan against the driver-collected queries (the small side; the
+    call collects them eagerly); voting is two partial-aggregatable
+    groupBys over ≤ queries·k rows — no window over data, no skew
+    exposure."""
     topk = cosine_topk(
         reference, queries, k=k,
         corpus_id=corpus_id, query_id=query_id, vec_col=vec_col,
@@ -1202,9 +1047,9 @@ def bitext_mine(
     done with it, or storage memory accumulates a cached copy per
     call.
 
-    Scale shape: the exact :func:`cosine_topk` candidate pass
-    broadcasts the query side — fine when one language side fits a
-    broadcast (the knn_classify contract); for two lake-scale sides,
+    Scale shape: the exact :func:`cosine_scores` pair pass collects
+    the source side to the driver — fine when one language side fits
+    there (the knn_classify contract); for two lake-scale sides,
     generate the same (query, candidate, rank, cosine) shape with the
     IVF/PQ path (:func:`ivf_index_topk` /
     :func:`~ariadne_spark.operators.quantization.ivf_pq_topk`) and
@@ -1227,20 +1072,8 @@ def bitext_mine(
     ).persist()
     scores.count()
 
-    def topk(part: str, other: str) -> DataFrame:
-        w = Window.partitionBy(part).orderBy(
-            F.col("cosine").desc(), F.col(other).asc()
-        )
-        return (
-            scores.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(
-                part, other, "rank", F.round("cosine", 6).alias("cosine")
-            )
-        )
-
-    fwd = topk(src_id, tgt_id)
-    bwd = topk(tgt_id, src_id)
+    fwd = _topk_ranked(scores, k, src_id, tgt_id)
+    bwd = _topk_ranked(scores, k, tgt_id, src_id)
     ax = _ranked_avg(fwd, src_id)
     ay = _ranked_avg(bwd, tgt_id)
     cand = (

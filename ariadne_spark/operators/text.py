@@ -40,14 +40,6 @@ def token_count(col: str | Column) -> Column:
     return F.size(tokens(col)).cast("bigint")
 
 
-def word_tokens(col: str | Column) -> Column:
-    """BPE-ish word pieces: runs of letters/digits or single
-    punctuation — a cheap proxy for subword token counting."""
-    c = F.col(col) if isinstance(col, str) else col
-    stripped = F.regexp_replace(c, r"[^\p{L}\p{N}]+", " ")
-    return F.split(F.trim(stripped), r"\s+")
-
-
 def char_ngrams(col: str | Column, n: int = 3) -> Column:
     """All character n-grams (with duplicates, in order); empty array
     for strings shorter than n (sequence() would run descending)."""

@@ -26,7 +26,7 @@ Scale-driven departures from the reference:
 from __future__ import annotations
 
 import logging
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -72,24 +72,22 @@ class Band:
     hi_inc: bool = True
 
 
-def tighten_band(b: dict, op: str, value) -> None:
-    """Fold one comparison conjunct into a mutable band dict, keeping
-    the TIGHTEST bound per side. ``op`` is the Catalyst/datasource
-    class name: GreaterThan[OrEqual] / LessThan[OrEqual]. Shared by
-    the SQL rewriter and the native data source so their band
-    semantics can never diverge."""
+def tighten_band(b: Band | None, op: str, value) -> Band:
+    """Fold one comparison conjunct into band ``b`` (None: unbounded),
+    keeping the TIGHTEST bound per side. ``op`` is the
+    Catalyst/datasource class name: GreaterThan[OrEqual] /
+    LessThan[OrEqual]. Shared by the SQL rewriter and the native data
+    source so their band semantics can never diverge."""
+    b = b or Band()
     if op in ("GreaterThan", "GreaterThanOrEqual"):
         inc = op == "GreaterThanOrEqual"
-        if b.get("lo") is None or value > b["lo"] or (
-            value == b["lo"] and not inc
-        ):
-            b["lo"], b["lo_inc"] = value, inc
+        if b.lo is None or value > b.lo or (value == b.lo and not inc):
+            return replace(b, lo=value, lo_inc=inc)
     else:
         inc = op == "LessThanOrEqual"
-        if b.get("hi") is None or value < b["hi"] or (
-            value == b["hi"] and not inc
-        ):
-            b["hi"], b["hi_inc"] = value, inc
+        if b.hi is None or value < b.hi or (value == b.hi and not inc):
+            return replace(b, hi=value, hi_inc=inc)
+    return b
 
 
 @dataclass

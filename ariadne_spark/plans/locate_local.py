@@ -21,10 +21,8 @@ verdict bits plus the winning segment number — not the arrays.
 
 from __future__ import annotations
 
-import json
-import os
-
 from ..functions import bloom as bloomfn
+from ..storage.fs import get_fs, join
 from ..storage.metadata import (
     BLOOM,
     COMPUTED,
@@ -34,30 +32,25 @@ from ..storage.metadata import (
     TEMPORAL,
     IndexMetadata,
 )
+from ..storage.table import read_manifest
+from .locate import Band
 
-_MANIFEST_DIR = "_manifest"
 
-
-def _read_manifest(table_path: str) -> list[dict] | None:
-    d = os.path.join(table_path, _MANIFEST_DIR)
-    if not os.path.isdir(d):
+def _segments(table_path: str) -> list[tuple[int, list[str]]] | None:
+    """(seq, parquet files) per live segment in commit order, or None
+    for a table never written. A missing segment directory raises:
+    skipping it could drop a file that matches."""
+    fs = get_fs(None, table_path)
+    m = read_manifest(fs, table_path)
+    if m is None:
         return None
-    versions = [
-        int(f[1:-5]) for f in os.listdir(d) if f.startswith("v") and f.endswith(".json")
-    ]
-    if not versions:
-        return None
-    with open(os.path.join(d, f"v{max(versions):020d}.json")) as fh:
-        return json.load(fh)["segments"]
-
-
-def _segment_files(table_path: str, seg: dict) -> list[str]:
-    d = os.path.join(table_path, seg["dir"])
-    return [
-        os.path.join(d, f)
-        for f in sorted(os.listdir(d))
-        if f.endswith(".parquet")
-    ]
+    out = []
+    for seg in sorted(m["segments"], key=lambda s: s["seq"]):
+        d = join(table_path, seg["dir"])
+        if not fs.is_dir(d):
+            raise FileNotFoundError(f"segment directory {d} is missing")
+        out.append((seg["seq"], fs.list_files(d, ".parquet")))
+    return out
 
 
 def list_filenames(filelist_path: str) -> list[str]:
@@ -65,10 +58,9 @@ def list_filenames(filelist_path: str) -> list[str]:
     filenames are the key, duplicates collapse via the set)."""
     import pyarrow.parquet as pq
 
-    segs = _read_manifest(filelist_path) or []
     names: set[str] = set()
-    for seg in segs:
-        for f in _segment_files(filelist_path, seg):
+    for _, files in _segments(filelist_path) or []:
+        for f in files:
             names.update(pq.read_table(f, columns=["filename"])["filename"].to_pylist())
     return sorted(names)
 
@@ -77,18 +69,18 @@ def locate_files_local(
     index_table_path: str,
     meta: IndexMetadata,
     query: dict[str, list],
-    bands: dict[str, dict] | None = None,
+    bands: dict[str, Band] | None = None,
 ) -> list[str]:
     """Candidate filenames for {column: [literal values]} without a
     SparkSession. Conservative by construction.
 
-    ``bands``: optional {column: {lo, lo_inc, hi, hi_inc}} interval
-    constraints (from pushed >, >=, <, <= filters) evaluated against
-    RANGE index [min,max] by interval overlap; non-range columns
-    ignore their band (conservative)."""
+    ``bands``: optional {column: Band} interval constraints (from
+    pushed >, >=, <, <= filters) evaluated against RANGE index
+    [min,max] by interval overlap; non-range columns ignore their band
+    (conservative)."""
     import pyarrow.parquet as pq
 
-    segs = _read_manifest(index_table_path)
+    segs = _segments(index_table_path)
     if segs is None:
         return []
     bands = bands or {}
@@ -114,8 +106,8 @@ def locate_files_local(
 
     # last-writer-wins per filename across segments
     state: dict[str, tuple[int, bool]] = {}  # filename -> (seq, verdict)
-    for seg in sorted(segs, key=lambda s: s["seq"]):
-        for fpath in _segment_files(index_table_path, seg):
+    for seq, files in segs:
+        for fpath in files:
             schema_names = set(pq.read_schema(fpath).names)
             use_cols = [c for c in cols_needed if c in schema_names]
             pf = pq.ParquetFile(fpath)
@@ -137,15 +129,15 @@ def locate_files_local(
                             if not _match_band(cfg, b, tbl, i):
                                 ok = False
                                 break
-                    state[fname] = (seg["seq"], ok)
+                    state[fname] = (seq, ok)
     return sorted(f for f, (_, ok) in state.items() if ok)
 
 
-def _match_band(cfg, band, tbl, i) -> bool:
+def _match_band(cfg, band: Band, tbl, i) -> bool:
     """Interval-overlap test of a pushed band against a RANGE
     [min,max] struct: file may match unless its whole range lies
     outside the band."""
-    lo, hi = band.get("lo"), band.get("hi")
+    lo, hi = band.lo, band.hi
     if lo is None and hi is None:
         return True  # boundless band applies no row predicate
     sc = cfg.stored_column
@@ -153,10 +145,10 @@ def _match_band(cfg, band, tbl, i) -> bool:
     if rng is None or rng.get("min") is None:
         return False  # all-null column can't satisfy a comparison
     if lo is not None:
-        if rng["max"] < lo or (rng["max"] == lo and not band.get("lo_inc", True)):
+        if rng["max"] < lo or (rng["max"] == lo and not band.lo_inc):
             return False
     if hi is not None:
-        if rng["min"] > hi or (rng["min"] == hi and not band.get("hi_inc", True)):
+        if rng["min"] > hi or (rng["min"] == hi and not band.hi_inc):
             return False
     return True
 

@@ -37,32 +37,20 @@ Scope (documented divergences from the view/API surfaces):
 
 from __future__ import annotations
 
-try:  # Spark >= 4.0 only — the module does not exist on 3.5
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceReader,
-        EqualTo,
-        In,
-        InputPartition,
-    )
-
-    HAS_PYTHON_DATASOURCE = True
-except ImportError:  # pragma: no cover - exercised via mocked import
-    HAS_PYTHON_DATASOURCE = False
-
-    class DataSource:  # type: ignore[no-redef]  # placeholder bases so
-        pass  # the class definitions below still parse on Spark 3.5
-
-    class DataSourceReader:  # type: ignore[no-redef]
-        pass
-
-    class InputPartition:  # type: ignore[no-redef]
-        pass
-
-    EqualTo = In = ()  # isinstance(x, ()) is always False
-
+from pyspark.sql.datasource import (
+    DataSource,
+    DataSourceReader,
+    EqualTo,
+    GreaterThan,
+    GreaterThanOrEqual,
+    In,
+    InputPartition,
+    LessThan,
+    LessThanOrEqual,
+)
 from pyspark.sql.types import StructType
 
+from ..plans.locate import Band, tighten_band
 from ..plans.locate_local import list_filenames, locate_files_local
 from ..storage.metadata import TEMPORAL, IndexMetadata, load_metadata
 from ..storage.paths import IndexPaths
@@ -125,20 +113,13 @@ class AriadneReader(DataSourceReader):
         self._filelist_path = paths.filelist
         self._meta = meta
         self._pushed: dict[str, list] = {}
-        self._bands: dict[str, dict] = {}
+        self._bands: dict[str, Band] = {}
 
     def pushFilters(self, filters):
         """Collect EqualTo/In (value pruning) plus >, >=, <, <= against
         RANGE-indexed columns (interval pruning) on indexed top-level
         columns; report EVERY filter back as unhandled so Spark
         re-applies them row-level (reference P8 semantics)."""
-        from pyspark.sql.datasource import (
-            GreaterThan,
-            GreaterThanOrEqual,
-            LessThan,
-            LessThanOrEqual,
-        )
-
         indexed = {c.column for c in self._meta.indexes}
         range_cols = {
             c.column for c in self._meta.indexes if c.type == "range"
@@ -157,13 +138,9 @@ class AriadneReader(DataSourceReader):
                 and len(f.attribute) == 1
                 and f.attribute[0] in range_cols
             ):
-                from ..plans.locate import tighten_band
-
                 col = f.attribute[0]
-                tighten_band(
-                    self._bands.setdefault(col, {}),
-                    type(f).__name__,
-                    f.value,
+                self._bands[col] = tighten_band(
+                    self._bands.get(col), type(f).__name__, f.value
                 )
             yield f  # all filters remain Spark's responsibility
 
@@ -260,15 +237,6 @@ class AriadneReader(DataSourceReader):
 
 
 def register(spark) -> None:
-    if not HAS_PYTHON_DATASOURCE:
-        raise RuntimeError(
-            "the ariadne Python Data Source needs the Spark 4 "
-            "pyspark.sql.datasource API, which this Spark "
-            "installation does not provide — on Spark 3.5 use the SQL "
-            "view surface (ariadne_spark.register_views + "
-            "ariadne_spark.sql) or Index.read_matching instead; both "
-            "give the same pruned reads"
-        )
     from .. import context
 
     context.ship_package(spark)

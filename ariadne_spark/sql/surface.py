@@ -51,22 +51,11 @@ log = logging.getLogger("ariadne")
 
 def _dataset_of_rows(spark: SparkSession, logical_plan) -> DataFrame:
     """DataFrame from a Catalyst logical plan via the JVM-internal
-    ``Dataset.ofRows`` — version-shimmed because the class moved to
-    ``sql.classic`` in Spark 4 (the reference pins the same hazard
-    behind per-major helper sources, AriadneInternalHelper)."""
-    jvm = spark._jvm
-    for ds in (
-        lambda: jvm.org.apache.spark.sql.classic.Dataset,  # Spark >= 4
-        lambda: jvm.org.apache.spark.sql.Dataset,  # Spark 3.x
-    ):
-        try:
-            jdf = ds().ofRows(spark._jsparkSession, logical_plan)
-        except Exception:
-            continue
-        return DataFrame(jdf, spark)
-    raise RuntimeError(
-        "no usable Dataset.ofRows entry point in this Spark version"
+    ``Dataset.ofRows`` (``sql.classic`` since Spark 4)."""
+    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        spark._jsparkSession, logical_plan
     )
+    return DataFrame(jdf, spark)
 
 
 def _cls(node) -> str:
@@ -149,9 +138,9 @@ def _band_filters(cond, range_cols: set[str]) -> dict:
     """{col: Band} from >, >=, <, <= conjuncts on RANGE-indexed
     columns (tightest conjunction per column). Literal-on-left forms
     are mirrored."""
-    from ..plans.locate import Band, tighten_band
+    from ..plans.locate import tighten_band
 
-    acc: dict[str, dict] = {}
+    acc: dict = {}
     mirror = {
         "GreaterThan": "LessThan",
         "GreaterThanOrEqual": "LessThanOrEqual",
@@ -173,8 +162,8 @@ def _band_filters(cond, range_cols: set[str]) -> dict:
             name = _attr_name(args[0])
             lo, hi = _literal_value(args[1]), _literal_value(args[2])
             if name in range_cols and lo is not None and hi is not None:
-                tighten_band(acc.setdefault(name, {}), "GreaterThanOrEqual", lo)
-                tighten_band(acc.setdefault(name, {}), "LessThanOrEqual", hi)
+                band = tighten_band(acc.get(name), "GreaterThanOrEqual", lo)
+                acc[name] = tighten_band(band, "LessThanOrEqual", hi)
             continue
         if k not in mirror:
             continue
@@ -183,14 +172,8 @@ def _band_filters(cond, range_cols: set[str]) -> dict:
             name, v, op = _attr_name(c.right()), _literal_value(c.left()), mirror[k]
         if name not in range_cols or v is None:
             continue
-        tighten_band(acc.setdefault(name, {}), op, v)
-    return {
-        col: Band(
-            lo=b.get("lo"), hi=b.get("hi"),
-            lo_inc=b.get("lo_inc", True), hi_inc=b.get("hi_inc", True),
-        )
-        for col, b in acc.items()
-    }
+        acc[name] = tighten_band(acc.get(name), op, v)
+    return acc
 
 
 def _alias_map(jplan, index_names: set[str], walk=_walk) -> dict[str, str]:

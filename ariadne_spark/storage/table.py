@@ -66,6 +66,34 @@ _MANIFEST_DIR = "_manifest"
 _SEQ_COL = "_ariadne_seq"
 
 
+def manifest_versions(fs, path: str) -> list[int]:
+    """Committed manifest versions of the table at ``path``, ascending."""
+    return sorted(
+        int(f[1:-5])
+        for f in fs.list_names(_join(path, _MANIFEST_DIR))
+        if f.startswith("v") and f.endswith(".json")
+    )
+
+
+def read_manifest(fs, path: str, version: int | None = None) -> dict | None:
+    """The manifest of the table at ``path`` — ``version`` or, by
+    default, the latest — with its version stamped in; None for a
+    table never written. Spark-free: ``fs`` is any storage backend,
+    and the local one (``get_fs(None, path)``) needs no session, so
+    the Data Source planner reads index state through this too."""
+    if version is None:
+        versions = manifest_versions(fs, path)
+        if not versions:
+            return None
+        version = versions[-1]
+    raw = fs.read_text(_join(path, _MANIFEST_DIR, f"v{version:020d}.json"))
+    if raw is None:
+        return None
+    m = json.loads(raw)
+    m["version"] = version
+    return m
+
+
 class ParquetTable:
     """A versioned parquet table with replace-per-key append semantics.
 
@@ -101,11 +129,7 @@ class ParquetTable:
         return _join(self.path, _MANIFEST_DIR)
 
     def _versions(self) -> list[int]:
-        return sorted(
-            int(f[1:-5])
-            for f in self.fs.list_names(self._manifest_dir())
-            if f.startswith("v") and f.endswith(".json")
-        )
+        return manifest_versions(self.fs, self.path)
 
     def _latest_version(self) -> int | None:
         versions = self._versions()
@@ -113,14 +137,7 @@ class ParquetTable:
 
     def _read_manifest(self, version: int | None = None) -> dict | None:
         v = self._latest_version() if version is None else version
-        if v is None:
-            return None
-        raw = self.fs.read_text(_join(self._manifest_dir(), f"v{v:020d}.json"))
-        if raw is None:
-            return None
-        m = json.loads(raw)
-        m["version"] = v
-        return m
+        return None if v is None else read_manifest(self.fs, self.path, v)
 
     def versions(self) -> list[int]:
         """All committed manifest versions, ascending (time travel:

@@ -30,15 +30,7 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-try:  # Spark >= 3.4; gate so one missing API can't take down the
-    # foreachBatch-based sinks in this module (Spark 3.5 degradation)
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    HAS_PANDAS_STATE = True
-except ImportError:  # pragma: no cover - exercised via mocked import
-    HAS_PANDAS_STATE = False
-    GroupState = GroupStateTimeout = None
+from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 log = logging.getLogger("ariadne")
 
@@ -107,16 +99,6 @@ def streaming_latest_version(
     the current winner row (greatest ``ts_col``; first-seen wins
     ties) for each updated key. State per key is one row — bounded by
     key cardinality, not stream length. Output mode: update."""
-    if not HAS_PANDAS_STATE or not hasattr(
-        stream_df.groupBy(F.col(key_col)), "applyInPandasWithState"
-    ):
-        raise RuntimeError(
-            "streaming_latest_version needs applyInPandasWithState "
-            "(Spark >= 3.4) — on older installations run the same "
-            "latest-version maintenance through the foreachBatch sink "
-            "(attach_index_maintenance + a temporal index), which "
-            "keeps identical semantics with state on disk"
-        )
     fields = stream_df.schema.fields
     out_schema = T.StructType(fields)
     state_schema = T.StructType(fields)

@@ -168,6 +168,48 @@ BENCH_QUERIES = [
 ]
 
 
+def spark_session(
+    cpus,
+    driver_memory: str = "16g",
+    app_name: str = "ariadne-bench",
+    shuffle_partitions: int | None = None,
+    conf: dict | None = None,
+):
+    """The one local SparkSession the bench and the profiler/soak tools
+    run on: ``local[cpus]``, shuffle partitions ``max(cpus, 8)`` unless
+    given, UI off, AQE on, UTC session time zone (the fixtures' NTZ
+    timestamps and the oracle compares rely on it), ``conf`` extras,
+    log level ERROR."""
+    from pyspark.sql import SparkSession
+
+    builder = (
+        SparkSession.builder.master(f"local[{cpus}]")
+        .config(
+            "spark.sql.shuffle.partitions",
+            str(shuffle_partitions or max(int(cpus), 8)),
+        )
+        .config("spark.ui.enabled", "false")
+        .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.driver.memory", driver_memory)
+        .appName(app_name)
+    )
+    for key, value in (conf or {}).items():
+        builder = builder.config(key, value)
+    spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def warm_up(spark, qs: dict, names, sf_dir: str) -> None:
+    """Run each named query once (``.count()``): a first execution pays
+    JVM codegen compilation and Python-worker spin-up (~1-6 s per
+    distinct plan shape) that a long-lived cluster session never sees
+    again, plus any one-time fixture build."""
+    for name in names:
+        qs[name](spark, sf_dir).count()
+
+
 def _host_canary() -> float:
     """Fixed single-thread pure-Python work unit (~2 s on this class
     of host): a host-speed reference independent of Spark, the JVM,
@@ -190,19 +232,7 @@ def main() -> None:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "16g")
-        .appName("ariadne-bench")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = spark_session(cpus)
 
     import __spark_entry__ as entry
 
@@ -211,14 +241,11 @@ def main() -> None:
     build_sec = round(time.time() - t0, 3)
 
     qs = entry.queries()
-    # Warmup pass: first execution pays JVM codegen compilation and
-    # Python-worker spin-up (~1-6 s per distinct plan shape) that a
-    # long-lived cluster session never sees again; the metric reports
-    # the steady-state query path. Disable with SPARK_GRAFT_WARMUP=0.
+    # Warmup pass (see warm_up): the metric reports the steady-state
+    # query path. Disable with SPARK_GRAFT_WARMUP=0.
     t0 = time.time()
     if os.environ.get("SPARK_GRAFT_WARMUP", "1") != "0":
-        for name in BENCH_QUERIES:
-            qs[name](spark, sf_dir).count()
+        warm_up(spark, qs, BENCH_QUERIES, sf_dir)
     warmup_sec = round(time.time() - t0, 3)
 
     # One discarded burn-in pass, then three timed FULL passes over

@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from ariadne_spark import Index
+from ariadne_spark import Band, Index
 from ariadne_spark.plans.locate_local import list_filenames, locate_files_local
 from ariadne_spark.sources.datasource import register
 
@@ -92,14 +92,13 @@ def test_datasource_range_band_pushdown_prunes_and_matches(spark, ds_index):
         want.select("o_orderkey", "o_custkey"),
     )
     # planner-level: the band selects a strict subset of files
-    bands = {"o_orderkey": {"lo": band_lo, "lo_inc": True,
-                            "hi": band_hi, "hi_inc": False}}
+    bands = {"o_orderkey": Band(lo=band_lo, hi=band_hi, hi_inc=False)}
     sel = locate_files_local(idx.paths.index, idx.meta, {}, bands=bands)
     assert 0 < len(sel) < len(files)
     # an impossible band prunes everything
     none = locate_files_local(
         idx.paths.index, idx.meta, {},
-        bands={"o_orderkey": {"lo": hi + 10, "lo_inc": True}},
+        bands={"o_orderkey": Band(lo=hi + 10)},
     )
     assert none == []
 
@@ -134,57 +133,3 @@ def test_datasource_reads_orc(spark, storage, tmp_path):
     got = _load(spark, storage, "orc_ds").where(F.col("g").isin([1, 3]))
     exp = df.where(F.col("g").isin([1, 3]))
     assert_same_rows(got, exp)
-
-
-def test_spark35_degradation_gates(monkeypatch):
-    """On a Spark without pyspark.sql.datasource (3.5), the package
-    still imports and register() fails with a clear pointer to the
-    view surface instead of an ImportError at import time; the
-    streaming state-API gate behaves the same (r05 verdict #7)."""
-    import builtins
-    import importlib
-    import sys
-
-    real_import = builtins.__import__
-
-    def no_ds_import(name, *a, **kw):
-        if name == "pyspark.sql.datasource" or (
-            name == "pyspark.sql" and a and a[2] and "datasource" in (a[2] or ())
-        ):
-            raise ImportError("No module named 'pyspark.sql.datasource'")
-        if name == "pyspark.sql.streaming.state":
-            raise ImportError("No module named 'pyspark.sql.streaming.state'")
-        return real_import(name, *a, **kw)
-
-    import ariadne_spark.sources.datasource as ds
-    import ariadne_spark.streaming.maintenance as sm
-
-    monkeypatch.setattr(builtins, "__import__", no_ds_import)
-    sys.modules.pop("pyspark.sql.datasource", None)
-    sys.modules.pop("pyspark.sql.streaming.state", None)
-    try:
-        importlib.reload(ds)
-        importlib.reload(sm)
-        assert ds.HAS_PYTHON_DATASOURCE is False
-        assert sm.HAS_PANDAS_STATE is False
-        with pytest.raises(RuntimeError, match="register_views"):
-            ds.register(spark=None)
-        with pytest.raises(RuntimeError, match="foreachBatch"):
-            import pyspark.sql.types as T
-
-            class _G:  # stand-in GroupedData without the state API
-                pass
-
-            class _DF:
-                schema = T.StructType([])
-
-                def groupBy(self, *a):
-                    return _G()
-
-            sm.streaming_latest_version(_DF(), "k", "ts")
-    finally:
-        monkeypatch.setattr(builtins, "__import__", real_import)
-        importlib.reload(ds)
-        importlib.reload(sm)
-    assert ds.HAS_PYTHON_DATASOURCE is True
-    assert sm.HAS_PANDAS_STATE is True

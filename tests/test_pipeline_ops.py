@@ -1845,33 +1845,65 @@ def test_diversity_sample_rejects_unknown_centroids_mode(spark, emb):
         diversity_sample(emb, n_per_cell=2, n_cells=4, centroids="kmean")
 
 
-def test_cosine_scores_arrow_matches_expression_exactly(spark, emb):
-    """r11: cosine_scores/cosine_topk route clean query sides through
-    an Arrow-batched scorer (one mapInPandas scan replacing the
-    broadcast-crossJoin per-pair JVM folds). The contract is
-    BIT-identical floats — pin repr-level equality against the
-    retained expression path on fixture data plus every corpus edge
-    class the fast path must reproduce (null vector, ragged dim,
-    null element, duplicate vector ties)."""
-    from ariadne_spark.operators.similarity import (
-        _cosine_scores_expr,
-        cosine_scores,
-        cosine_topk,
+def _cosine_scores_expr(corpus, queries, corpus_id="vec_id",
+                       query_id="query_id", vec_col="embedding"):
+    """Parity oracle for the Arrow scorer: the per-pair JVM expression
+    form (broadcast crossJoin, per-pair array fold). Norms are folded
+    per ROW before the join, exactly as the scorer folds them."""
+    from ariadne_spark.operators.similarity import _dot, _norm
+
+    q = queries.select(
+        F.col(query_id),
+        F.col(vec_col).alias("__qv"),
+        _norm(F.col(vec_col)).alias("__qn"),
+    )
+    c = corpus.select(
+        F.col(corpus_id),
+        F.col(vec_col).alias("__cv"),
+        _norm(F.col(vec_col)).alias("__cn"),
+    )
+    sim = _dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn"))
+    return c.crossJoin(F.broadcast(q)).select(
+        F.col(query_id), F.col(corpus_id), sim.alias("cosine")
     )
 
-    queries = emb.where(F.col("vec_id") % 40 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
+
+def test_cosine_scores_arrow_matches_expression_exactly(spark, emb):
+    """cosine_scores/cosine_topk score every query side through one
+    Arrow-batched scorer (one mapInPandas scan, queries grouped by
+    dimension plus a NULL group). The contract is BIT-identical floats
+    — pin repr-level equality against the expression oracle on fixture
+    data plus every corpus edge class (null vector, ragged dim, null
+    element, NaN element) and every query edge class (NULL vector,
+    null element, mixed dimensions, empty vector, NaN and inf
+    elements, an empty query set)."""
+    from pyspark.sql import Window
+
+    from ariadne_spark.operators.similarity import cosine_scores, cosine_topk
+
     dim = len(emb.select("embedding").first()[0])
+    vtype = "query_id long, embedding array<double>"
+    queries = emb.where(F.col("vec_id") % 40 == 0).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").cast("array<double>"),
+    ).unionByName(spark.createDataFrame(
+        [
+            (-1, None),                          # NULL vector -> NULL
+            (-2, [0.5] + [None] * (dim - 1)),    # null element -> NULL
+            (-3, [0.25] * (dim - 1)),            # second dimension
+            (-4, []),                            # empty vector -> NULL
+            (-5, [float("nan")] + [1.0] * (dim - 1)),  # NaN cosines
+            (-6, [float("inf")] + [0.5] * (dim - 1)),  # inf element
+        ],
+        vtype,
+    ))
     edge = spark.createDataFrame(
         [
             (900001, None),                     # null vector -> NULL cosine
-            (900002, [1.0] * (dim - 1)),        # ragged dim  -> NULL cosine
+            (900002, [1.0] * (dim - 1)),        # ragged dim: scores the
+            (900006, [2.0, -1.0] + [0.5] * (dim - 3)),  # dim-1 query only
             (900003, [1.0] + [None] * (dim - 1)),  # null element -> NULL
-            # NaN element -> NaN cosine via BOTH paths (the __nan
-            # Arrow flag). Zero-norm corpus rows are checked apart,
-            # below: the expression reference raises on them.
-            (900004, [float("nan")] + [1.0] * (dim - 1)),
+            (900004, [float("nan")] + [1.0] * (dim - 1)),  # NaN cosine
         ],
         "vec_id long, embedding array<double>",
     )
@@ -1883,31 +1915,61 @@ def test_cosine_scores_arrow_matches_expression_exactly(spark, emb):
             for r in df.collect()
         )
 
+    def oracle_topk(qs, k):
+        w = Window.partitionBy("query_id").orderBy(
+            F.col("cosine").desc(), F.col("vec_id").asc()
+        )
+        return (
+            _cosine_scores_expr(corpus, qs)
+            .withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") <= k)
+            .select("query_id", "vec_id", F.round("cosine", 6).alias("cosine"))
+        )
+
     got = canon(cosine_scores(corpus, queries))
-    want = canon(_cosine_scores_expr(corpus, queries))
-    assert got == want
+    assert got == canon(_cosine_scores_expr(corpus, queries))
+    assert {c for q, _, c in got if q in (-1, -2, -4)} == {"None"}
+    assert any(q == -3 and c != "None" for q, _, c in got)
 
     topk_got = canon(cosine_topk(corpus, queries, k=7).select(
         "query_id", "vec_id", "cosine"))
-    w = __import__("pyspark.sql", fromlist=["Window"]).Window.partitionBy(
-        "query_id"
-    ).orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    topk_want = canon(
-        _cosine_scores_expr(corpus, queries)
-        .withColumn("rank", F.row_number().over(w))
-        .where("rank <= 7")
-        .select("query_id", "vec_id", F.round("cosine", 6).alias("cosine"))
-    )
-    assert topk_got == topk_want
+    assert topk_got == canon(oracle_topk(queries, 7))
 
-    # zero-norm corpus row: the Arrow scorer divides in IEEE doubles
-    # (0/0 = NaN); the expression reference's ANSI double divide
-    # raises DIVIDE_BY_ZERO, so no earlier query could score one
+    none = queries.where(F.lit(False))
+    empty = cosine_scores(corpus, none)
+    assert empty.columns == ["query_id", "vec_id", "cosine"]
+    assert canon(empty) == canon(_cosine_scores_expr(corpus, none)) == []
+    assert canon(cosine_topk(corpus, none, k=3).select(
+        "query_id", "vec_id", "cosine")) == canon(oracle_topk(none, 3)) == []
+
+
+def test_cosine_scores_zero_norm_and_id_clash(spark, emb):
+    """Outside the oracle's domain: a zero-norm vector on either side
+    scores IEEE 0/0 = NaN, where the expression form's ANSI double
+    divide raises DIVIDE_BY_ZERO; and corpus_id == query_id, which
+    the expression form cannot resolve, is refused up front."""
+    from ariadne_spark.operators.similarity import cosine_scores, cosine_topk
+
+    dim = len(emb.select("embedding").first()[0])
+    queries = emb.where(F.col("vec_id") % 40 == 0).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
     zero = spark.createDataFrame(
         [(900005, [0.0] * dim)], "vec_id long, embedding array<double>"
     )
-    got_zero = canon(cosine_scores(zero, queries))
-    assert len(got_zero) == queries.count()
-    assert {c for _, _, c in got_zero} == {"nan"}
+    got = [repr(r["cosine"]) for r in cosine_scores(zero, queries).collect()]
+    assert len(got) == queries.count() and set(got) == {"nan"}
     with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
         _cosine_scores_expr(zero, queries).collect()
+
+    zq = spark.createDataFrame([(7, [0.0] * dim)], "query_id long, embedding array<double>")
+    got = [repr(r["cosine"]) for r in cosine_scores(emb, zq).collect()]
+    assert len(got) == emb.count() and set(got) == {"nan"}
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        _cosine_scores_expr(emb, zq).collect()
+
+    same = queries.withColumnRenamed("query_id", "vec_id")
+    with pytest.raises(ValueError, match="must differ"):
+        cosine_scores(emb, same, query_id="vec_id")
+    with pytest.raises(ValueError, match="must differ"):
+        cosine_topk(emb, same, query_id="vec_id")

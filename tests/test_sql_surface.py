@@ -144,9 +144,10 @@ def test_sql_cte_and_aggregation(spark, orders_view):
     assert {(x["o_orderstatus"], x["n"]) for x in r2.collect()} == exp
 
 
-def test_dataset_of_rows_version_shim(monkeypatch):
-    """The classic-Dataset miss (Spark 3.x) falls through to
-    sql.Dataset; total miss raises."""
+def test_dataset_of_rows_calls_classic_dataset(monkeypatch):
+    """Plans become DataFrames through Spark 4's classic
+    ``Dataset.ofRows``; its errors (an analysis failure in a probe
+    trial) reach the caller unchanged."""
     from ariadne_spark.sql import surface
 
     class _Ds:
@@ -155,36 +156,24 @@ def test_dataset_of_rows_version_shim(monkeypatch):
 
         def ofRows(self, jss, plan):
             if not self.ok:
-                raise TypeError("JavaPackage is not callable")
+                raise TypeError("unresolved plan")
             return ("jdf", plan)
 
     class _Ns:
         def __init__(self, **kw):
             self.__dict__.update(kw)
 
-    def fake_spark(classic_ok, plain_ok):
-        jvm = _Ns(
-            org=_Ns(
-                apache=_Ns(
-                    spark=_Ns(
-                        sql=_Ns(
-                            classic=_Ns(Dataset=_Ds(classic_ok)),
-                            Dataset=_Ds(plain_ok),
-                        )
-                    )
-                )
-            )
-        )
+    def fake_spark(ok):
+        jvm = _Ns(org=_Ns(apache=_Ns(spark=_Ns(sql=_Ns(
+            classic=_Ns(Dataset=_Ds(ok)),
+        )))))
         return _Ns(_jvm=jvm, _jsparkSession=object())
 
     monkeypatch.setattr(surface, "DataFrame", lambda jdf, s: ("df", jdf))
 
-    assert surface._dataset_of_rows(fake_spark(True, False), "p")[1][1] == "p"
-    assert surface._dataset_of_rows(fake_spark(False, True), "p")[1][1] == "p"
-    import pytest as _pytest
-
-    with _pytest.raises(RuntimeError):
-        surface._dataset_of_rows(fake_spark(False, False), "p")
+    assert surface._dataset_of_rows(fake_spark(True), "p")[1][1] == "p"
+    with pytest.raises(TypeError, match="unresolved plan"):
+        surface._dataset_of_rows(fake_spark(False), "p")
 
 
 def test_sql_interception_prunes_and_restores(spark, orders_view):

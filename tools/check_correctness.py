@@ -60,19 +60,10 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    from pyspark.sql import SparkSession
+    sys.path.insert(0, ".")
+    import bench
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "6g")
-        .appName("ariadne-correctness")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench.spark_session(8, driver_memory="6g", app_name="ariadne-correctness")
 
     con = duckdb.connect()
     for t in TABLES:
@@ -80,7 +71,6 @@ def main():
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
 
-    sys.path.insert(0, ".")
     import __spark_entry__ as entry
 
     qs = entry.queries()

@@ -24,21 +24,10 @@ def main() -> None:
     want = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "16g")
-        .appName("ariadne-jobprofile")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
     import bench
+
+    spark = bench.spark_session(cpus, app_name="ariadne-jobprofile")
+
     import __spark_entry__ as entry
 
     entry._prepare(spark, sf_dir)
@@ -50,8 +39,7 @@ def main() -> None:
 
     # warm every plan first so codegen/worker spin-up and one-time
     # fixture builds do not count as query-path jobs
-    for name in names:
-        qs[name](spark, sf_dir).count()
+    bench.warm_up(spark, qs, names, sf_dir)
 
     out: dict[str, dict] = {}
     for name in names:

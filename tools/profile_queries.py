@@ -1,7 +1,8 @@
 """Round-10 optimization profiler: per-query timings + formatted plans.
 
-Mirrors bench.py's session exactly (local[$SPARK_GRAFT_CPUS], same
-confs), warms every queried plan once, then for each requested query
+Runs on bench.py's session (``bench.spark_session``,
+local[$SPARK_GRAFT_CPUS]), warms every queried plan once
+(``bench.warm_up``), then for each requested query
 records N timed runs (same .count() action as bench.py) and writes
 ``plans/r10/<name>_<label>.txt`` with the ``explain('formatted')``
 output of the returned frame.
@@ -31,21 +32,10 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     runs = int(os.environ.get("PROFILE_RUNS", "3"))
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "16g")
-        .appName("ariadne-profile")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
     import bench
+
+    spark = bench.spark_session(cpus, app_name="ariadne-profile")
+
     import __spark_entry__ as entry
 
     entry._prepare(spark, sf_dir)
@@ -58,10 +48,7 @@ def main() -> None:
     )
     os.makedirs(plans_dir, exist_ok=True)
 
-    # warmup (codegen + python worker spin-up), mirrors bench.py
-    for name in names:
-        spark.sparkContext.setJobDescription(f"warmup:{name}")
-        qs[name](spark, sf_dir).count()
+    bench.warm_up(spark, qs, names, sf_dir)
 
     out: dict[str, dict] = {}
     for name in names:

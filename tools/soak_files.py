@@ -18,8 +18,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from bench import spark_session
 
 
 def rss_mb() -> float:
@@ -32,18 +33,13 @@ def main() -> None:
     work = "/tmp/ariadne_soak_files"
     shutil.rmtree(work, ignore_errors=True)
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "24g")
-        .appName("ariadne-soak-files")
-        .getOrCreate()
+    spark = spark_session(
+        32,
+        driver_memory="24g",
+        app_name="ariadne-soak-files",
+        shuffle_partitions=64,
+        conf={"spark.ui.showConsoleProgress": "false"},
     )
-    spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.ariadne.storagePath", f"{work}/store")
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")

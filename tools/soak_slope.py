@@ -39,20 +39,11 @@ def main() -> None:
         0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     )
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "16g")
-        .appName("ariadne-slope")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    from bench import spark_session
+
+    spark = spark_session(16, app_name="ariadne-slope")
     # the 32 MiB bloom cost floor is a production heuristic (probing
     # costs more than scanning a tiny ledger); disable it so the toy
     # ledgers exercise the prune path itself (same as tools/soak.py)
