@@ -22,6 +22,7 @@ both µs since epoch over identical stored values.
 from __future__ import annotations
 
 import glob
+import hashlib
 import os
 import shutil
 from collections.abc import Callable
@@ -29,7 +30,13 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-WORK = "/tmp/ariadne_entry"
+# Fixtures and index stores live under a directory derived from this
+# checkout's path, so two checkouts (a change and its parent) can run
+# the correctness check or the job profiler side by side.
+CHECKOUT_TAG = hashlib.sha1(
+    os.path.dirname(os.path.abspath(__file__)).encode()
+).hexdigest()[:10]
+WORK = f"/tmp/ariadne_entry-{CHECKOUT_TAG}"
 
 ORDER_KEYS_RANGE = list(range(100, 160))
 CUST_KEYS = list(range(10, 30))

@@ -24,6 +24,8 @@ from __future__ import annotations
 import json
 import logging
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -47,8 +49,9 @@ from .exceptions import (
 from .operators.build import build_index_rows, split_large_indexes
 from .operators.join import apply_temporal_dedup, prune_metrics_local
 from .plans.batching import analyze_files, create_batches, fits_one_batch
-from .plans.locate import LocateStats
-from .plans.locate import locate_files as _locate
+from .plans import locate as spark_planner
+from .plans import locate_local as local_planner
+from .plans.locate import Band, LocateStats
 from .sources.files import (
     FILENAME_COL,
     SUPPORTED_FORMATS,
@@ -57,7 +60,7 @@ from .sources.files import (
     read_pipeline,
 )
 from .storage.filelist import FileList
-from .storage.fs import get_fs
+from .storage.fs import PosixFS, get_fs
 from .storage.lock import IndexLock
 from .storage.metadata import (
     BLOOM,
@@ -75,6 +78,182 @@ from .storage.paths import IndexPaths
 from .storage.table import ParquetTable
 
 log = logging.getLogger("ariadne")
+
+
+def _locate(
+    spark: SparkSession | None,
+    meta: IndexMetadata,
+    index_df,
+    large_tables,
+    query: "DataFrame | dict",
+    columns: list[str] | None = None,
+    *,
+    paths: IndexPaths,
+    repartition: int | None = None,
+    min_bloom_bytes: int = 0,
+    totals=None,
+) -> tuple[list[str], LocateStats]:
+    """Candidate files for ``query`` — the one entry point of every
+    locate: ``Index.locate_files``, ``located_data`` (``join`` /
+    ``join_from``), the SQL rewrite, the store-index prune of
+    ``operators.dedup`` and the Data Source.
+
+    ``query`` is a DataFrame of join keys (its ``columns``) or a dict
+    {column: literal values | Band | DataFrame}. Literal values are
+    first cast to the indexed column's type (``TypeError`` for a value
+    that cannot be cast). The driver-side planner
+    (plans/locate_local.py) then runs when the index tables the query
+    reads stay under ``LOCAL_INDEX_MAX_BYTES`` and each DataFrame
+    source's keys under ``LOCAL_KEYS_MAX_BYTES`` (collected once, as
+    distinct values through Arrow); otherwise the Spark planner
+    (plans/locate.py) runs, unchanged. ``stats.planner`` and every
+    ``per_column`` record say which ran, ``planner_reason`` why Spark.
+
+    ``index_df`` (-> DataFrame | None), ``large_tables`` (columns ->
+    {column: DataFrame | None}) and ``totals`` (-> (files, bytes)) are
+    callables only the Spark planner evaluates. ``spark`` None (the
+    Data Source's planning worker) always plans on the driver."""
+    cols = list(query) if isinstance(query, dict) else list(columns or [])
+    cfgs = {}
+    for col in cols:
+        cfgs[col] = meta.config_for(col)
+        if cfgs[col] is None:
+            raise ColumnNotIndexedError(col)
+    local = local_planner.is_local(paths.index)
+    segs = local_planner.segments(paths.index) if local else None
+    sources = {c: query[c] if isinstance(query, dict) else query for c in cols}
+    types = {c: local_planner.value_type(meta, cfgs[c], segs) for c in cols}
+    typed: dict = {}
+    for col, src in sources.items():
+        if isinstance(src, DataFrame):
+            continue
+        if isinstance(src, Band):
+            if cfgs[col].type != RANGE:
+                raise ColumnNotIndexedError(
+                    f"{col}: Band queries need a range index, not {cfgs[col].type}"
+                )
+            typed[col] = local_planner.typed_band(col, src, types[col])
+        else:
+            typed[col] = local_planner.typed_values(col, src, types[col])
+
+    reason = scanned = None
+    if not local:
+        if spark is None:
+            raise ValueError(f"remote index {paths.index!r} needs a SparkSession")
+        reason = "index storage is not a local filesystem"
+    else:
+        large_segs = {
+            c: local_planner.segments(paths.large_index(c))
+            for c in cols
+            if cfgs[c].type in local_planner.SPILL_TYPES
+        }
+        nbytes = sum(
+            s.nbytes for ss in [segs, *large_segs.values()] for s in ss or []
+        )
+        cap = spark_planner.LOCAL_INDEX_MAX_BYTES
+        if spark is not None and nbytes > cap:
+            reason = f"index bytes {nbytes} > LOCAL_INDEX_MAX_BYTES {cap}"
+    if reason is None:
+        stats = LocateStats(planner="local")
+        if segs is None:
+            return [], stats
+        live = local_planner.LocalIndex(meta, segs, large_segs, cols)
+        stats.totals = live.totals
+        plan: dict = {}
+        frames: dict = {}
+        for col, src in sources.items():
+            cfg = cfgs[col]
+            rec = stats.per_column[col] = {
+                "type": cfg.type,
+                "skipped": False,
+                "source": (
+                    "band" if isinstance(src, Band)
+                    else "frame" if isinstance(src, DataFrame) else "values"
+                ),
+                "planner": "local",
+            }
+            if not isinstance(src, DataFrame):
+                if not isinstance(src, Band):
+                    rec["n_values"] = len({v for v in src if v is not None})
+                plan[col] = typed[col]
+            elif (
+                cfg.type == BLOOM
+                and min_bloom_bytes
+                and live.totals[1] < min_bloom_bytes
+            ):
+                # the Spark planner's cost-model skip, kept as is
+                # (spark.ariadne.minBloomPruneBytes)
+                rec.update(
+                    skipped=True,
+                    reason=f"index bytes {live.totals[1]} < minBloomPruneBytes",
+                )
+            else:
+                frames.setdefault(id(src), (src, []))[1].append(col)
+        for frame, fcols in frames.values():
+            keys, reason = _collect_keys(frame, fcols)
+            if reason is not None:
+                break
+            for col in fcols:
+                t = types[col]
+                try:
+                    plan[col] = keys[col] if t is None else keys[col].cast(t)
+                except (pa.ArrowInvalid, pa.ArrowNotImplementedError):
+                    reason = f"{col}: {keys[col].type} keys do not cast to {t}"
+                    break
+            if reason is not None:
+                break
+        if reason is None:
+            return live.locate(plan, stats), stats
+        scanned = live.totals
+        totals = (lambda: scanned)
+
+    spark_query = query
+    if isinstance(query, dict):
+        spark_query = {
+            c: (
+                typed[c] if isinstance(typed.get(c), Band)
+                else local_planner.python_values(cfgs[c], typed[c]) if c in typed
+                else query[c]
+            )
+            for c in cols
+        }
+    files, stats = spark_planner.locate_files(
+        spark,
+        meta,
+        index_df(),
+        large_tables(cols),
+        spark_query,
+        columns,
+        repartition=repartition,
+        min_bloom_bytes=min_bloom_bytes,
+        total_bytes=totals()[1] if min_bloom_bytes else None,
+    )
+    stats.totals, stats.planner_reason = scanned, reason
+    for rec in stats.per_column.values():
+        rec.update(planner="spark", planner_reason=reason)
+    return files, stats
+
+
+def _collect_keys(frame: DataFrame, cols: list[str]):
+    """({column: distinct non-null keys as Arrow}, None), or (None,
+    reason) when the distinct keys pass ``LOCAL_KEYS_MAX_BYTES`` or a
+    key type has no Arrow form. The frame executes once; the row limit
+    (at least 8 bytes a key) bounds what an oversized key set costs the
+    driver before the byte check sends it to the Spark planner."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    sel = frame.select(*cols)
+    cap = spark_planner.LOCAL_KEYS_MAX_BYTES
+    try:
+        for f in sel.schema.fields:
+            to_arrow_type(f.dataType)
+    except TypeError as e:  # an exotic key type: stay distributed
+        return None, f"keys have no Arrow form ({e})"
+    max_rows = cap // (8 * len(cols))
+    tbl = sel.distinct().limit(max_rows + 1).toArrow()
+    if tbl.num_rows > max_rows or tbl.nbytes > cap:
+        return None, f"distinct keys over LOCAL_KEYS_MAX_BYTES {cap}"
+    return {c: pc.unique(tbl[c].drop_null()) for c in cols}, None
 
 
 class Index:
@@ -425,7 +604,13 @@ class Index:
         both tables key on filename (see ``ParquetTable.segment_dirs``),
         and driver-sized because ``update()`` materializes this list
         anyway. A replace-per-key read + anti-join plan costs 5 Spark
-        jobs per update against 2."""
+        jobs per update against 2; on a local store both reads run
+        driver-side with pyarrow, no job at all."""
+        if isinstance(self.fs, PosixFS):
+            return sorted(
+                set(self.filelist.filenames())
+                - set(local_planner.list_filenames(self.paths.index))
+            )
         fl_dirs = self.filelist.table.segment_dirs()
         if not fl_dirs:
             return []
@@ -505,17 +690,17 @@ class Index:
                 and self.meta.indexes
                 and all(c.type == RANGE for c in self.meta.indexes)
             )
-            if (
-                use_footers
-                or len(todo) == 1
-                or fits_one_batch(
-                    self.spark,
-                    self.meta,
-                    sorted(todo),
-                    self.meta.indexes,
-                    conf.large_index_limit,
-                )
-            ):
+            # footer proof: every counted index is scalar and the
+            # files' footer rows sum under largeIndexLimit, so no file
+            # holds that many distinct values — nothing can spill
+            no_spill = use_footers or fits_one_batch(
+                self.spark,
+                self.meta,
+                sorted(todo),
+                self.meta.indexes,
+                conf.large_index_limit,
+            )
+            if no_spill or len(todo) == 1:
                 # range structs hold no collect_set state, so batch
                 # packing (and its HLL analysis scan) is unnecessary;
                 # a single file likewise always forms exactly one
@@ -560,16 +745,20 @@ class Index:
                         rows = build_index_rows(self.spark, self.meta, batch)
                 else:
                     rows = build_index_rows(self.spark, self.meta, batch)
-                rows = rows.cache()
+                if not no_spill:
+                    # the spill check and the write both read the rows
+                    rows = rows.cache()
                 try:
-                    main_rows, large = split_large_indexes(
-                        self.spark,
-                        rows,
-                        array_cols,
-                        conf.large_index_limit,
-                        conf.auto_bloom_fpr,
-                        temporal_cols=temporal_cols,
-                    )
+                    main_rows, large = rows, {}
+                    if not no_spill:
+                        main_rows, large = split_large_indexes(
+                            self.spark,
+                            rows,
+                            array_cols,
+                            conf.large_index_limit,
+                            conf.auto_bloom_fpr,
+                            temporal_cols=temporal_cols,
+                        )
                     for col, ldf in large.items():
                         ParquetTable(
                             self.spark,
@@ -628,8 +817,6 @@ class Index:
         uses, so ANY index data/metadata change invalidates. The JVM
         extension keeps the identical cache
         (AriadneState.locateCache, keyed fingerprint+predicates)."""
-        from .plans.locate import Band
-
         if not isinstance(query, dict):
             return None
         parts = []
@@ -652,6 +839,27 @@ class Index:
         )
         return (fingerprint, tuple(parts), tuple(columns or ()))
 
+    def _run_locate(self, query, columns) -> tuple[list[str], LocateStats]:
+        conf = self.conf
+        files, stats = _locate(
+            self.spark,
+            self.meta,
+            lambda: self.index_df,
+            self._large_tables,
+            query,
+            columns,
+            paths=self.paths,
+            repartition=conf.index_repartition_count,
+            min_bloom_bytes=conf.min_bloom_prune_bytes,
+            totals=self._index_totals,
+        )
+        self._last_locate_stats = stats
+        if stats.totals is not None:
+            # the driver-side planner read every live row: its totals
+            # spare prune metrics the aggregation job
+            self._totals_cache = stats.totals
+        return files, stats
+
     def locate_files(self, query: "dict | DataFrame", columns: list[str] | None = None) -> list[str]:
         """Candidate files whose contents can match ``query``
         ({column: values} or a DataFrame of join keys). AND semantics
@@ -670,20 +878,10 @@ class Index:
             if hit is not None:
                 files, stats = hit
                 self._last_locate_stats = stats
+                if stats.totals is not None:
+                    self._totals_cache = stats.totals
                 return list(files)
-        min_bloom = self.conf.min_bloom_prune_bytes
-        files, stats = _locate(
-            self.spark,
-            self.meta,
-            self.index_df,
-            self._large_tables(list(query.keys()) if isinstance(query, dict) else list(columns or [])),
-            query,
-            columns,
-            repartition=self.conf.index_repartition_count,
-            min_bloom_bytes=min_bloom,
-            total_bytes=self._index_totals()[1] if min_bloom else None,
-        )
-        self._last_locate_stats = stats
+        files, stats = self._run_locate(query, columns)
         out = sorted(files)
         if key is not None:
             if len(self._locate_memo) >= 128:
@@ -790,8 +988,6 @@ class Index:
         )
         df = self.read_files(files, extra_columns=list(values.keys()))
         if filter_rows:
-            from .plans.locate import Band
-
             for col, vals in values.items():
                 if isinstance(vals, Band):
                     c = F.col(col)
@@ -827,20 +1023,7 @@ class Index:
                 raise ColumnNotIndexedError(c)
             if c not in other.columns:
                 raise ColumnNotFoundError(f"{c} not in other DataFrame")
-        values_df = other.select(*cols)
-        min_bloom = self.conf.min_bloom_prune_bytes
-        files, stats = _locate(
-            self.spark,
-            self.meta,
-            self.index_df,
-            self._large_tables(cols),
-            values_df,
-            cols,
-            repartition=self.conf.index_repartition_count,
-            min_bloom_bytes=min_bloom,
-            total_bytes=self._index_totals()[1] if min_bloom else None,
-        )
-        self._last_locate_stats = stats
+        files, stats = self._run_locate(other.select(*cols), cols)
         self._last_metrics = prune_metrics_local(
             stats.sizes, self._index_totals(), stats
         )

@@ -156,6 +156,10 @@ def prune_metrics_local(
         "selected_bytes": sel_b,
         "pruned_pct": pct,
     }
+    if locate_stats is not None:
+        # which planner chose these files, and why not the driver-side one
+        metrics["planner"] = locate_stats.planner
+        metrics["planner_reason"] = locate_stats.planner_reason
     log.info(
         "loaded %d of %d files (%d of %d bytes) — %.1f%% data pruned",
         len(selected_sizes), total_files, sel_b, total_b, pct,

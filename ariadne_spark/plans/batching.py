@@ -17,8 +17,10 @@ batching, not correctness.
 
 Footer rule (``fits_one_batch``): a scalar column holds at most one
 distinct value per row, so when every counted index is scalar and the
-parquet footers' ``num_rows`` summed over the files is within the
-budget, the files form one batch by construction. That rule reads
+parquet footers' ``num_rows`` summed over the files is below the
+budget, the files form one batch by construction — and, the sum
+being below the budget, no file reaches ``largeIndexLimit`` distinct
+values, so ``Index.update`` skips the spill-size job. That rule reads
 only the footers, on the driver with pyarrow (no Spark job), and
 needs local parquet paths; anything else — array-shaped indexes
 (exploded aliases, array-expression blooms), other formats, remote
@@ -84,7 +86,7 @@ def fits_one_batch(
             rows += pq.read_metadata(path).num_rows
         except (OSError, pa.ArrowException):
             return False
-        if rows > budget:
+        if rows >= budget:  # spills start AT the limit (build.py)
             return False
     return True
 

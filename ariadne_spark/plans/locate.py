@@ -1,10 +1,13 @@
-"""File-location planner — the core pruning engine.
+"""Distributed file-location planner — the path above the byte bounds.
 
-Given query values (a literal set or a DataFrame of join keys) for one
-or more indexed columns, compute the minimal candidate file set whose
-contents can possibly match. Per-column candidate sets are
-intersected (AND semantics across columns and index types), matching
-the reference's planner (reference:
+Every locate enters through ``ariadne_spark.index._locate``, which types
+the query values and runs the driver-side planner
+(plans/locate_local.py, the semantic spec) by default. This module runs
+instead when the index tables a query reads sum past
+``LOCAL_INDEX_MAX_BYTES`` on disk, when a DataFrame source's distinct
+keys pass ``LOCAL_KEYS_MAX_BYTES``, or when the index lives on remote
+storage. It computes the same candidate set as Spark jobs: per-column
+candidate frames AND-intersected by inner joins on filename (reference:
 src/main/scala/dev/cjfravel/ariadne/IndexQueryOperations.scala:623-751;
 AND-intersection :725-745; per-type probes :484-599, :769-885;
 auto-bloom pre-filter :387-468; bounding-box degradation :845-868).
@@ -55,6 +58,14 @@ log = logging.getLogger("ariadne")
 RANGE_COLLECT_CAP = 10_000
 RANGE_BBOX_THRESHOLD = 1_000
 BLOOM_PROBE_CAP = 2_000_000
+# The driver-side planner (plans/locate_local.py) serves a locate while
+# the index tables it reads (main table plus the queried columns' spill
+# tables) sum to at most LOCAL_INDEX_MAX_BYTES on disk, and a DataFrame
+# source's key projection is estimated at most LOCAL_KEYS_MAX_BYTES (its
+# distinct keys are then collected once, through Arrow). Above either
+# bound this module's distributed planner runs.
+LOCAL_INDEX_MAX_BYTES = 64 << 20
+LOCAL_KEYS_MAX_BYTES = 32 << 20
 
 _VAL = "__ariadne_value"
 
@@ -97,6 +108,12 @@ class LocateStats:
     # collect that fetches the filenames — pruning metrics then need no
     # extra Spark job
     sizes: dict = field(default_factory=dict)
+    # (total_files, total_bytes) of the index, when the planner's own
+    # scan saw every live row (the driver-side planner does)
+    totals: tuple | None = None
+    # which planner ran ("local" | "spark") and, for spark, why
+    planner: str = "spark"
+    planner_reason: str | None = None
 
 
 def _values_df(spark: SparkSession, source, column: str) -> DataFrame | None:

@@ -1,28 +1,56 @@
-"""JVM-free file-location planner (pyarrow).
+"""Driver-side file-location planner (pyarrow + numpy) — the default.
 
-The Spark 4 Python Data Source API executes planning callbacks
-(``schema``/``partitions``/``pushFilters``) in a dedicated Python
-worker with no SparkSession, so the data-source integration needs a
-planner that reads index state straight from disk. This module
-re-implements candidate location over the ParquetTable layout with
-pyarrow only, mirroring plans/locate.py semantics:
+Every locate goes through ``ariadne_spark.index._locate``. It runs this
+planner whenever the index tables a query reads, summed from their
+segment listing, stay under ``LOCAL_INDEX_MAX_BYTES`` and a DataFrame
+source's distinct keys fit ``LOCAL_KEYS_MAX_BYTES`` (both in
+plans/locate.py); above either bound the Spark planner there runs. The
+Spark 4 Python Data Source plans in a worker with no SparkSession and
+always lands here.
 
-* regular/computed/exploded: literal membership against the per-file
-  distinct arrays; spilled files (null array) probe ``auto_bloom``
-  when present, else stay candidates (conservative).
-* bloom: probe the serialized filter.
-* range: min/max containment.
+The planner reads the live index rows straight from the ParquetTable
+layout — per filename the row of the newest segment holding it — and
+computes each queried column's verdict for every file at once with
+``pyarrow.compute`` and numpy (no per-row Python):
+
+* regular/computed/exploded: ``list_flatten`` + ``is_in`` +
+  ``list_parent_indices`` over the per-file distinct arrays. A spilled
+  file (null array) is pre-filtered by its ``auto_bloom`` and then
+  matched against its live rows in ``large_indexes/{col}`` — live only
+  where the main row's array is null.
+* bloom: every file's filter probed with one hash of the query values.
+* range: value containment by a sorted search of the values; a
+  ``Band`` by interval overlap.
+* temporal: the file holding the latest version of each value (max_ts
+  desc nulls last, then filename asc) over in-row arrays and live spill
+  rows; files with a null array and no live spill rows (orphans: empty
+  files or a mid-backfill column) stay candidates.
 * AND-intersection across queried columns.
 
-Memory note: in-row arrays are bounded by ``largeIndexLimit``; rows
-stream one segment batch at a time, and per-file state keeps only the
-verdict bits plus the winning segment number — not the arrays.
+The same scan yields each file's ``file_size`` and the index's
+``(total_files, total_bytes)``, so prune metrics cost no Spark job.
+This module is the semantic spec of locate; the Spark planner must
+agree with it (the parity tests in tests/test_datasource.py).
+
+Values reach the planner typed: :func:`typed_values` casts a query's
+literals to the indexed column's Arrow type and raises ``TypeError``
+for a value that cannot be cast, so a mistyped literal (days for a
+DATE, say) never turns into an empty candidate set.
 """
 
 from __future__ import annotations
 
+import datetime
+import json
+from dataclasses import dataclass
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+
 from ..functions import bloom as bloomfn
-from ..storage.fs import get_fs, join
+from ..storage.fs import get_fs, join, scheme_of, strip_file_scheme
 from ..storage.metadata import (
     BLOOM,
     COMPUTED,
@@ -30,16 +58,35 @@ from ..storage.metadata import (
     RANGE,
     REGULAR,
     TEMPORAL,
+    IndexConfig,
     IndexMetadata,
 )
 from ..storage.table import read_manifest
-from .locate import Band
+from . import locate as spark_planner
+from .locate import Band, LocateStats
+
+ARRAY_TYPES = (REGULAR, COMPUTED, EXPLODED)
+# index types whose oversized per-file arrays spill to large_indexes/{col}
+SPILL_TYPES = ARRAY_TYPES + (TEMPORAL,)
+# elements per (files x values) position matrix in the bloom probe
+_PROBE_CELLS = 1 << 22
 
 
-def _segments(table_path: str) -> list[tuple[int, list[str]]] | None:
-    """(seq, parquet files) per live segment in commit order, or None
-    for a table never written. A missing segment directory raises:
-    skipping it could drop a file that matches."""
+@dataclass
+class Segment:
+    files: list[str]
+    nbytes: int
+    schema: dict | None  # the writer's Spark schema, when the manifest has it
+
+
+def is_local(path: str) -> bool:
+    return scheme_of(path) in (None, "file")
+
+
+def segments(table_path: str) -> list[Segment] | None:
+    """Live segments in commit order, or None for a table never
+    written. A missing segment directory raises: skipping it could drop
+    a file that matches."""
     fs = get_fs(None, table_path)
     m = read_manifest(fs, table_path)
     if m is None:
@@ -49,134 +96,429 @@ def _segments(table_path: str) -> list[tuple[int, list[str]]] | None:
         d = join(table_path, seg["dir"])
         if not fs.is_dir(d):
             raise FileNotFoundError(f"segment directory {d} is missing")
-        out.append((seg["seq"], fs.list_files(d, ".parquet")))
+        files = fs.list_files(d, ".parquet")
+        sch = seg.get("schema")
+        out.append(
+            Segment(
+                files,
+                sum(fs.sizes(files)),
+                json.loads(sch) if sch else None,
+            )
+        )
     return out
 
 
 def list_filenames(filelist_path: str) -> list[str]:
-    """All registered filenames (segment dedup is irrelevant here:
-    filenames are the key, duplicates collapse via the set)."""
-    import pyarrow.parquet as pq
-
+    """All registered filenames (re-adds collapse: filename is the key)."""
     names: set[str] = set()
-    for _, files in _segments(filelist_path) or []:
-        for f in files:
-            names.update(pq.read_table(f, columns=["filename"])["filename"].to_pylist())
+    for seg in segments(filelist_path) or []:
+        for f in seg.files:
+            t = pq.read_table(strip_file_scheme(f), columns=["filename"])
+            names.update(t["filename"].to_pylist())
     return sorted(names)
 
 
-def locate_files_local(
-    index_table_path: str,
-    meta: IndexMetadata,
-    query: dict[str, list],
-    bands: dict[str, Band] | None = None,
-) -> list[str]:
-    """Candidate filenames for {column: [literal values]} without a
-    SparkSession. Conservative by construction.
+def _read_segment(seg: Segment, columns: list[str]) -> pa.Table:
+    if seg.schema is not None:
+        present = {f["name"] for f in seg.schema["fields"]}
+    elif seg.files:
+        present = set(pq.read_schema(strip_file_scheme(seg.files[0])).names)
+    else:
+        present = set()
+    cols = [c for c in columns if c in present]
+    parts = [
+        pq.read_table(
+            strip_file_scheme(f), columns=cols, coerce_int96_timestamp_unit="us"
+        )
+        for f in seg.files
+    ]
+    if not parts:
+        return pa.table({"filename": pa.array([], pa.string())})
+    return pa.concat_tables(parts, promote_options="permissive")
 
-    ``bands``: optional {column: Band} interval constraints (from
-    pushed >, >=, <, <= filters) evaluated against RANGE index
-    [min,max] by interval overlap; non-range columns ignore their band
-    (conservative)."""
-    import pyarrow.parquet as pq
 
-    segs = _segments(index_table_path)
-    if segs is None:
-        return []
-    bands = bands or {}
-    cols_needed = ["filename"]
-    per_col = {}
-    band_col = {}
-    for col, values in query.items():
-        cfg = meta.config_for(col)
-        if cfg is None:
-            raise KeyError(f"column {col} not indexed")
-        vals = [v for v in values if v is not None]
-        per_col[col] = (cfg, vals, bloomfn.hash_values(vals))
-        cols_needed.append(cfg.stored_column)
-        if cfg.type in (REGULAR, COMPUTED, EXPLODED):
-            cols_needed.append(f"auto_bloom_{col}")
-    for col, b in bands.items():
-        cfg = meta.config_for(col)
-        if cfg is None:
-            raise KeyError(f"column {col} not indexed")
+def read_live(segs: list[Segment], columns: list[str]) -> pa.Table:
+    """Live rows of a table keyed on filename: the rows of the newest
+    segment holding each filename (replace-per-key, ParquetTable.read's
+    semantics), one pass per segment, newest first. Columns a segment
+    lacks read as null."""
+    parts: list[pa.Table] = []
+    seen: list[pa.Array] = []
+    for seg in reversed(segs):
+        t = _read_segment(seg, columns)
+        if seen:
+            known = pa.chunked_array(seen, pa.string()).combine_chunks()
+            t = t.filter(pc.invert(pc.is_in(t["filename"], value_set=known)))
+        if t.num_rows:
+            parts.append(t)
+            seen.append(pc.unique(t["filename"]).cast(pa.string()))
+    if not parts:
+        return pa.table({"filename": pa.array([], pa.string())})
+    return pa.concat_tables(parts, promote_options="permissive").combine_chunks()
+
+
+# ------------------------------------------------------------------ typing
+
+
+def _spark_type(meta: IndexMetadata, cfg: IndexConfig, segs: list[Segment]):
+    """The Spark type of the VALUES indexed under ``cfg``: the element
+    type of the stored array / temporal struct / range bounds, read from
+    the newest segment schema that holds the column; plain blooms (and
+    any column whose segments carry no schema) use the source schema.
+    None when nothing records it (an expression bloom)."""
+    from pyspark.sql import types as T
+
+    if cfg.type != BLOOM:
+        for seg in reversed(segs or []):
+            if seg.schema is None:
+                continue
+            for f in seg.schema["fields"]:
+                if f["name"] != cfg.stored_column:
+                    continue
+                dt = T.StructType.fromJson({"fields": [f]})[0].dataType
+                if cfg.type == RANGE:
+                    return dt["min"].dataType
+                if isinstance(dt, T.ArrayType):
+                    el = dt.elementType
+                    if cfg.type == TEMPORAL:
+                        return el["value"].dataType
+                    return el
+    if cfg.type in (REGULAR, TEMPORAL, RANGE) or (
+        cfg.type == BLOOM and cfg.expression is None
+    ):
+        fields = {f.name: f.dataType for f in meta.schema.fields}
+        return fields.get(cfg.column)
+    return None
+
+
+def value_type(meta: IndexMetadata, cfg: IndexConfig, segs) -> pa.DataType | None:
+    """Arrow type of the values indexed under ``cfg`` (None: unknown)."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    dt = _spark_type(meta, cfg, segs)
+    if dt is None:
+        return None
+    try:
+        return to_arrow_type(dt)
+    except TypeError:  # a type Arrow cannot carry: leave values untyped
+        return None
+
+
+def _temporal(t: pa.DataType) -> bool:
+    return (
+        pa.types.is_date(t) or pa.types.is_timestamp(t) or pa.types.is_time(t)
+        or pa.types.is_duration(t)
+    )
+
+
+def typed_values(column: str, values, t: pa.DataType | None) -> pa.Array:
+    """Distinct non-null ``values`` as an Arrow array of type ``t``.
+
+    Raises ``TypeError`` for a value that cannot be cast — a number for
+    a DATE/TIMESTAMP column (days or microseconds: Catalyst's internal
+    form, never a date), a float that does not fit an integer column, a
+    string that does not parse. Untyped (``t`` None) values pass through
+    as Arrow infers them."""
+    vals = list(dict.fromkeys(v for v in values if v is not None))
+    if t is not None and pa.types.is_timestamp(t) and t.tz:
+        # a naive datetime names local time, as PySpark reads it; pass
+        # Arrow UTC instants (it keeps an offset datetime's wall clock)
+        vals = [
+            v.astimezone(datetime.timezone.utc)
+            if isinstance(v, datetime.datetime)
+            else v
+            for v in vals
+        ]
+    try:
+        arr = pa.array(vals) if vals else pa.array([], t or pa.null())
+    except (pa.ArrowInvalid, pa.ArrowTypeError) as e:
+        raise TypeError(f"{column}: values {vals[:5]!r} do not share a type") from e
+    if t is None or arr.type == t:
+        return arr
+    if _temporal(t) and (
+        pa.types.is_integer(arr.type) or pa.types.is_floating(arr.type)
+        or pa.types.is_boolean(arr.type)
+    ):
+        raise TypeError(
+            f"{column}: {arr.type} values {vals[:5]!r} for a {t} column "
+            "(pass dates/datetimes, not day or microsecond counts)"
+        )
+    try:
+        if pa.types.is_decimal(t) and pa.types.is_integer(arr.type):
+            return pa.array(vals, type=t)  # an int64 cast needs precision 19+
+        return arr.cast(t, safe=True)
+    except (pa.ArrowInvalid, pa.ArrowTypeError, pa.ArrowNotImplementedError) as e:
+        raise TypeError(
+            f"{column}: values {vals[:5]!r} cannot be cast to {t}: {e}"
+        ) from e
+
+
+def typed_band(column: str, band: Band, t: pa.DataType | None) -> Band:
+    def one(v):
+        return None if v is None else typed_values(column, [v], t)[0].as_py()
+
+    return Band(one(band.lo), one(band.hi), band.lo_inc, band.hi_inc)
+
+
+def python_values(cfg: IndexConfig, arr: pa.Array) -> list:
+    """Typed values as the Python objects the Spark planner and the
+    bloom hash take. A bloom hashes ``str(value)``, and the build saw a
+    zoned timestamp as a naive wall-clock time, so bloom probes get the
+    naive local time a PySpark caller passes (and reads back)."""
+    vals = arr.to_pylist()
+    if cfg.type == BLOOM and pa.types.is_timestamp(arr.type) and arr.type.tz:
+        return [v.astimezone().replace(tzinfo=None) for v in vals]
+    return vals
+
+
+# ------------------------------------------------------------------ verdicts
+
+
+def _rows_holding(lists: pa.Array, vals: pa.Array, n: int) -> np.ndarray:
+    """Rows of a list array holding any of ``vals``."""
+    flat = pc.list_flatten(lists)
+    hit = pc.is_in(flat, value_set=vals.cast(flat.type))
+    out = np.zeros(n, dtype=bool)
+    out[pc.list_parent_indices(lists).filter(hit).to_numpy()] = True
+    return out
+
+
+def bloom_maybe(blobs: pa.Array, pairs: np.ndarray) -> np.ndarray:
+    """Per row: may the row's serialized filter hold ANY of the hashed
+    values? All filters are probed together: their headers parse as one
+    gather, and each of the k hash rounds is one (files x values)
+    position matrix over the concatenated bit arrays. A null filter is
+    a must-read (True); an empty value set matches nothing."""
+    n = len(blobs)
+    out = np.zeros(n, dtype=bool)
+    valid = blobs.is_valid().to_numpy(zero_copy_only=False)
+    out[~valid] = True
+    rows = np.flatnonzero(valid)
+    if not len(rows) or not len(pairs):
+        return out
+    blobs = blobs.cast(pa.binary())
+    offs = np.frombuffer(blobs.buffers()[1], dtype=np.int32)[
+        blobs.offset : blobs.offset + n + 1
+    ]
+    data = np.frombuffer(blobs.buffers()[2], dtype=np.uint8)
+    start = offs[rows].astype(np.int64)
+    hdr = data[start[:, None] + np.arange(16)]  # magic | m u64 | k u32
+    m = hdr[:, 4:12].copy().view("<u8").ravel()
+    k = hdr[:, 12:16].copy().view("<u4").ravel().astype(np.int64)
+    bits0 = (start + 16).astype(np.uint64)
+    per = max(1, _PROBE_CELLS // len(rows))
+    hit = np.zeros(len(rows), dtype=bool)
+    for s in range(0, len(pairs), per):
+        h1 = pairs[s : s + per, 0][None, :]
+        h2 = pairs[s : s + per, 1][None, :]
+        alive = np.ones((len(rows), h1.shape[1]), dtype=bool)
+        for i in range(int(k.max())):
+            pos = (h1 + np.uint64(i) * h2) % m[:, None]
+            byte = data[(bits0[:, None] + (pos >> np.uint64(3))).astype(np.int64)]
+            bit = (byte >> (pos & np.uint64(7)).astype(np.uint8)) & np.uint8(1)
+            alive &= (bit == 1) | (i >= k)[:, None]
+        hit |= alive.any(axis=1)
+    out[rows] = hit
+    return out
+
+
+def _fields(arr: pa.StructArray) -> dict[str, pa.Array]:
+    """Struct fields with the parent's nulls merged in."""
+    return {f.name: a for f, a in zip(arr.type, arr.flatten())}
+
+
+def _bounds(rng: pa.StructArray) -> tuple[pa.Array, pa.Array]:
+    f = _fields(rng)
+    return f["min"], f["max"]
+
+
+def _sortable(arr: pa.Array) -> np.ndarray:
+    return np.asarray(arr.to_numpy(zero_copy_only=False))
+
+
+def _range_holding(rng: pa.StructArray, vals: pa.Array) -> np.ndarray:
+    """Per row: does [min, max] contain any value? A null range (an
+    all-null or empty file) contains none."""
+    lo, hi = _bounds(rng)
+    ok = pc.and_(pc.is_valid(lo), pc.is_valid(hi)).to_numpy(zero_copy_only=False)
+    if not len(vals) or not ok.any():
+        return np.zeros(len(rng), dtype=bool)
+    vals = vals.cast(lo.type)
+    v = _sortable(pc.array_take(vals, pc.array_sort_indices(vals)))
+    fill = vals[0]
+    a = _sortable(pc.fill_null(lo, fill))
+    b = _sortable(pc.fill_null(hi, fill))
+    inside = np.searchsorted(v, b, side="right") - np.searchsorted(v, a, side="left")
+    return ok & (inside > 0)
+
+
+def _band_overlaps(rng: pa.StructArray, band: Band) -> np.ndarray:
+    n = len(rng)
+    if band.lo is None and band.hi is None:
+        return np.ones(n, dtype=bool)  # no row predicate: all-null files stay
+    lo, hi = _bounds(rng)
+    pred = pc.is_valid(lo)
+    if band.lo is not None:
+        p = pa.scalar(band.lo).cast(hi.type)
+        pred = pc.and_(pred, (pc.greater_equal if band.lo_inc else pc.greater)(hi, p))
+    if band.hi is not None:
+        p = pa.scalar(band.hi).cast(lo.type)
+        pred = pc.and_(pred, (pc.less_equal if band.hi_inc else pc.less)(lo, p))
+    return pc.fill_null(pred, False).to_numpy(zero_copy_only=False)
+
+
+# ------------------------------------------------------------------ planner
+
+
+class LocalIndex:
+    """The live rows of one index, read once per locate: filename,
+    file_size and the stored columns of the queried indexes."""
+
+    def __init__(
+        self,
+        meta: IndexMetadata,
+        segs: list[Segment],
+        large_segs: dict[str, list[Segment] | None],
+        columns: list[str],
+    ) -> None:
+        self.meta = meta
+        self.large_segs = large_segs
+        wanted = ["filename", "file_size"]
+        for col in columns:
+            cfg = meta.config_for(col)
+            wanted.append(cfg.stored_column)
+            if cfg.type in ARRAY_TYPES:
+                wanted.append(f"auto_bloom_{col}")
+        self.rows = read_live(segs, list(dict.fromkeys(wanted)))
+        self.n = self.rows.num_rows
+        self.names = self.rows["filename"]
+        self.sizes = (
+            self.rows["file_size"] if "file_size" in self.rows.column_names else None
+        )
+        total_b = pc.sum(self.sizes).as_py() if self.sizes is not None else 0
+        self.totals = (self.n, int(total_b or 0))
+
+    def _col(self, name: str) -> pa.Array | None:
+        if name not in self.rows.column_names:
+            return None
+        return self.rows[name].combine_chunks()
+
+    def _spill(self, col: str, rows: np.ndarray, columns: list[str]) -> pa.Table:
+        """Live spill rows of ``col`` for the main rows flagged in
+        ``rows`` (whose arrays are null); empty without a spill table."""
+        segs = self.large_segs.get(col)
+        if not segs or not rows.any():
+            return pa.table({c: pa.array([], pa.string()) for c in columns})
+        large = read_live(segs, columns)
+        keep = self.names.filter(pa.array(rows))
+        return large.filter(pc.is_in(large["filename"], value_set=keep))
+
+    def _row_of(self, filenames) -> np.ndarray:
+        return pc.index_in(filenames, value_set=self.names).to_numpy(
+            zero_copy_only=False
+        )
+
+    def _array_verdict(self, cfg: IndexConfig, vals: pa.Array) -> np.ndarray:
+        arr = self._col(cfg.stored_column)
+        if arr is None:
+            return np.zeros(self.n, dtype=bool)
+        out = _rows_holding(arr, vals, self.n)
+        spilled = arr.is_null().to_numpy(zero_copy_only=False)
+        if spilled.any():
+            blobs = self._col(f"auto_bloom_{cfg.column}")
+            if blobs is not None:
+                pairs = bloomfn.hash_values(python_values(cfg, vals))
+                spilled &= bloom_maybe(blobs, pairs)
+            large = self._spill(cfg.column, spilled, ["filename", "value"])
+            if large.num_rows:
+                hit = pc.is_in(large["value"], value_set=vals.cast(large["value"].type))
+                out[self._row_of(large["filename"].filter(hit))] = True
+        return out
+
+    def _temporal_verdict(self, cfg: IndexConfig, vals: pa.Array) -> np.ndarray:
+        arr = self._col(cfg.stored_column)
+        if arr is None:  # column never built: every file an orphan
+            return np.ones(self.n, dtype=bool)
+        flat = pc.list_flatten(arr)
+        fields = _fields(flat)
+        value, ts = fields["value"], fields["max_ts"]
+        hit = pc.is_in(value, value_set=vals.cast(value.type))
+        rows = pc.list_parent_indices(arr).filter(hit).to_numpy()
+        v, t = value.filter(hit), ts.filter(hit)
+        spilled = arr.is_null().to_numpy(zero_copy_only=False)
+        orphans = spilled.copy()
+        if spilled.any():
+            large = self._spill(cfg.column, spilled, ["filename", "value", "max_ts"])
+            if large.num_rows:
+                orphans[self._row_of(pc.unique(large["filename"]))] = False
+                lhit = pc.is_in(large["value"], value_set=vals.cast(large["value"].type))
+                lv = large.filter(lhit)
+                rows = np.concatenate([rows, self._row_of(lv["filename"])])
+                v = pa.concat_arrays([v, lv["value"].combine_chunks().cast(v.type)])
+                t = pa.concat_arrays([t, lv["max_ts"].combine_chunks().cast(t.type)])
+        out = orphans
+        if len(rows):
+            cand = pa.table({"v": v, "t": t, "f": self.names.take(pa.array(rows))})
+            order = pc.sort_indices(
+                cand,
+                sort_keys=[("v", "ascending"), ("t", "descending"), ("f", "ascending")],
+                null_placement="at_end",
+            )
+            sv = cand["v"].take(order).combine_chunks()
+            first = np.ones(len(sv), dtype=bool)
+            if len(sv) > 1:
+                first[1:] = pc.not_equal(sv[1:], sv[:-1]).to_numpy(zero_copy_only=False)
+            out[rows[order.to_numpy()[first]]] = True
+        return out
+
+    def verdict(self, col: str, q, stats: LocateStats) -> np.ndarray:
+        """Per file: may it hold a row matching ``q`` (typed values or a
+        Band) on ``col``?"""
+        cfg = self.meta.config_for(col)
+        rec = stats.per_column[col]
+        if isinstance(q, Band):
+            rng = self._col(cfg.stored_column)
+            if rng is None:
+                return np.ones(self.n, dtype=bool)
+            return _band_overlaps(rng, q)
+        if not len(q):
+            rec["empty_values"] = True
+            return np.zeros(self.n, dtype=bool)
+        if cfg.type in ARRAY_TYPES:
+            return self._array_verdict(cfg, q)
+        if cfg.type == BLOOM:
+            cap = spark_planner.BLOOM_PROBE_CAP
+            if len(q) > cap:  # the Spark planner's driver-memory guard
+                rec.update(skipped=True, reason=f"> {cap} distinct query values")
+                return np.ones(self.n, dtype=bool)
+            pairs = bloomfn.hash_values(python_values(cfg, q))
+            rec.update(bloom_keys=len(pairs), fpr=cfg.fpr or 0.01)
+            blobs = self._col(cfg.stored_column)
+            if blobs is None:
+                return np.ones(self.n, dtype=bool)
+            return bloom_maybe(blobs, pairs)
         if cfg.type == RANGE:
-            band_col[col] = (cfg, b)
-            cols_needed.append(cfg.stored_column)
+            rng = self._col(cfg.stored_column)
+            if rng is None:
+                return np.zeros(self.n, dtype=bool)
+            return _range_holding(rng, q)
+        return self._temporal_verdict(cfg, q)
 
-    # last-writer-wins per filename across segments
-    state: dict[str, tuple[int, bool]] = {}  # filename -> (seq, verdict)
-    for seq, files in segs:
-        for fpath in files:
-            schema_names = set(pq.read_schema(fpath).names)
-            use_cols = [c for c in cols_needed if c in schema_names]
-            pf = pq.ParquetFile(fpath)
-            for batch in pf.iter_batches(columns=use_cols, batch_size=1024):
-                tbl = batch.to_pydict()
-                n = len(tbl["filename"])
-                for i in range(n):
-                    fname = tbl["filename"][i]
-                    ok = True
-                    for col, (cfg, vals, pairs) in per_col.items():
-                        if not vals:
-                            ok = False
-                            break
-                        if not _match(cfg, vals, pairs, tbl, i):
-                            ok = False
-                            break
-                    if ok:
-                        for col, (cfg, b) in band_col.items():
-                            if not _match_band(cfg, b, tbl, i):
-                                ok = False
-                                break
-                    state[fname] = (seq, ok)
-    return sorted(f for f, (_, ok) in state.items() if ok)
+    def locate(self, query: dict, stats: LocateStats) -> list[str]:
+        """Candidate filenames for ``query`` ({col: typed values |
+        Band}; columns absent from it apply no constraint), with
+        ``stats.sizes`` and ``stats.totals`` filled from the same scan."""
+        keep = np.ones(self.n, dtype=bool)
+        for col, q in query.items():
+            keep &= self.verdict(col, q, stats)
+        sel = pa.array(np.flatnonzero(keep))
+        files = self.names.take(sel).to_pylist()
+        sizes = (
+            self.sizes.take(sel).to_pylist()
+            if self.sizes is not None
+            else [None] * len(files)
+        )
+        stats.sizes = dict(zip(files, sizes))
+        stats.totals = self.totals
+        return files
 
-
-def _match_band(cfg, band: Band, tbl, i) -> bool:
-    """Interval-overlap test of a pushed band against a RANGE
-    [min,max] struct: file may match unless its whole range lies
-    outside the band."""
-    lo, hi = band.lo, band.hi
-    if lo is None and hi is None:
-        return True  # boundless band applies no row predicate
-    sc = cfg.stored_column
-    rng = tbl.get(sc, [None])[i] if sc in tbl else None
-    if rng is None or rng.get("min") is None:
-        return False  # all-null column can't satisfy a comparison
-    if lo is not None:
-        if rng["max"] < lo or (rng["max"] == lo and not band.lo_inc):
-            return False
-    if hi is not None:
-        if rng["min"] > hi or (rng["min"] == hi and not band.hi_inc):
-            return False
-    return True
-
-
-def _match(cfg, vals, pairs, tbl, i) -> bool:
-    """May file row ``i`` hold one of ``vals``? ``pairs`` are their
-    bloom hash pairs, hashed once per query column."""
-    sc = cfg.stored_column
-    if cfg.type in (REGULAR, COMPUTED, EXPLODED):
-        arr = tbl.get(sc, [None])[i] if sc in tbl else None
-        if arr is not None:
-            have = set(arr)
-            return any(v in have for v in vals)
-        ab = f"auto_bloom_{cfg.column}"
-        blob = tbl.get(ab, [None])[i] if ab in tbl else None
-        if blob is not None:
-            return bloomfn.might_contain_any(blob, pairs)
-        return True  # spilled with no bloom: conservative
-    if cfg.type == BLOOM:
-        blob = tbl.get(sc, [None])[i] if sc in tbl else None
-        if blob is None:
-            return True
-        return bloomfn.might_contain_any(blob, pairs)
-    if cfg.type == RANGE:
-        rng = tbl.get(sc, [None])[i] if sc in tbl else None
-        if rng is None or rng.get("min") is None:
-            return False  # all-null column can't match a non-null literal
-        return any(rng["min"] <= v <= rng["max"] for v in vals)
-    if cfg.type == TEMPORAL:  # pragma: no cover — refused upstream
-        return True
-    return True

@@ -17,7 +17,9 @@ Data Source API provides the same hooks natively
     df.where(df.o_custkey == 5).show()   # reads only candidate files
 
 The API runs planning callbacks in a dedicated Python worker with no
-SparkSession, so planning uses the JVM-free pyarrow planner
+SparkSession, so planning goes through the same locate entry point as
+every other surface (``ariadne_spark.index._locate``), which without a
+session always runs the driver-side pyarrow planner
 (plans/locate_local.py) over the on-disk index state. Each candidate
 file becomes one InputPartition; executors stream their file as Arrow
 record batches (no row-at-a-time Python).
@@ -51,7 +53,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from ..plans.locate import Band, tighten_band
-from ..plans.locate_local import list_filenames, locate_files_local
+from ..plans.locate_local import list_filenames
 from ..storage.metadata import TEMPORAL, IndexMetadata, load_metadata
 from ..storage.paths import IndexPaths
 
@@ -109,8 +111,7 @@ class _FilePartition(InputPartition):
 
 class AriadneReader(DataSourceReader):
     def __init__(self, paths: IndexPaths, meta: IndexMetadata):
-        self._index_path = paths.index
-        self._filelist_path = paths.filelist
+        self._paths = paths
         self._meta = meta
         self._pushed: dict[str, list] = {}
         self._bands: dict[str, Band] = {}
@@ -146,11 +147,15 @@ class AriadneReader(DataSourceReader):
 
     def partitions(self):
         if self._pushed or self._bands:
-            files = locate_files_local(
-                self._index_path, self._meta, self._pushed, bands=self._bands
+            from .. import index
+
+            # equality values bound a column tighter than its band
+            query = {**self._bands, **self._pushed}
+            files, _ = index._locate(
+                None, self._meta, None, None, query, paths=self._paths
             )
         else:
-            files = list_filenames(self._filelist_path)
+            files = list_filenames(self._paths.filelist)
         parts = [
             _FilePartition(
                 f,

@@ -36,6 +36,8 @@ the pruned scan (reference P8 returns ALL filters to Spark).
 
 from __future__ import annotations
 
+import datetime
+import decimal
 import logging
 
 from pyspark.sql import DataFrame, SparkSession
@@ -100,17 +102,42 @@ def _attr_name(expr) -> str | None:
     return str(parts[-1]) if parts else None
 
 
+_EPOCH_DAY = datetime.date(1970, 1, 1)
+_EPOCH_UTC = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
+_NUMERIC = {"boolean", "byte", "short", "integer", "long", "float", "double"}
+
+
 def _literal_value(expr):
+    """The Python value of a Catalyst ``Literal``, converted from its
+    internal form by ``expr.dataType()``: DATE is days since the epoch,
+    TIMESTAMP microseconds since the epoch (the instant the session
+    time zone parsed; an aware UTC datetime), TIMESTAMP_NTZ wall-clock
+    microseconds, DECIMAL a Catalyst Decimal, STRING a UTF8String,
+    BINARY a byte array. None for a null literal or a type locate
+    cannot probe (intervals, arrays, ...)."""
     if _cls(expr) != "Literal":
         return None
-    # Literal.toString gives Spark SQL literal text; use value() + sql
     v = expr.value()
     if v is None:
         return None
-    cname = v.getClass().getSimpleName() if hasattr(v, "getClass") else type(v).__name__
-    if cname == "UTF8String":
+    kind = str(expr.dataType().typeName())
+    if kind == "date":
+        return _EPOCH_DAY + datetime.timedelta(days=int(v))
+    if kind == "timestamp":
+        return _EPOCH_UTC + datetime.timedelta(microseconds=int(v))
+    if kind == "timestamp_ntz":
+        return _EPOCH_UTC.replace(tzinfo=None) + datetime.timedelta(
+            microseconds=int(v)
+        )
+    if kind.startswith("decimal"):
+        return decimal.Decimal(str(v.toJavaBigDecimal().toPlainString()))
+    if kind.startswith("string"):
         return str(v.toString())
-    return v
+    if kind == "binary":
+        return bytes(v)
+    if kind in _NUMERIC:
+        return v
+    return None
 
 
 def _equality_filters(cond, indexed: set[str]) -> dict[str, list]:
@@ -632,7 +659,9 @@ def _release_probes() -> None:
 
 def prune_report(spark: SparkSession | None = None) -> DataFrame:
     """What the last :func:`sql` call pruned, one row per index view it
-    rewrote: files/bytes selected vs total and the probed columns.
+    rewrote: files/bytes selected vs total, the probed columns, and which
+    locate planner chose the files ("local" or "spark", with the reason
+    the driver-side planner was not used).
     Empty when the last query touched no index view (or fell back).
 
     All numbers come from state the locate path already captured — no
@@ -650,6 +679,8 @@ def prune_report(spark: SparkSession | None = None) -> DataFrame:
             T.StructField("bytes_selected", T.LongType()),
             T.StructField("bytes_total", T.LongType()),
             T.StructField("probed_columns", T.StringType()),
+            T.StructField("planner", T.StringType()),
+            T.StructField("planner_reason", T.StringType()),
         ]
     )
     rows = [
@@ -660,6 +691,8 @@ def prune_report(spark: SparkSession | None = None) -> DataFrame:
             r["bytes_selected"],
             r["bytes_total"],
             ", ".join(r["probed_columns"]),
+            r["planner"],
+            r["planner_reason"],
         )
         for name, r in sorted(_PRUNE_REPORT.items())
     ]
@@ -1063,13 +1096,15 @@ def _plan_and_swap(
             )
             label = f"{name}#{node_ordinal[key[1]]}"
         total_f, total_b = idx._index_totals()
-        sizes = idx._last_locate_stats.sizes
+        st = idx._last_locate_stats
         ctx.report[label] = {
             "files_selected": len(files),
             "files_total": int(total_f),
-            "bytes_selected": int(sum(sizes.get(f) or 0 for f in files)),
+            "bytes_selected": int(sum(st.sizes.get(f) or 0 for f in files)),
             "bytes_total": int(total_b),
             "probed_columns": sorted(str(c) for c in query_map),
+            "planner": st.planner,
+            "planner_reason": st.planner_reason,
         }
         log.info(
             "ariadne.sql: pruned view %s to %d files via %s",

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from .fs import PosixFS
 from .table import ParquetTable
 
 FILELIST_SCHEMA = StructType(
@@ -43,6 +44,11 @@ class FileList:
         return df
 
     def filenames(self) -> list[str]:
+        if isinstance(self.table.fs, PosixFS):
+            # a local ledger reads driver-side with pyarrow: no Spark job
+            from ..plans.locate_local import list_filenames
+
+            return list_filenames(self.table.path)
         # one filename-only scan of the live segments (explicit schema,
         # no shuffle); the driver set() collapses re-adds exactly like
         # the replace-per-key read would

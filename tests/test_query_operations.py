@@ -211,6 +211,7 @@ def test_locate_stats_recorded_for_all_paths(spark, storage, mixed_files):
         "skipped": False,
         "source": "values",
         "n_values": 1,
+        "planner": "local",
     }
     assert st["plevel"]["n_values"] == 2
     # DataFrame source records source=frame without executing extra jobs

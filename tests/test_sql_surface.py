@@ -877,3 +877,52 @@ def test_swap_cache_invalidated_by_index_update(spark, storage, orders_files):
     n2 = surface.sql(q, spark).collect()[0]["n"]
     expected = df.where(F.col("o_custkey").isin([1, 2, 3])).count()
     assert n2 == expected and n2 >= n1
+
+
+def test_sql_date_literal_join_prunes_to_matching_files(spark, storage, orders_files, tmp_path):
+    """``o_orderdate = DATE '...'`` reaches locate as a date (Catalyst
+    holds DATE literals as days since the epoch), so the rewritten join
+    reads only the files holding that day instead of falling back to
+    the full view; a TIMESTAMP literal on a timestamp-typed regular
+    index prunes the same way."""
+    import ariadne_spark
+    from ariadne_spark.sources.files import normalize_path
+    from .conftest import SF_DIR
+
+    df, files = orders_files
+    dated = []
+    for i, f in enumerate(files):
+        out = str(tmp_path / f"d{i}")
+        spark.read.parquet(f).select(
+            "o_orderkey", "o_custkey", "o_orderdate",
+            F.to_date("o_orderdate").alias("o_day"),
+        ).coalesce(1).write.parquet(out)
+        dated += [str(p) for p in sorted((tmp_path / f"d{i}").glob("*.parquet"))]
+    data = spark.read.parquet(*dated)
+    idx = Index.for_name("orders_day", schema=data.schema, format="parquet", spark=spark)
+    idx.add_index("o_day").add_index("o_orderdate").add_files(dated).update()
+    surface.register_views(spark, ["orders_day"])
+    spark.read.parquet(f"{SF_DIR}/customer.parquet").createOrReplaceTempView("cust_day")
+    row = data.orderBy("o_orderkey").first()
+    day, ts = row["o_day"], row["o_orderdate"]
+    holding = {
+        normalize_path(f)
+        for f in dated
+        if spark.read.parquet(f).where(F.col("o_day") == day).count()
+    }
+    assert 0 < len(holding) < len(dated)
+    for col, lit in (("o_day", f"DATE '{day}'"), ("o_orderdate", f"TIMESTAMP_NTZ '{ts}'")):
+        got = surface.sql(
+            "SELECT o_orderkey, c_name FROM orders_day "
+            f"JOIN cust_day ON o_custkey = c_custkey WHERE {col} = {lit}",
+            spark,
+        )
+        want = data.where(F.col("o_day") == day).join(
+            spark.table("cust_day"), F.col("o_custkey") == F.col("c_custkey")
+        ).select("o_orderkey", "c_name")
+        assert_same_rows(got, want)
+        rep = {r["view"]: r for r in ariadne_spark.prune_report(spark).collect()}
+        r = rep["orders_day"]
+        assert col in r["probed_columns"]
+        assert r["files_selected"] == len(holding), (col, r)
+        assert r["planner"] == "local"

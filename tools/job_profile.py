@@ -7,7 +7,9 @@ read as the delta of the DAGScheduler's job-id counter around one
 warmed execution of each query.
 
 Usage: python tools/job_profile.py [query ...]   (default: all)
-Writes /tmp/job_profile.json and prints a sorted table.
+Writes /tmp/job_profile-<checkout tag>.json (the tag hashes this
+checkout's path, as ``__spark_entry__.WORK`` does, so two checkouts can
+profile side by side) and prints a sorted table.
 """
 
 from __future__ import annotations
@@ -50,7 +52,7 @@ def main() -> None:
             "sec": round(time.time() - t0, 3),
         }
 
-    with open("/tmp/job_profile.json", "w") as f:
+    with open(f"/tmp/job_profile-{entry.CHECKOUT_TAG}.json", "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
     for name in sorted(out, key=lambda n: -out[n]["jobs"]):
         print(f"{out[name]['jobs']:4d} jobs {out[name]['sec']:8.3f}s  {name}")
