@@ -25,6 +25,7 @@ import math
 import struct
 
 import numpy as np
+import pyarrow as pa
 
 _MAGIC = b"ABF1"
 _HEADER = struct.Struct("<4sQI")
@@ -32,6 +33,8 @@ _HEADER = struct.Struct("<4sQI")
 _MIN_BITS = 64
 # rows per (chunk × k) position matrix in build and probe
 _CHUNK = 65536
+# positions per (filters × values) matrix in the many-filter probe
+_PROBE_CELLS = 1 << 22
 
 
 def _params(n: int, fpr: float) -> tuple[int, int]:
@@ -64,10 +67,18 @@ def hash_values(values) -> np.ndarray:
     return pairs_from_digests([digest16(v) for v in values if v is not None])
 
 
-def _positions(pairs: np.ndarray, k: int, m: int) -> np.ndarray:
-    """(n, k) bit positions (h1 + i·h2) mod m; uint64 wraps mod 2^64."""
-    ks = np.arange(k, dtype=np.uint64)
-    return (pairs[:, 0:1] + ks[None, :] * pairs[:, 1:2]) % np.uint64(m)
+def _positions(h1, h2, i, m):
+    """Bit positions (h1 + i·h2) mod m, broadcast over numpy arrays
+    (uint64 wraps mod 2^64): the one probe schedule of build and every
+    probe."""
+    return (h1 + i * h2) % m
+
+
+def _bits_set(data: np.ndarray, base, pos) -> np.ndarray:
+    """Whether bits ``pos`` are set in the little-endian packed bit
+    array that starts at byte ``base`` of ``data``."""
+    byte = data[(base + (pos >> np.uint64(3))).astype(np.int64)]
+    return ((byte >> (pos & np.uint64(7)).astype(np.uint8)) & np.uint8(1)) == 1
 
 
 def build(values, fpr: float = 0.01) -> bytes | None:
@@ -77,8 +88,10 @@ def build(values, fpr: float = 0.01) -> bytes | None:
     pairs = hash_values(values)
     m, k = _params(len(pairs), fpr)
     bits = np.zeros(m, dtype=bool)
+    ks = np.arange(k, dtype=np.uint64)[None, :]
     for start in range(0, len(pairs), _CHUNK):
-        bits[_positions(pairs[start : start + _CHUNK], k, m).ravel()] = True
+        p = pairs[start : start + _CHUNK]
+        bits[_positions(p[:, :1], p[:, 1:], ks, np.uint64(m)).ravel()] = True
     return _HEADER.pack(_MAGIC, m, k) + np.packbits(bits, bitorder="little").tobytes()
 
 
@@ -100,12 +113,45 @@ def might_contain_any(blob: bytes | None, pairs: np.ndarray) -> bool:
     """Probe many pre-hashed values (an (n, 2) uint64 array from
     ``hash_values`` or ``pairs_from_digests``) against one filter;
     True if any value may be present."""
-    if blob is None:
-        return True
-    return any(
-        might_contain_np(blob, pairs[start : start + _CHUNK]).any()
-        for start in range(0, len(pairs), _CHUNK)
-    )
+    return bool(might_contain_many(pa.array([blob], pa.binary()), pairs)[0])
+
+
+def might_contain_many(blobs: pa.Array, pairs: np.ndarray) -> np.ndarray:
+    """Per serialized filter in ``blobs`` (an Arrow binary array): may
+    it hold ANY of the hashed values? A null filter (none built) is a
+    must-read, True; an empty value set matches nothing. All filters
+    are probed together: their headers parse as one gather and each
+    hash round is one (filters x values) position matrix over the
+    concatenated bit arrays, chunked to ``_PROBE_CELLS`` positions."""
+    n = len(blobs)
+    out = blobs.is_null().to_numpy(zero_copy_only=False).copy()
+    rows = np.flatnonzero(~out)
+    if not len(rows) or not len(pairs):
+        return out
+    blobs = blobs.cast(pa.binary())
+    offs = np.frombuffer(blobs.buffers()[1], dtype=np.int32)[
+        blobs.offset : blobs.offset + n + 1
+    ]
+    data = np.frombuffer(blobs.buffers()[2], dtype=np.uint8)
+    start = offs[rows].astype(np.int64)
+    hdr = data[start[:, None] + np.arange(_HEADER.size)]
+    if (hdr[:, :4] != np.frombuffer(_MAGIC, dtype=np.uint8)).any():
+        raise ValueError("not an ariadne bloom filter")
+    m = hdr[:, 4:12].copy().view("<u8")  # (filters, 1)
+    k = hdr[:, 12:16].copy().view("<u4").ravel()
+    base = (start + _HEADER.size).astype(np.uint64)[:, None]
+    per = max(1, _PROBE_CELLS // len(rows))
+    hit = np.zeros(len(rows), dtype=bool)
+    for s in range(0, len(pairs), per):
+        h1 = pairs[s : s + per, 0][None, :]
+        h2 = pairs[s : s + per, 1][None, :]
+        alive = np.ones((len(rows), h1.shape[1]), dtype=bool)
+        for i in range(int(k.max())):
+            pos = _positions(h1, h2, np.uint64(i), m)
+            alive &= _bits_set(data, base, pos) | (i >= k)[:, None]
+        hit |= alive.any(axis=1)
+    out[rows] = hit
+    return out
 
 
 def might_contain_np(blob: bytes | None, pairs: np.ndarray) -> np.ndarray:
@@ -115,11 +161,10 @@ def might_contain_np(blob: bytes | None, pairs: np.ndarray) -> np.ndarray:
     if blob is None:
         return np.ones(len(pairs), dtype=bool)
     m, k, bits = _parse(blob)
+    ks = np.arange(k, dtype=np.uint64)[None, :]
     out = np.empty(len(pairs), dtype=bool)
     for start in range(0, len(pairs), _CHUNK):
-        idx = _positions(pairs[start : start + _CHUNK], k, m)
-        byte = bits[(idx >> np.uint64(3)).astype(np.int64)]
-        out[start : start + _CHUNK] = np.all(
-            byte & (np.uint8(1) << (idx & np.uint64(7)).astype(np.uint8)), axis=1
-        )
+        p = pairs[start : start + _CHUNK]
+        pos = _positions(p[:, :1], p[:, 1:], ks, np.uint64(m))
+        out[start : start + _CHUNK] = _bits_set(bits, np.uint64(0), pos).all(axis=1)
     return out

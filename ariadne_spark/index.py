@@ -79,6 +79,8 @@ from .storage.table import ParquetTable
 
 log = logging.getLogger("ariadne")
 
+_WIDE_KEY = "__ariadne_wide_key"
+
 
 def _locate(
     spark: SparkSession | None,
@@ -236,23 +238,50 @@ def _locate(
 
 def _collect_keys(frame: DataFrame, cols: list[str]):
     """({column: distinct non-null keys as Arrow}, None), or (None,
-    reason) when the distinct keys pass ``LOCAL_KEYS_MAX_BYTES`` or a
-    key type has no Arrow form. The frame executes once; the row limit
-    (at least 8 bytes a key) bounds what an oversized key set costs the
-    driver before the byte check sends it to the Spark planner."""
+    reason) for a key set the driver should not hold. The frame executes
+    once and what comes back is bounded in bytes before it is pulled:
+    at most ``LOCAL_KEYS_MAX_BYTES`` over the row width distinct rows,
+    where a fixed-width key counts its width and a string or binary key
+    ``LOCAL_KEY_MAX_WIDTH`` (+4 offset bytes). A longer key comes back
+    as null with a flag that sends the locate to the Spark planner, as
+    does a key type of no fixed width."""
     from pyspark.sql.pandas.types import to_arrow_type
 
     sel = frame.select(*cols)
+    wmax = spark_planner.LOCAL_KEY_MAX_WIDTH
+    width, var = 0, []
+    for f in sel.schema.fields:
+        try:
+            t = to_arrow_type(f.dataType)
+        except TypeError as e:  # an exotic key type: stay distributed
+            return None, f"keys have no Arrow form ({e})"
+        if pa.types.is_string(t) or pa.types.is_binary(t):
+            var.append(f.name)
+            width += wmax + 4
+        elif pa.types.is_primitive(t) or pa.types.is_decimal(t):
+            width += max(1, t.bit_width // 8)
+        else:
+            return None, f"{f.name}: {t} keys have no bounded width"
     cap = spark_planner.LOCAL_KEYS_MAX_BYTES
-    try:
-        for f in sel.schema.fields:
-            to_arrow_type(f.dataType)
-    except TypeError as e:  # an exotic key type: stay distributed
-        return None, f"keys have no Arrow form ({e})"
-    max_rows = cap // (8 * len(cols))
-    tbl = sel.distinct().limit(max_rows + 1).toArrow()
-    if tbl.num_rows > max_rows or tbl.nbytes > cap:
+    max_rows = cap // width
+    limited = sel.distinct().limit(max_rows + 1)
+    if var:
+        limited = limited.select(
+            *[
+                F.when(F.octet_length(c) <= wmax, F.col(c)).alias(c)
+                if c in var else F.col(c)
+                for c in cols
+            ],
+            F.greatest(
+                *[F.coalesce(F.octet_length(c) > wmax, F.lit(False)) for c in var],
+                F.lit(False),
+            ).alias(_WIDE_KEY),
+        )
+    tbl = limited.toArrow()
+    if tbl.num_rows > max_rows:
         return None, f"distinct keys over LOCAL_KEYS_MAX_BYTES {cap}"
+    if var and pc.any(tbl[_WIDE_KEY]).as_py():
+        return None, f"a key over LOCAL_KEY_MAX_WIDTH {wmax} bytes"
     return {c: pc.unique(tbl[c].drop_null()) for c in cols}, None
 
 

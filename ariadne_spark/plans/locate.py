@@ -60,12 +60,24 @@ RANGE_BBOX_THRESHOLD = 1_000
 BLOOM_PROBE_CAP = 2_000_000
 # The driver-side planner (plans/locate_local.py) serves a locate while
 # the index tables it reads (main table plus the queried columns' spill
-# tables) sum to at most LOCAL_INDEX_MAX_BYTES on disk, and a DataFrame
-# source's key projection is estimated at most LOCAL_KEYS_MAX_BYTES (its
-# distinct keys are then collected once, through Arrow). Above either
-# bound this module's distributed planner runs.
+# tables) sum to at most LOCAL_INDEX_MAX_BYTES on disk and a DataFrame
+# source's distinct keys fit LOCAL_KEYS_MAX_BYTES as Arrow (collected
+# once, a string/binary key counted at LOCAL_KEY_MAX_WIDTH bytes); above
+# either bound this module's distributed planner runs. The bounds cap
+# driver memory, not latency: tools/locate_crossover.py (4 vCPUs, 64
+# files of random int64 keys, regular index) found the driver-side
+# planner faster at every size it ran — 0.13 against 1.41 s at a 7.6 MB
+# index, 1.08 against 5.50 s at 122 MB; 1.0 against 5.0 s for 10k
+# DataFrame keys and 7.9 against 18.0 s for 4M, against the 122 MB
+# index — while its peak RSS grew ~3.5x the index's on-disk bytes (32
+# MB at 7.6 MB, 426 MB at 122 MB) and the keys took 8 B each (30.5 MB
+# for 4M). 64 MiB of index (~225 MB of RSS) and 32 MiB of keys (~4M
+# int64) keep one locate's added driver memory near a quarter GiB.
+# Charging a string key 256 B admits up to ~130k of them; a longer key
+# goes to the Spark planner uncollected.
 LOCAL_INDEX_MAX_BYTES = 64 << 20
 LOCAL_KEYS_MAX_BYTES = 32 << 20
+LOCAL_KEY_MAX_WIDTH = 256
 
 _VAL = "__ariadne_value"
 
@@ -154,11 +166,13 @@ def _probe_udf(hash_pairs):
     array ships to each executor once, not per task."""
     import numpy as np
     import pandas as pd
+    import pyarrow as pa
 
     pairs = np.asarray(hash_pairs, dtype=np.uint64).reshape(-1, 2)
 
     def probe(blobs: pd.Series) -> pd.Series:
-        return blobs.map(lambda b: bloomfn.might_contain_any(b, pairs))
+        arr = pa.Array.from_pandas(blobs, type=pa.binary())
+        return pd.Series(bloomfn.might_contain_many(arr, pairs), index=blobs.index)
 
     probe.__annotations__ = {"blobs": pd.Series, "return": pd.Series}
     return F.pandas_udf(probe, T.BooleanType())
@@ -365,6 +379,13 @@ def locate_files(
         if cfg is None:
             raise ColumnNotIndexedError(col)
         source = query[col] if isinstance(query, dict) else query
+        if cfg.stored_column not in index_df.columns:
+            # added but not yet backfilled by update(): no stored
+            # values, so the column constrains no file
+            stats.per_column[col] = {
+                "type": cfg.type, "skipped": True, "reason": "column not built yet",
+            }
+            continue
         if isinstance(source, Band):
             if cfg.type != RANGE:
                 raise ColumnNotIndexedError(

@@ -18,13 +18,16 @@ computes each queried column's verdict for every file at once with
   file (null array) is pre-filtered by its ``auto_bloom`` and then
   matched against its live rows in ``large_indexes/{col}`` — live only
   where the main row's array is null.
-* bloom: every file's filter probed with one hash of the query values.
+* bloom: every file's filter probed with one hash of the query values
+  (``functions.bloom.might_contain_many``).
 * range: value containment by a sorted search of the values; a
   ``Band`` by interval overlap.
 * temporal: the file holding the latest version of each value (max_ts
   desc nulls last, then filename asc) over in-row arrays and live spill
   rows; files with a null array and no live spill rows (orphans: empty
   files or a mid-backfill column) stay candidates.
+* a queried column with no stored values yet (added, not yet
+  backfilled by ``update()``) keeps every file.
 * AND-intersection across queried columns.
 
 The same scan yields each file's ``file_size`` and the index's
@@ -68,8 +71,6 @@ from .locate import Band, LocateStats
 ARRAY_TYPES = (REGULAR, COMPUTED, EXPLODED)
 # index types whose oversized per-file arrays spill to large_indexes/{col}
 SPILL_TYPES = ARRAY_TYPES + (TEMPORAL,)
-# elements per (files x values) position matrix in the bloom probe
-_PROBE_CELLS = 1 << 22
 
 
 @dataclass
@@ -283,45 +284,6 @@ def _rows_holding(lists: pa.Array, vals: pa.Array, n: int) -> np.ndarray:
     return out
 
 
-def bloom_maybe(blobs: pa.Array, pairs: np.ndarray) -> np.ndarray:
-    """Per row: may the row's serialized filter hold ANY of the hashed
-    values? All filters are probed together: their headers parse as one
-    gather, and each of the k hash rounds is one (files x values)
-    position matrix over the concatenated bit arrays. A null filter is
-    a must-read (True); an empty value set matches nothing."""
-    n = len(blobs)
-    out = np.zeros(n, dtype=bool)
-    valid = blobs.is_valid().to_numpy(zero_copy_only=False)
-    out[~valid] = True
-    rows = np.flatnonzero(valid)
-    if not len(rows) or not len(pairs):
-        return out
-    blobs = blobs.cast(pa.binary())
-    offs = np.frombuffer(blobs.buffers()[1], dtype=np.int32)[
-        blobs.offset : blobs.offset + n + 1
-    ]
-    data = np.frombuffer(blobs.buffers()[2], dtype=np.uint8)
-    start = offs[rows].astype(np.int64)
-    hdr = data[start[:, None] + np.arange(16)]  # magic | m u64 | k u32
-    m = hdr[:, 4:12].copy().view("<u8").ravel()
-    k = hdr[:, 12:16].copy().view("<u4").ravel().astype(np.int64)
-    bits0 = (start + 16).astype(np.uint64)
-    per = max(1, _PROBE_CELLS // len(rows))
-    hit = np.zeros(len(rows), dtype=bool)
-    for s in range(0, len(pairs), per):
-        h1 = pairs[s : s + per, 0][None, :]
-        h2 = pairs[s : s + per, 1][None, :]
-        alive = np.ones((len(rows), h1.shape[1]), dtype=bool)
-        for i in range(int(k.max())):
-            pos = (h1 + np.uint64(i) * h2) % m[:, None]
-            byte = data[(bits0[:, None] + (pos >> np.uint64(3))).astype(np.int64)]
-            bit = (byte >> (pos & np.uint64(7)).astype(np.uint8)) & np.uint8(1)
-            alive &= (bit == 1) | (i >= k)[:, None]
-        hit |= alive.any(axis=1)
-    out[rows] = hit
-    return out
-
-
 def _fields(arr: pa.StructArray) -> dict[str, pa.Array]:
     """Struct fields with the parent's nulls merged in."""
     return {f.name: a for f, a in zip(arr.type, arr.flatten())}
@@ -418,27 +380,25 @@ class LocalIndex:
             zero_copy_only=False
         )
 
-    def _array_verdict(self, cfg: IndexConfig, vals: pa.Array) -> np.ndarray:
-        arr = self._col(cfg.stored_column)
-        if arr is None:
-            return np.zeros(self.n, dtype=bool)
+    def _array_verdict(
+        self, cfg: IndexConfig, arr: pa.Array, vals: pa.Array
+    ) -> np.ndarray:
         out = _rows_holding(arr, vals, self.n)
         spilled = arr.is_null().to_numpy(zero_copy_only=False)
         if spilled.any():
             blobs = self._col(f"auto_bloom_{cfg.column}")
             if blobs is not None:
                 pairs = bloomfn.hash_values(python_values(cfg, vals))
-                spilled &= bloom_maybe(blobs, pairs)
+                spilled &= bloomfn.might_contain_many(blobs, pairs)
             large = self._spill(cfg.column, spilled, ["filename", "value"])
             if large.num_rows:
                 hit = pc.is_in(large["value"], value_set=vals.cast(large["value"].type))
                 out[self._row_of(large["filename"].filter(hit))] = True
         return out
 
-    def _temporal_verdict(self, cfg: IndexConfig, vals: pa.Array) -> np.ndarray:
-        arr = self._col(cfg.stored_column)
-        if arr is None:  # column never built: every file an orphan
-            return np.ones(self.n, dtype=bool)
+    def _temporal_verdict(
+        self, cfg: IndexConfig, arr: pa.Array, vals: pa.Array
+    ) -> np.ndarray:
         flat = pc.list_flatten(arr)
         fields = _fields(flat)
         value, ts = fields["value"], fields["max_ts"]
@@ -476,16 +436,19 @@ class LocalIndex:
         Band) on ``col``?"""
         cfg = self.meta.config_for(col)
         rec = stats.per_column[col]
+        stored = self._col(cfg.stored_column)
+        if stored is None:
+            # added but not yet backfilled by update(): no stored
+            # values, so the column constrains no file
+            rec.update(skipped=True, reason="column not built yet")
+            return np.ones(self.n, dtype=bool)
         if isinstance(q, Band):
-            rng = self._col(cfg.stored_column)
-            if rng is None:
-                return np.ones(self.n, dtype=bool)
-            return _band_overlaps(rng, q)
+            return _band_overlaps(stored, q)
         if not len(q):
             rec["empty_values"] = True
             return np.zeros(self.n, dtype=bool)
         if cfg.type in ARRAY_TYPES:
-            return self._array_verdict(cfg, q)
+            return self._array_verdict(cfg, stored, q)
         if cfg.type == BLOOM:
             cap = spark_planner.BLOOM_PROBE_CAP
             if len(q) > cap:  # the Spark planner's driver-memory guard
@@ -493,16 +456,10 @@ class LocalIndex:
                 return np.ones(self.n, dtype=bool)
             pairs = bloomfn.hash_values(python_values(cfg, q))
             rec.update(bloom_keys=len(pairs), fpr=cfg.fpr or 0.01)
-            blobs = self._col(cfg.stored_column)
-            if blobs is None:
-                return np.ones(self.n, dtype=bool)
-            return bloom_maybe(blobs, pairs)
+            return bloomfn.might_contain_many(stored, pairs)
         if cfg.type == RANGE:
-            rng = self._col(cfg.stored_column)
-            if rng is None:
-                return np.zeros(self.n, dtype=bool)
-            return _range_holding(rng, q)
-        return self._temporal_verdict(cfg, q)
+            return _range_holding(stored, q)
+        return self._temporal_verdict(cfg, stored, q)
 
     def locate(self, query: dict, stats: LocateStats) -> list[str]:
         """Candidate filenames for ``query`` ({col: typed values |

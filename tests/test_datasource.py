@@ -397,3 +397,64 @@ def test_date_index_refuses_day_numbers(spark, storage, tmp_path, orders_files):
     assert idx.locate_files({"o_orderdate": [day.isoformat()]}) == [normalize_path(files[0])]
     with pytest.raises(TypeError):
         idx.locate_files({"o_orderdate": [(day - datetime.date(1970, 1, 1)).days]})
+
+
+def test_unbuilt_index_column_keeps_every_file(spark, typed_orders):
+    """Between ``add_index`` and the ``update()`` that backfills it a
+    column has no stored values: a locate on it must keep every file,
+    never select none, in both planners."""
+    df, files, idx = typed_orders
+    idx.add_index("o_orderstatus").add_range_index("o_orderdate")
+    idx.add_computed_index("o_prio", "substring(o_orderpriority, 1, 1)")
+    every = sorted(idx.filelist.filenames())
+    for q in (
+        {"o_orderstatus": ["F"]},
+        {"o_orderdate": [df.first()["o_orderdate"]]},
+        {"o_prio": ["1"]},
+        {"o_orderstatus": ["F"], "o_custkey": [df.first()["o_custkey"]]},
+    ):
+        files = _assert_parity(idx, q)
+        if "o_custkey" not in q:
+            assert files == every, q
+    files = sorted(idx.locate_files({"o_orderstatus": ["F"]}))
+    assert files == every
+    assert_same_rows(
+        idx.read_matching({"o_orderstatus": ["F"]}).select(*df.columns),
+        df.where(F.col("o_orderstatus") == "F"),
+    )
+    idx.update()
+    assert_same_rows(
+        idx.read_matching({"o_orderstatus": ["F"]}).select(*df.columns),
+        df.where(F.col("o_orderstatus") == "F"),
+    )
+
+
+def test_wide_string_keys_go_to_spark_planner_uncollected(spark, storage, orders_files, monkeypatch):
+    """A string key longer than LOCAL_KEY_MAX_WIDTH sends the locate to
+    the Spark planner, and the key collect never brings it to the
+    driver: what the collect may return is bounded in bytes."""
+    from ariadne_spark.plans import locate as spark_planner
+
+    df, files = orders_files
+    DataFrame = type(df)
+    idx = Index.for_name("o_orderpriority", schema=df.schema, format="parquet", spark=spark)
+    idx.add_index("o_orderpriority").add_files(files).update()
+    prio = df.first()["o_orderpriority"]
+    wide = "w" * (spark_planner.LOCAL_KEY_MAX_WIDTH + 1)
+    pulled = []
+    to_arrow = DataFrame.toArrow
+    monkeypatch.setattr(
+        DataFrame, "toArrow", lambda self: pulled.append(to_arrow(self)) or pulled[-1]
+    )
+    keys = _keys_frame(spark, "o_orderpriority", [prio, wide], "string")
+    files = idx.locate_files(keys, ["o_orderpriority"])
+    st = idx._last_locate_stats
+    assert st.planner == "spark" and "LOCAL_KEY_MAX_WIDTH" in st.planner_reason
+    assert sorted(files) == sorted(idx.locate_files({"o_orderpriority": [prio]}))
+    assert pulled and all(
+        wide not in t.column("o_orderpriority").to_pylist() for t in pulled
+    )
+    # keys within the width stay on the driver-side planner
+    narrow = _keys_frame(spark, "o_orderpriority", [prio], "string")
+    assert idx.locate_files(narrow, ["o_orderpriority"])
+    assert idx._last_locate_stats.planner == "local"

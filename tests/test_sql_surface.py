@@ -926,3 +926,19 @@ def test_sql_date_literal_join_prunes_to_matching_files(spark, storage, orders_f
         assert col in r["probed_columns"]
         assert r["files_selected"] == len(holding), (col, r)
         assert r["planner"] == "local"
+
+
+def test_sql_where_on_unbuilt_index_column_reads_every_file(spark, orders_view):
+    """A column added with ``add_index`` but not yet backfilled by
+    ``update()`` constrains no file: the rewritten query keeps the full
+    answer, before and after the backfill."""
+    df = orders_view
+    idx = Index.for_name("orders_sql", spark=spark)
+    idx.add_index("o_orderstatus")
+    every = sorted(idx.filelist.filenames())
+    assert sorted(idx.locate_files({"o_orderstatus": ["F"]})) == every
+    q = "SELECT o_orderkey, o_orderstatus FROM orders_sql WHERE o_orderstatus = 'F'"
+    want = df.where(F.col("o_orderstatus") == "F").select("o_orderkey", "o_orderstatus")
+    assert_same_rows(surface.sql(q, spark), want)
+    idx.update()
+    assert_same_rows(surface.sql(q, spark), want)
