@@ -61,10 +61,6 @@ class ColumnNotIndexedError(AriadneError):
     """Join/locate requested on a column with no index."""
 
 
-class FileNotRegisteredError(AriadneError):
-    """Operation referenced a file that is not in the FileList."""
-
-
 class LockAcquisitionError(AriadneError):
     """Could not acquire the index lock within lockMaxWait."""
 

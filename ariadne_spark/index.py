@@ -101,9 +101,10 @@ def _locate(
     ``operators.dedup`` and the Data Source.
 
     ``query`` is a DataFrame of join keys (its ``columns``) or a dict
-    {column: literal values | Band | DataFrame}. Literal values are
-    first cast to the indexed column's type (``TypeError`` for a value
-    that cannot be cast). The driver-side planner
+    {column: literal values | Band | DataFrame | Arrow array}. Literal
+    values, a list or an Arrow array alike, are first de-duplicated,
+    null-dropped and cast to the indexed column's type (``TypeError``
+    for a value that cannot be cast). The driver-side planner
     (plans/locate_local.py) then runs when the index tables the query
     reads stay under ``LOCAL_INDEX_MAX_BYTES`` and each DataFrame
     source's keys under ``LOCAL_KEYS_MAX_BYTES`` (collected once, as
@@ -176,7 +177,7 @@ def _locate(
             }
             if not isinstance(src, DataFrame):
                 if not isinstance(src, Band):
-                    rec["n_values"] = len({v for v in src if v is not None})
+                    rec["n_values"] = len(typed[col])
                 plan[col] = typed[col]
             elif (
                 cfg.type == BLOOM
@@ -684,14 +685,7 @@ class Index:
         error). String ranges may be wider than scan-built (parquet
         truncates string stats) — pruning-safe, never lossy."""
         conf = self.conf
-        lock = IndexLock(
-            self.paths.locks,
-            "update",
-            timeout=conf.lock_timeout,
-            retry_interval=conf.lock_retry_interval,
-            max_wait=conf.lock_max_wait,
-            fs=self.fs,
-        )
+        lock = self._update_lock(conf)
         with lock, lock.heartbeat():
             # pending fast path (see add_files): when the only writes
             # since the last verified-synced update are this handle's
@@ -798,25 +792,117 @@ class Index:
                     self._invalidate()
                 finally:
                     rows.unpersist()
-                self.meta.batches_since_compact += 1
-                lock.refresh()
-                if (
-                    self.meta.batches_since_compact
-                    >= conf.staging_consolidation_threshold
-                ):
-                    self._compact_tables()
-                    self.meta.batches_since_compact = 0
-            self.meta.update_count += 1
-            self._refresh_size_accounting()
-            if (
-                conf.auto_compact_threshold is not None
-                and self.meta.batches_since_compact >= conf.auto_compact_threshold
-            ):
-                self._compact_tables()
-                self.meta.batches_since_compact = 0
-            save_metadata(self.paths.metadata, self.meta, fs=self.fs)
-            self._mark_synced(fp[0])
+                self._batch_committed(conf, lock)
+            self._finish_update(conf, fp[0])
         return self
+
+    def _update_lock(self, conf) -> IndexLock:
+        return IndexLock(
+            self.paths.locks,
+            "update",
+            timeout=conf.lock_timeout,
+            retry_interval=conf.lock_retry_interval,
+            max_wait=conf.lock_max_wait,
+            fs=self.fs,
+        )
+
+    def _batch_committed(self, conf, lock) -> None:
+        """Bookkeeping after one batch's index rows commit: count it,
+        and consolidate once ``stagingConsolidationThreshold`` batches
+        have accumulated."""
+        self.meta.batches_since_compact += 1
+        lock.refresh()
+        if self.meta.batches_since_compact >= conf.staging_consolidation_threshold:
+            self._compact_tables()
+            self.meta.batches_since_compact = 0
+
+    def _finish_update(self, conf, filelist_version: int | None) -> None:
+        """The tail of every update: size accounting, auto-compaction,
+        the metadata save and the synced fingerprint."""
+        self.meta.update_count += 1
+        self._refresh_size_accounting()
+        if (
+            conf.auto_compact_threshold is not None
+            and self.meta.batches_since_compact >= conf.auto_compact_threshold
+        ):
+            self._compact_tables()
+            self.meta.batches_since_compact = 0
+        save_metadata(self.paths.metadata, self.meta, fs=self.fs)
+        self._mark_synced(filelist_version)
+
+    def write_through(self, path: str, values: dict) -> bool:
+        """Register ``path`` and commit its index row from values the
+        caller already holds, with no Spark job — the write-through of a
+        pipeline store whose writer knows each new file's keys
+        (``operators.dedup``). ``values`` maps each configured column
+        to an Arrow array of the file's values.
+
+        It runs when the index is on local storage, every configured
+        index is a bloom over integer or string values, every bloom
+        has at least one value, and the stored table already carries
+        every bloom column; otherwise it commits nothing and returns
+        False, and ``update()`` builds the row through Spark. The row
+        is the one ``update()`` builds, byte for byte: ``(filename,
+        file_size, bloom_<column> = bloom.build(distinct values,
+        fpr))``. Under the update lock the FileList commits first and
+        the index row second, so a crash between the two leaves the
+        file registered and reported by ``unindexed_files()``, which
+        the next ``update()`` builds. A handle synced before the call
+        stays synced."""
+        from .functions import bloom as bloomfn
+        from .storage.fs import batch_sizes
+
+        cfgs = self.meta.indexes
+        if not (
+            isinstance(self.fs, PosixFS)
+            and cfgs
+            and all(c.type == BLOOM and c.column in values for c in cfgs)
+        ):
+            return False
+        keys = {c.column: pc.unique(values[c.column].drop_null()) for c in cfgs}
+        if not all(
+            len(k) and (pa.types.is_integer(k.type) or pa.types.is_string(k.type))
+            for k in keys.values()
+        ):
+            return False
+        segs = local_planner.segments(self.paths.index)
+        stored = {f["name"] for s in segs or [] for f in (s.schema or {}).get("fields", [])}
+        if segs and not {c.stored_column for c in cfgs} <= stored:
+            return False  # a column backfill is due: update() runs it
+        name = normalize_path(path)
+        blooms = [
+            bloomfn.build(keys[c.column].to_pylist(), c.fpr or 0.01) for c in cfgs
+        ]
+        row = pa.Table.from_arrays(
+            [
+                pa.array([name], pa.string()),
+                pa.array(batch_sizes(self.spark, [name]), pa.int64()),
+                *[pa.array([b], pa.binary()) for b in blooms],
+            ],
+            schema=pa.schema(
+                [
+                    pa.field("filename", pa.string(), nullable=False),
+                    pa.field("file_size", pa.int64(), nullable=False),
+                    *[pa.field(c.stored_column, pa.binary()) for c in cfgs],
+                ]
+            ),
+        )
+        conf = self.conf
+        lock = self._update_lock(conf)
+        with lock, lock.heartbeat():
+            fp = self._tables_fingerprint()
+            synced = fp == getattr(self, "_synced_fingerprint", None)
+            self.filelist.add([name])
+            added = self.filelist.table._latest_version()
+            self.table.append(row)
+            self._invalidate()
+            self._batch_committed(conf, lock)
+            # synced before, and the only FileList commit since is this
+            # one: the FileList is the synced set plus ``name``
+            self._finish_update(
+                conf, added if synced and added == (fp[0] or 0) + 1 else None
+            )
+        return True
 
     def _mark_synced(self, filelist_version: int | None) -> None:
         """Record the synced fingerprint (taken AFTER all appends and
@@ -1156,7 +1242,20 @@ class Index:
         the same counter for its pruning metrics and size reporting —
         metadata v9's total_indexed_file_size). Recomputed exactly from
         the index table: one tiny aggregation beats incremental
-        bookkeeping that can drift."""
+        bookkeeping that can drift. A local index sums driver-side."""
+        if isinstance(self.fs, PosixFS):
+            # a local index sums its live file_size column with pyarrow
+            live = local_planner.read_live(
+                local_planner.segments(self.paths.index) or [],
+                ["filename", "file_size"],
+            )
+            total = (
+                pc.sum(live["file_size"]).as_py()
+                if "file_size" in live.column_names
+                else 0
+            )
+            self.meta.total_indexed_bytes = int(total or 0)
+            return
         # column-pruned replace-per-key read: the default plan packs
         # every index column into the max_by struct, so this one SUM
         # would otherwise rescan every bloom blob and value array

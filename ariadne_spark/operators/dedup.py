@@ -144,8 +144,10 @@ def minhash_signatures_fast(
     df = _ensure_parallelism(df)
     arr = _minhash_fast_udf(num_hashes, shingle_len)(F.col(text_col))
     sig = df.select(F.col(id_col).alias("__id"), arr.alias("__sig"))
-    cols = [F.element_at("__sig", i + 1).alias(f"h{i}") for i in range(num_hashes)]
-    return sig.select("__id", *cols)
+    # one SQL projection: a Column per hash costs a py4j round trip each
+    return sig.selectExpr(
+        "__id", *[f"__sig[{i}] AS h{i}" for i in range(num_hashes)]
+    )
 
 
 def band_projection(
@@ -158,13 +160,12 @@ def band_projection(
     rows_per_band = num_hashes // bands
     band_structs = []
     for b in range(bands):
-        cols = [F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)]
-        band_structs.append(
-            F.struct(F.lit(b).alias("band"), F.xxhash64(*cols).alias("sig"))
-        )
-    return signatures.select(
-        F.col("__id"), F.explode(F.array(*band_structs)).alias("b")
-    ).select("__id", F.col("b.band").alias("band"), F.col("b.sig").alias("sig"))
+        cols = ", ".join(f"h{b * rows_per_band + r}" for r in range(rows_per_band))
+        band_structs.append(f"named_struct('band', {b}, 'sig', xxhash64({cols}))")
+    # one SQL expression (per-Column builders cost a py4j round trip each)
+    return signatures.selectExpr(
+        "__id", f"explode(array({', '.join(band_structs)})) AS b"
+    ).selectExpr("__id", "b.band AS band", "b.sig AS sig")
 
 
 def lsh_candidate_pairs(
@@ -716,21 +717,58 @@ def _snapshot_files(spark, store_path: str, kind: str) -> list[str]:
     return sorted(fs.list_files(store_path, suffix=".parquet"))
 
 
-def _snapshot_read(
-    spark, files: list[str], merge_schema: bool = False
-) -> DataFrame | None:
+def _snapshot_read(spark, files: list[str], schema=None) -> DataFrame | None:
     """Read an explicit part-file list. Pinning the plan to files
     (directories are append-mutable; written part files are immutable)
     makes lazy downstream results recompute-safe across the caller's
     own subsequent append — a cache eviction or executor loss re-reads
     exactly the pre-append history instead of counting the batch
-    against itself."""
+    against itself. With ``schema`` the read runs no footer-inference
+    job; a column a file lacks reads as null."""
     if not files:
         return None
     reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
+    if schema is not None:
+        reader = reader.schema(schema)
     return reader.parquet(*files)
+
+
+def _footer_id_type(path: str):
+    """``__id``'s Spark type from one local part file's footer, read
+    with pyarrow (no Spark job); None for a remote path."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    from ..storage.fs import scheme_of, strip_file_scheme
+
+    if scheme_of(path) not in (None, "file"):
+        return None
+    return from_arrow_type(
+        pq.read_schema(strip_file_scheme(path)).field("__id").type
+    )
+
+
+def _signature_schema(id_type, num_hashes: int):
+    from pyspark.sql import types as T
+
+    return T.StructType(
+        [T.StructField("__id", id_type)]
+        + [T.StructField(f"h{i}", T.LongType()) for i in range(num_hashes)]
+        + [T.StructField("__seq", T.LongType())]
+    )
+
+
+def _read_signature_history(spark, files: list[str], num_hashes: int):
+    """The pinned history files with the store's explicit schema —
+    ``__id`` typed from one local footer, ``h0..h{k-1}`` and ``__seq``
+    long, so a batch appended before the ``__seq`` stamp existed reads
+    it as null. A remote store merges the footers' schemas instead."""
+    if not files:
+        return None
+    id_type = _footer_id_type(files[0])
+    if id_type is None:
+        return spark.read.option("mergeSchema", "true").parquet(*files)
+    return _snapshot_read(spark, files, _signature_schema(id_type, num_hashes))
 
 
 def _read_signature_store(spark, store_path: str) -> DataFrame:
@@ -898,6 +936,14 @@ def incremental_near_dup(
     rows); ONE equi-join on (band, band-hash) — history rows without a
     banding collision are never widened. With ``update_store`` the new
     signatures are appended for the next batch.
+
+    Write-through: with ``update_store`` and a local ``store_index``
+    whose batch band keys fit ``LOCAL_KEYS_MAX_BYTES`` and number at
+    most ``WRITE_THROUGH_MAX_KEYS``, the append is one part file and ``Index.write_through`` commits its FileList and
+    bloom rows from the keys the locate already collected — the next
+    :func:`signature_store_index` refresh with the same handle is then
+    a no-op that runs no Spark job. Otherwise that refresh folds the
+    append in through Spark.
     """
     spark = new_docs.sparkSession
     # release the previous call's materialized result (kept cached so
@@ -935,24 +981,29 @@ def incremental_near_dup(
                 "(signature_store_index defaults must match the "
                 "incremental_near_dup call's)"
             )
-    hist_files = _snapshot_files(spark, store_path, "signature")
-    if store_index is not None and hist_files:
+    listing = hist_files = _snapshot_files(spark, store_path, "signature")
+    keys = None
+    if store_index is not None and (hist_files or update_store):
         # engine-over-pipeline-store (see signature_store_index): only
         # files whose band-key bloom may contain one of the batch's
         # band keys are read — a novel batch's history read is ~zero
         # files instead of the whole store. Files the index hasn't
         # seen (e.g. this loop's own earlier appends before the next
         # index refresh) are ALWAYS read, so a lagging index widens
-        # the scan, never loses a collision.
+        # the scan, never loses a collision. The keys are collected
+        # once, for this locate and the write-through of the append.
         probe = (
             band_projection(new_sigs, num_hashes, bands)
             .select(F.col("sig").alias("band_key"))
             .distinct()
         )
-        hist_files = _prune_snapshot_with_index(
-            spark, hist_files, store_index, probe, column="band_key"
-        )
-    old_sigs = _snapshot_read(spark, hist_files, merge_schema=True)
+        keys = _local_keys(store_index, probe, "band_key", update_store)
+        if hist_files:
+            hist_files = _prune_snapshot_with_index(
+                spark, hist_files, store_index,
+                probe if keys is None else keys, column="band_key",
+            )
+    old_sigs = _read_signature_history(spark, hist_files, num_hashes)
     if old_sigs is not None:
         old_sigs = old_sigs.drop("__seq")
         # re-crawled ids: the NEW signature supersedes the stored one
@@ -982,9 +1033,11 @@ def incremental_near_dup(
         )
         .distinct()
     )
-    agree = sum(
-        F.when(F.col(f"l.h{i}") == F.col(f"r.h{i}"), 1).otherwise(0)
-        for i in range(num_hashes)
+    agree = F.expr(
+        " + ".join(
+            f"CASE WHEN l.h{i} = r.h{i} THEN 1 ELSE 0 END"
+            for i in range(num_hashes)
+        )
     )
     l, r = all_sigs.alias("l"), all_sigs.alias("r")
     out = (
@@ -999,7 +1052,10 @@ def incremental_near_dup(
         # safe to append before the caller consumes `out`: the history
         # side is snapshot-pinned, so even a post-append recompute of
         # the lazy plan band-joins against exactly the pre-append store
-        signature_store_write(new_sigs, store_path, mode="append")
+        _append_indexed(
+            spark, store_path, "signature", listing, signature_store_write,
+            new_sigs, store_index, "band_key", keys,
+        )
     # out is still lazy: new_sigs must stay cached until the caller's
     # first action (it feeds three subtrees), so release it with the
     # result on the NEXT call
@@ -1221,7 +1277,11 @@ def _bloom_store_index(
     to reuse an open Index across micro-batches (saves a metadata
     reload per batch). ``files``, when given, must be the store's
     FULL current listing: indexed files absent from it are treated as
-    compacted-away and dropped from the index."""
+    compacted-away and dropped from the index.
+
+    A handle whose remembered listing matches the store returns at
+    once, with no Spark job — the state a write-through append
+    (``_append_indexed``) leaves behind."""
     from ..index import Index
 
     idx = handle
@@ -1276,7 +1336,14 @@ def _bloom_store_index(
     return idx
 
 
-def window_store_index(spark, store_path: str, name: str, fpr: float = 0.01):
+def window_store_index(
+    spark,
+    store_path: str,
+    name: str,
+    fpr: float = 0.01,
+    files: list[str] | None = None,
+    handle=None,
+):
     """Maintain a bloom file-index over the window-count store — the
     engine's own file-level pruning applied to the pipeline's history
     store. Call after appends (or from the compaction window): only
@@ -1285,7 +1352,9 @@ def window_store_index(spark, store_path: str, name: str, fpr: float = 0.01):
     files. At production ratios (small batch vs deep history) the
     per-batch history read then touches only store files whose bloom
     may contain a batch digest — pass the returned index to
-    :func:`incremental_substring_dedup` as ``store_index``."""
+    :func:`incremental_substring_dedup` as ``store_index``. ``files``
+    and ``handle`` are :func:`signature_store_index`'s: with the handle
+    an append that wrote through makes the refresh a no-op."""
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -1295,7 +1364,8 @@ def window_store_index(spark, store_path: str, name: str, fpr: float = 0.01):
         ]
     )
     return _bloom_store_index(
-        spark, store_path, name, schema, "__wk", "window", fpr
+        spark, store_path, name, schema, "__wk", "window", fpr,
+        files=files, handle=handle,
     )
 
 
@@ -1329,18 +1399,16 @@ def signature_store_index(
     ``bands x batch_docs`` distinct keys and a file survives on ANY
     hit, so the false-file rate is ~K*fpr per file — the default 1e-6
     keeps it ~4% for a 5k-doc batch (same sizing rule as
-    :func:`~ariadne_spark.streaming.maintenance.url_ledger_index`)."""
-    from pyspark.sql import types as T
+    :func:`~ariadne_spark.streaming.maintenance.url_ledger_index`).
 
+    After an :func:`incremental_near_dup` append that wrote through
+    (see its docstring), the refresh with the same ``handle`` is a
+    no-op: the store listing already matches, and no Spark job runs."""
     schema = None
     if handle is None:
         # only the cold path needs the schema (a reused handle never
         # touches it) — don't pay the store footer read per micro-batch
-        schema = T.StructType(
-            [T.StructField("__id", _store_id_type(spark, store_path))]
-            + [T.StructField(f"h{i}", T.LongType()) for i in range(num_hashes)]
-            + [T.StructField("__seq", T.LongType())]
-        )
+        schema = _signature_schema(_store_id_type(spark, store_path), num_hashes)
     return _bloom_store_index(
         spark, store_path, name, schema, "band_key", "signature", fpr,
         files=files, handle=handle,
@@ -1364,16 +1432,19 @@ def _band_key_expression(num_hashes: int, bands: int) -> str:
 
 def _store_id_type(spark, store_path: str):
     """The signature store's ``__id`` type (corpus-dependent: long ids,
-    string urls, ...) — one footer-sampled schema read."""
-    return spark.read.parquet(store_path).schema["__id"].dataType
+    string urls, ...) — one local footer read with pyarrow, or a
+    footer-sampled Spark schema read for a remote store."""
+    files = _snapshot_files(spark, store_path, "signature")
+    t = _footer_id_type(files[0]) if files else None
+    return t or spark.read.parquet(store_path).schema["__id"].dataType
 
 
 def _prune_snapshot_with_index(
-    spark, files: list[str], store_index, keys: DataFrame,
-    column: str = "__wk",
+    spark, files: list[str], store_index, keys, column: str = "__wk",
 ) -> list[str]:
     """Drop snapshot files the index POSITIVELY vouches cannot contain
-    any of ``keys``. Files the index does not know (an append newer
+    any of ``keys`` (a DataFrame of keys, or distinct keys already
+    collected as Arrow). Files the index does not know (an append newer
     than the last ``window_store_index`` call, or any listing drift)
     are kept unconditionally — pruning can only ever remove files the
     bloom has seen, so an out-of-date index degrades to a larger scan,
@@ -1381,12 +1452,73 @@ def _prune_snapshot_with_index(
     from ..sources.files import normalize_path
 
     indexed = set(store_index.filelist.filenames())
-    cand = set(store_index.locate_files(keys, columns=[column]))
+    if isinstance(keys, DataFrame):
+        cand = set(store_index.locate_files(keys, columns=[column]))
+    else:
+        cand = set(store_index.locate_files({column: keys}))
     return [
         f
         for f in files
         if normalize_path(f) not in indexed or normalize_path(f) in cand
     ]
+
+
+def _local_keys(store_index, keys: DataFrame, column: str, update_store: bool):
+    """The batch's distinct ``column`` keys as Arrow, collected once for
+    the store locate and the write-through commit. None (the locate then
+    takes the frame, as it always did) when the index is not local, the
+    keys pass ``LOCAL_KEYS_MAX_BYTES``, or only the locate would use
+    them and its ``minBloomPruneBytes`` floor skips that probe."""
+    from ..index import _collect_keys
+    from ..storage.fs import PosixFS
+
+    if not isinstance(store_index.fs, PosixFS):
+        return None
+    floor = store_index.conf.min_bloom_prune_bytes
+    if not update_store and floor and store_index.meta.total_indexed_bytes < floor:
+        return None
+    got, _reason = _collect_keys(keys, [column])
+    return None if got is None else got[column]
+
+
+# Distinct batch keys up to which a store append writes through: one
+# part file (a single write task) plus a driver-side bloom build. Above
+# it the append writes in parallel and the next refresh builds through
+# Spark. tools/write_through_crossover.py (4 vCPUs) found write-through
+# no slower per batch from 8,000 keys up to 2,048,000 (256k documents x
+# 8 bands: 41.1 s against 43.7 s, its driver bloom build 3.3 s), the
+# largest size it ran; nothing above that is measured, so the bound
+# stops there rather than at LOCAL_KEYS_MAX_BYTES (~4M long keys).
+WRITE_THROUGH_MAX_KEYS = 2_048_000
+
+
+def _append_indexed(
+    spark, store_path: str, kind: str, listing: list[str], write,
+    frame: DataFrame, store_index, column: str, keys,
+) -> None:
+    """Append ``frame`` to the store with ``write``; with the batch's
+    ``keys`` in hand and at most ``WRITE_THROUGH_MAX_KEYS`` of them,
+    write it as ONE part file, so its key set is exactly ``keys``, and
+    commit that file's index row driver-side
+    (``Index.write_through``). ``listing`` is the store's part files
+    before the append: when the handle's remembered listing equals it,
+    the new file joins that listing and the next
+    ``_bloom_store_index`` refresh returns at its fast path. An append
+    that does not yield exactly one new file, or an index the
+    write-through does not cover, is left to that refresh, which folds
+    it in through Spark."""
+    if keys is None or not 0 < len(keys) <= WRITE_THROUGH_MAX_KEYS:
+        write(frame, store_path, mode="append")
+        return
+    write(frame.coalesce(1), store_path, mode="append")
+    new = sorted(set(_snapshot_files(spark, store_path, kind)) - set(listing))
+    if len(new) != 1 or not store_index.write_through(new[0], {column: keys}):
+        return
+    from ..sources.files import normalize_path
+
+    seen = getattr(store_index, "_ariadne_store_listing", None)
+    if seen == {normalize_path(f) for f in listing}:
+        store_index._ariadne_store_listing = seen | {normalize_path(new[0])}
 
 
 def incremental_substring_dedup(
@@ -1429,7 +1561,9 @@ def incremental_substring_dedup(
     relative to history (files the index hasn't seen yet are read
     unconditionally, so a lagging index can only widen the scan,
     never miss history). Appending the batch's counts is one columnar
-    write.
+    write; with a local ``store_index`` it is one part file whose
+    index row commits in the same step (write-through, as in
+    :func:`incremental_near_dup`).
     """
     _validate_window_params(k, min_count)
     spark = new_docs.sparkSession
@@ -1451,11 +1585,16 @@ def incremental_substring_dedup(
     # pinned to the store's CURRENT part files so that a recompute of
     # the (lazy) result after this call's own append — cache eviction,
     # executor loss — cannot see the batch's own counts as history.
-    hist_files = _snapshot_files(spark, store_path, "window")
-    if hist_files and store_index is not None:
-        hist_files = _prune_snapshot_with_index(
-            spark, hist_files, store_index, batch_counts.select("__wk")
-        )
+    listing = hist_files = _snapshot_files(spark, store_path, "window")
+    keys = None
+    if store_index is not None and (hist_files or update_store):
+        digests = batch_counts.select("__wk")
+        keys = _local_keys(store_index, digests, "__wk", update_store)
+        if hist_files:
+            hist_files = _prune_snapshot_with_index(
+                spark, hist_files, store_index,
+                digests if keys is None else keys,
+            )
     hist = _snapshot_read(spark, hist_files)
     if hist is not None:
         hist_counts = (
@@ -1480,7 +1619,10 @@ def incremental_substring_dedup(
         # safe to append before the caller consumes `out`: the history
         # side is snapshot-pinned, so even a post-append recompute of
         # the lazy plan reads exactly the pre-append store
-        window_store_write(batch_counts, store_path, mode="append")
+        _append_indexed(
+            spark, store_path, "window", listing, window_store_write,
+            batch_counts, store_index, "__wk", keys,
+        )
     # out is still lazy: the aggregated counts feed three subtrees
     # (duplicate test, history digest probe, store append), so the
     # cache must survive until the caller's first action — release it

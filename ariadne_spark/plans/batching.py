@@ -16,16 +16,17 @@ an upper-ish estimate is fine because the budget only controls
 batching, not correctness.
 
 Footer rule (``fits_one_batch``): a scalar column holds at most one
-distinct value per row, so when every counted index is scalar and the
-parquet footers' ``num_rows`` summed over the files is below the
-budget, the files form one batch by construction — and, the sum
-being below the budget, no file reaches ``largeIndexLimit`` distinct
+distinct value per row, and a fixed-length ``array(e1, ..., en)``
+expression bloom at most n, so when the parquet footers' ``num_rows``
+summed over the files, times that per-row bound, is below the budget,
+the files form one batch by construction — and, the product being
+below the budget, no file reaches ``largeIndexLimit`` distinct
 values, so ``Index.update`` skips the spill-size job. That rule reads
 only the footers, on the driver with pyarrow (no Spark job), and
-needs local parquet paths; anything else — array-shaped indexes
-(exploded aliases, array-expression blooms), other formats, remote
-paths, an unreadable footer or a sum over the budget — runs the HLL
-analysis and the packing.
+needs local parquet paths; anything else — other array-shaped indexes
+(exploded aliases, array expressions of no fixed length), other
+formats, remote paths, an unreadable footer or a product over the
+budget — runs the HLL analysis and the packing.
 """
 
 from __future__ import annotations
@@ -66,14 +67,15 @@ def fits_one_batch(
     if meta.format != "parquet":
         return False
     # resolve virtual-column types on an empty frame: analysis only
-    df = apply_virtual_columns(
-        read_base(spark, [], meta.format, meta.schema), configs
-    )
-    if any(
-        isinstance(df.schema[cfg.column].dataType, T.ArrayType)
-        for cfg in _counted(configs)
-    ):
-        return False
+    base = read_base(spark, [], meta.format, meta.schema)
+    df = apply_virtual_columns(base, configs)
+    per_row = 1
+    for cfg in _counted(configs):
+        if isinstance(df.schema[cfg.column].dataType, T.ArrayType):
+            n = _array_length(base, cfg)
+            if n is None:
+                return False
+            per_row = max(per_row, n)
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -86,9 +88,26 @@ def fits_one_batch(
             rows += pq.read_metadata(path).num_rows
         except (OSError, pa.ArrowException):
             return False
-        if rows >= budget:  # spills start AT the limit (build.py)
+        if rows * per_row >= budget:  # spills start AT the limit (build.py)
             return False
     return True
+
+
+def _array_length(base, cfg: IndexConfig) -> int | None:
+    """The element count of an expression bloom whose analyzed
+    expression is a fixed-length ``array(e1, ..., en)`` (a Catalyst
+    ``CreateArray``): each row adds at most n distinct elements. None
+    for any other array-valued index, which keeps the HLL analysis."""
+    if cfg.type != BLOOM or cfg.expression is None:
+        return None
+    try:
+        plan = base.select(F.expr(cfg.expression).alias("__n"))._jdf
+        expr = plan.queryExecution().analyzed().projectList().apply(0).child()
+        if expr.getClass().getSimpleName() != "CreateArray":
+            return None
+        return int(expr.children().size())
+    except Exception:  # no analyzable projection: stay conservative
+        return None
 
 
 @dataclass

@@ -64,7 +64,7 @@ from ..storage.metadata import (
     IndexConfig,
     IndexMetadata,
 )
-from ..storage.table import read_manifest
+from ..storage.table import live_rows, read_manifest
 from . import locate as spark_planner
 from .locate import Band, LocateStats
 
@@ -140,22 +140,11 @@ def _read_segment(seg: Segment, columns: list[str]) -> pa.Table:
 
 def read_live(segs: list[Segment], columns: list[str]) -> pa.Table:
     """Live rows of a table keyed on filename: the rows of the newest
-    segment holding each filename (replace-per-key, ParquetTable.read's
-    semantics), one pass per segment, newest first. Columns a segment
-    lacks read as null."""
-    parts: list[pa.Table] = []
-    seen: list[pa.Array] = []
-    for seg in reversed(segs):
-        t = _read_segment(seg, columns)
-        if seen:
-            known = pa.chunked_array(seen, pa.string()).combine_chunks()
-            t = t.filter(pc.invert(pc.is_in(t["filename"], value_set=known)))
-        if t.num_rows:
-            parts.append(t)
-            seen.append(pc.unique(t["filename"]).cast(pa.string()))
-    if not parts:
-        return pa.table({"filename": pa.array([], pa.string())})
-    return pa.concat_tables(parts, promote_options="permissive").combine_chunks()
+    segment holding each filename (``storage.table.live_rows``), read
+    one segment at a time, newest first. Columns a segment lacks read
+    as null."""
+    live = live_rows((_read_segment(s, columns) for s in reversed(segs)), "filename")
+    return pa.table({"filename": pa.array([], pa.string())}) if live is None else live
 
 
 # ------------------------------------------------------------------ typing
@@ -213,27 +202,32 @@ def _temporal(t: pa.DataType) -> bool:
 
 
 def typed_values(column: str, values, t: pa.DataType | None) -> pa.Array:
-    """Distinct non-null ``values`` as an Arrow array of type ``t``.
+    """Distinct non-null ``values`` (an iterable, or an Arrow array of
+    keys a caller collected) as an Arrow array of type ``t``.
 
     Raises ``TypeError`` for a value that cannot be cast — a number for
     a DATE/TIMESTAMP column (days or microseconds: Catalyst's internal
     form, never a date), a float that does not fit an integer column, a
     string that does not parse. Untyped (``t`` None) values pass through
     as Arrow infers them."""
-    vals = list(dict.fromkeys(v for v in values if v is not None))
-    if t is not None and pa.types.is_timestamp(t) and t.tz:
-        # a naive datetime names local time, as PySpark reads it; pass
-        # Arrow UTC instants (it keeps an offset datetime's wall clock)
-        vals = [
-            v.astimezone(datetime.timezone.utc)
-            if isinstance(v, datetime.datetime)
-            else v
-            for v in vals
-        ]
-    try:
-        arr = pa.array(vals) if vals else pa.array([], t or pa.null())
-    except (pa.ArrowInvalid, pa.ArrowTypeError) as e:
-        raise TypeError(f"{column}: values {vals[:5]!r} do not share a type") from e
+    if isinstance(values, pa.Array):
+        arr = pc.unique(values.drop_null())
+        vals = arr.slice(0, 5).to_pylist()  # for the messages
+    else:
+        vals = list(dict.fromkeys(v for v in values if v is not None))
+        if t is not None and pa.types.is_timestamp(t) and t.tz:
+            # a naive datetime names local time, as PySpark reads it; pass
+            # Arrow UTC instants (it keeps an offset datetime's wall clock)
+            vals = [
+                v.astimezone(datetime.timezone.utc)
+                if isinstance(v, datetime.datetime)
+                else v
+                for v in vals
+            ]
+        try:
+            arr = pa.array(vals) if vals else pa.array([], t or pa.null())
+        except (pa.ArrowInvalid, pa.ArrowTypeError) as e:
+            raise TypeError(f"{column}: values {vals[:5]!r} do not share a type") from e
     if t is None or arr.type == t:
         return arr
     if _temporal(t) and (
@@ -246,7 +240,7 @@ def typed_values(column: str, values, t: pa.DataType | None) -> pa.Array:
         )
     try:
         if pa.types.is_decimal(t) and pa.types.is_integer(arr.type):
-            return pa.array(vals, type=t)  # an int64 cast needs precision 19+
+            return pa.array(arr.to_pylist(), type=t)  # an int64 cast needs precision 19+
         return arr.cast(t, safe=True)
     except (pa.ArrowInvalid, pa.ArrowTypeError, pa.ArrowNotImplementedError) as e:
         raise TypeError(

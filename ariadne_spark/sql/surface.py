@@ -1075,6 +1075,8 @@ def _plan_and_swap(
     # accumulated join-key frames per view; swapping is monotone
     # refinement (every re-swap only ADDS constraints, and file
     # pruning is conservative, so intermediate states stay correct)
+    selected: dict = {}  # key -> files its last swap kept
+
     def _swap_with(key, frames: dict[str, DataFrame]) -> None:
         name = key if isinstance(key, str) else key[0]
         idx = metas[name]
@@ -1084,6 +1086,7 @@ def _plan_and_swap(
             # candidate set; the frame would only widen it
             query_map.setdefault(icol, frame)
         files = idx.locate_files(query_map)
+        selected[key] = len(files)
         pruned = idx.read_files(files, include_all_virtuals=True)
         if isinstance(key, str):
             # last swap per view wins (monotone refinement re-swaps)
@@ -1176,7 +1179,9 @@ def _plan_and_swap(
             for key, other_side in sides:
                 name = key if isinstance(key, str) else key[0]
                 pairs = _join_equi_cols(cond, indexed_cols[name])
-                if not pairs:
+                if not pairs or selected.get(key, 2) <= 1:
+                    # a view already cut to ≤1 file: executing the
+                    # other side could at most drop that one file
                     continue
                 # an already-pruned other side executes its pruned read
                 # (substituted, since the shared views stay full);

@@ -9,6 +9,7 @@ write the same bytes.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
@@ -21,6 +22,7 @@ FILELIST_SCHEMA = StructType(
         StructField("filename", StringType(), False),
     ]
 )
+_ARROW_SCHEMA = pa.schema([pa.field("filename", pa.string(), nullable=False)])
 
 
 class FileList:
@@ -63,12 +65,12 @@ class FileList:
         return sorted({r[0] for r in rows})
 
     def add(self, filenames: list[str]) -> None:
+        """Register ``filenames``: one segment, written driver-side on
+        local storage (see ``ParquetTable.append``)."""
         if not filenames:
             return
-        df = self.spark.createDataFrame(
-            [(f,) for f in sorted(set(filenames))], FILELIST_SCHEMA
-        )
-        self.table.append(df)
+        names = pa.array(sorted(set(filenames)), pa.string())
+        self.table.append(pa.Table.from_arrays([names], schema=_ARROW_SCHEMA))
 
     def remove(self, filenames: list[str]) -> None:
         if not filenames or not self.table.exists:

@@ -52,15 +52,19 @@ accepts for its Hadoop-FS lock files, IndexLock.scala:396-411).
 from __future__ import annotations
 
 import json
+import os
 import sys
 import uuid
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..exceptions import TableCommitConflictError
-from .fs import get_fs, join as _join
+from .fs import PosixFS, get_fs, join as _join, strip_file_scheme
 
 _MANIFEST_DIR = "_manifest"
 _SEQ_COL = "_ariadne_seq"
@@ -94,13 +98,60 @@ def read_manifest(fs, path: str, version: int | None = None) -> dict | None:
     return m
 
 
+def _spark_schema(data: "DataFrame | pa.Table") -> T.StructType:
+    """The Spark schema a segment of ``data`` is stored under; for Arrow,
+    a zoned timestamp maps to TIMESTAMP and a naive one to
+    TIMESTAMP_NTZ."""
+    if isinstance(data, pa.Table):
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        return from_arrow_schema(data.schema, prefer_timestamp_ntz=True)
+    return data.schema
+
+
+def _nullable(dt):
+    """``dt`` with every nested field, element and value nullable."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _nullable(f.dataType)) for f in dt.fields]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def live_rows(tables, key: str | None) -> pa.Table | None:
+    """Replace-per-key fold of per-segment Arrow tables given in
+    precedence order (newest first for ``dedup='last'``, oldest first
+    for ``'first'``): per ``key`` value, every row of the first table
+    holding it; with no key, every row — :meth:`ParquetTable.read`'s
+    semantics. ``tables`` may be a generator, so segments load one at a
+    time. None when no row is live."""
+    parts: list[pa.Table] = []
+    seen: list[pa.Array] = []
+    for t in tables:
+        if key is not None and seen:
+            known = pa.concat_arrays([k.cast(t[key].type) for k in seen])
+            t = t.filter(pc.invert(pc.is_in(t[key], value_set=known)))
+        if t.num_rows:
+            parts.append(t)
+            if key is not None:
+                seen.append(pc.unique(t[key]))
+    if not parts:
+        return None
+    return pa.concat_tables(parts, promote_options="permissive").combine_chunks()
+
+
 class ParquetTable:
     """A versioned parquet table with replace-per-key append semantics.
 
-    ``key_cols`` define the replacement key: an append whose rows share
-    a key with older segments supersedes *all* older rows of that key
-    (``dedup='last'``) or is ignored in favor of them (``dedup='first'``,
-    the insert-if-absent semantics the FileList needs).
+    ``key_cols`` (at most one column) define the replacement key: an
+    append whose rows share a key with older segments supersedes *all*
+    older rows of that key (``dedup='last'``) or is ignored in favor of
+    them (``dedup='first'``, the insert-if-absent semantics the FileList
+    needs).
     """
 
     def __init__(
@@ -114,6 +165,8 @@ class ParquetTable:
         self.spark = spark
         self.path = path.rstrip("/")
         self.fs = get_fs(spark, self.path)
+        if len(key_cols) > 1:
+            raise ValueError("a ParquetTable keys on at most one column")
         self.key_cols = tuple(key_cols)
         assert dedup in ("last", "first")
         self.dedup = dedup
@@ -324,16 +377,31 @@ class ParquetTable:
 
     # ------------------------------------------------------------ writes
 
-    def _write_segment(self, df: DataFrame) -> str:
+    def _write_segment(self, data: "DataFrame | pa.Table") -> str:
+        """Write one segment and return its directory. An Arrow table is
+        already whole in driver memory: on local storage pyarrow writes
+        it as one snappy part file, no Spark job; on remote storage it
+        goes through ``df.write`` like a DataFrame."""
         seg = f"data/seg-{uuid.uuid4().hex}"
-        df.write.mode("overwrite").parquet(_join(self.path, seg))
+        if isinstance(data, pa.Table):
+            if isinstance(self.fs, PosixFS):
+                d = strip_file_scheme(_join(self.path, seg))
+                os.makedirs(d, exist_ok=True)
+                name = f"part-00000-{uuid.uuid4().hex}.snappy.parquet"
+                pq.write_table(data, os.path.join(d, name), compression="snappy")
+                return seg
+            data = self.spark.createDataFrame(data, schema=_spark_schema(data))
+        data.write.mode("overwrite").parquet(_join(self.path, seg))
         return seg
 
-    def append(self, df: DataFrame) -> None:
-        """Append a segment; per-key replacement resolves at read time."""
-        self._check_segment_unique(df)
-        seg = self._write_segment(df)
-        sch = df.schema.json()
+    def append(self, data: "DataFrame | pa.Table") -> None:
+        """Append a segment; per-key replacement resolves at read time.
+        ``data`` is a DataFrame or, for a small driver-side commit, an
+        Arrow table (see :meth:`_write_segment`)."""
+        if isinstance(data, DataFrame):
+            self._check_segment_unique(data)
+        seg = self._write_segment(data)
+        sch = _spark_schema(data).json()
 
         def build(old):
             next_seq = max([s["seq"] for s in old], default=0) + 1
@@ -370,9 +438,11 @@ class ParquetTable:
                 "table with segment_unique=False"
             )
 
-    def overwrite(self, df: DataFrame, extra: dict | None = None) -> None:
-        seg = self._write_segment(df)
-        sch = df.schema.json()
+    def overwrite(
+        self, data: "DataFrame | pa.Table", extra: dict | None = None
+    ) -> None:
+        seg = self._write_segment(data)
+        sch = _spark_schema(data).json()
         self._commit(
             lambda old: [{"seq": 1, "dir": seg, "schema": sch}], extra=extra
         )
@@ -412,13 +482,65 @@ class ParquetTable:
         m = self._read_manifest(version)
         self._commit(lambda old: m["segments"])
 
+    def _local_compact_bound(self) -> int:
+        """Segment bytes under which a local table compacts driver-side:
+        the fold loads every segment into driver memory."""
+        from ..plans.locate import LOCAL_INDEX_MAX_BYTES
+
+        return LOCAL_INDEX_MAX_BYTES if isinstance(self.fs, PosixFS) else -1
+
     def compact(self) -> None:
-        """Fold all segments into one (OPTIMIZE analog)."""
+        """Fold all segments into one (OPTIMIZE analog). A local table
+        whose segments sum under :meth:`_local_compact_bound` folds
+        driver-side with pyarrow (:meth:`_live_arrow`), no Spark job."""
         m = self._read_manifest()
         if m is None or len(m["segments"]) <= 1:
             return
-        df = self.read()
-        self.overwrite(df)
+        live = None
+        if self._bytes_of(m["segments"]) <= self._local_compact_bound():
+            live = self._live_arrow(m["segments"])
+        self.overwrite(self.read() if live is None else live)
+
+    def _live_arrow(self, segments: list[dict]) -> pa.Table | None:
+        """The live rows as Arrow (:func:`live_rows` over the segments in
+        ``dedup`` order), in the schema :meth:`read` gives: segment
+        columns in union order, the key first on the one-row-per-key
+        path, and every field nullable, as a Spark file read makes it.
+        None when a segment carries no stored schema (pre-r11)."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        fields: dict[str, T.StructField] = {}
+        for s in segments:
+            if not s.get("schema"):
+                return None
+            for f in T.StructType.fromJson(json.loads(s["schema"])).fields:
+                fields.setdefault(f.name, T.StructField(f.name, _nullable(f.dataType)))
+        key = self.key_cols[0] if self.key_cols else None
+        if key is not None and self.segment_unique:
+            fields = {key: fields[key], **fields}
+        target = to_arrow_schema(T.StructType(list(fields.values())))
+
+        def conform(s: dict) -> pa.Table:
+            files = self.fs.list_files(_join(self.path, s["dir"]), ".parquet")
+            parts = [
+                pq.read_table(strip_file_scheme(f), coerce_int96_timestamp_unit="us")
+                for f in files
+            ]
+            t = pa.concat_tables(parts, promote_options="permissive") if parts else None
+            n = 0 if t is None else t.num_rows
+            return pa.Table.from_arrays(
+                [
+                    t[f.name].cast(f.type)
+                    if t is not None and f.name in t.column_names
+                    else pa.nulls(n, f.type)
+                    for f in target
+                ],
+                schema=target,
+            )
+
+        order = sorted(segments, key=lambda s: s["seq"], reverse=self.dedup == "last")
+        live = live_rows((conform(s) for s in order), key)
+        return target.empty_table() if live is None else live
 
     def vacuum(
         self, retention_hours: float | None = None, keep_manifests: int = 3

@@ -168,10 +168,35 @@ def test_footer_batching_falls_back_for_exploded(spark, storage, tagged_files, m
 def test_footer_batching_falls_back_for_array_expression_bloom(
     spark, storage, orders_files, monkeypatch
 ):
+    # an array of no fixed length: its element count has no footer bound
     df, files = orders_files
     idx = Index.for_name("o_arr_fb", schema=df.schema, format="parquet", spark=spark)
-    idx.add_bloom_index("okpair", fpr=1e-6, expression="array(o_orderkey, o_custkey)")
+    idx.add_bloom_index(
+        "okpair", fpr=1e-6, expression="array_distinct(array(o_orderkey, o_custkey))"
+    )
     _assert_analyzed(monkeypatch, idx.add_files(files))
+
+
+def test_footer_batching_covers_fixed_length_array_bloom(
+    spark, storage, orders_files, monkeypatch
+):
+    """A fixed-length ``array(...)`` bloom adds at most its length in
+    distinct elements per row, so footer rows x length bounds the batch:
+    no analysis scan, and the same rows as the HLL path."""
+    df, files = orders_files
+    calls = _counting_analysis(monkeypatch)
+
+    def make(name):
+        idx = Index.for_name(name, schema=df.schema, format="parquet", spark=spark)
+        idx.add_bloom_index("okpair", fpr=1e-6, expression="array(o_orderkey, o_custkey)")
+        return idx.add_files(files)
+
+    foot = make("o_arr_foot").update()
+    assert calls["n"] == 0
+    monkeypatch.setattr(index_mod, "fits_one_batch", lambda *a, **kw: False)
+    hll = make("o_arr_hll").update()
+    assert calls["n"] == 1
+    assert _canon(foot) == _canon(hll)
 
 
 def test_footer_batching_falls_back_over_budget(spark, storage, orders_files, monkeypatch):
