@@ -46,7 +46,12 @@ from .exceptions import (
     SchemaNotProvidedError,
     UnsupportedFormatError,
 )
-from .operators.build import build_index_rows, split_large_indexes
+from .operators.build import (
+    DriverBuildDeclined,
+    build_index_rows,
+    plan_driver_build,
+    split_large_indexes,
+)
 from .operators.join import apply_temporal_dedup, prune_metrics_local
 from .plans.batching import analyze_files, create_batches, fits_one_batch
 from .plans import locate as spark_planner
@@ -676,6 +681,9 @@ class Index:
         collect_set state stays under largeIndexLimit; every batch
         commit is atomic, so a crashed update resumes where it left
         off (unindexed files are recomputed from FileList ∖ index).
+        Plain-column indexes over a bounded local parquet batch build
+        on the driver in one batch, with no Spark job
+        (``operators.build.plan_driver_build``).
 
         ``footer_stats=True`` builds RANGE indexes from parquet FOOTER
         statistics instead of scanning data — indexing an existing
@@ -713,6 +721,8 @@ class Index:
                 and self.meta.indexes
                 and all(c.type == RANGE for c in self.meta.indexes)
             )
+            if not use_footers and self._driver_update(conf, lock, sorted(todo), fp[0]):
+                return self
             # footer proof: every counted index is scalar and the
             # files' footer rows sum under largeIndexLimit, so no file
             # holds that many distinct values — nothing can spill
@@ -750,7 +760,8 @@ class Index:
             temporal_cols = [
                 c.column for c in self.meta.indexes if c.type == TEMPORAL
             ]
-            for i, batch in enumerate(batches):
+            synced = fp[0]
+            for batch in batches:
                 if use_footers:
                     try:
                         from .operators.build import (
@@ -782,19 +793,45 @@ class Index:
                             conf.auto_bloom_fpr,
                             temporal_cols=temporal_cols,
                         )
-                    for col, ldf in large.items():
-                        ParquetTable(
-                            self.spark,
-                            self.paths.large_index(col),
-                            key_cols=("filename",),
-                        ).append(ldf)
-                    self.table.append(main_rows)
-                    self._invalidate()
+                    self._commit_rows(main_rows, large)
                 finally:
                     rows.unpersist()
-                self._batch_committed(conf, lock)
-            self._finish_update(conf, fp[0])
+                synced = self._batch_committed(conf, lock, synced)
+            self._finish_update(conf, synced)
         return self
+
+    def _driver_update(self, conf, lock, todo: list[str], synced: int | None) -> bool:
+        """Build and commit ``todo`` as one driver-side batch when
+        :func:`plan_driver_build` accepts it; False, having committed
+        nothing, when the batch builds through Spark."""
+        plan = plan_driver_build(
+            self.spark,
+            self.fs,
+            self.meta,
+            todo,
+            conf.large_index_limit,
+            conf.auto_bloom_fpr,
+        )
+        try:
+            if isinstance(plan, str):
+                raise DriverBuildDeclined(plan)
+            built = build_index_rows(self.spark, self.meta, todo, local=plan)
+        except DriverBuildDeclined as e:
+            log.info("index %s: building through Spark: %s", self.name, e)
+            return False
+        self._commit_rows(built.main, built.large)
+        self._finish_update(conf, self._batch_committed(conf, lock, synced))
+        return True
+
+    def _commit_rows(self, main, large: dict) -> None:
+        """Commit one batch's index rows: the spill tables first, then
+        the main rows that make them live. Frames or Arrow tables."""
+        for col, rows in large.items():
+            ParquetTable(
+                self.spark, self.paths.large_index(col), key_cols=("filename",)
+            ).append(rows)
+        self.table.append(main)
+        self._invalidate()
 
     def _update_lock(self, conf) -> IndexLock:
         return IndexLock(
@@ -806,15 +843,18 @@ class Index:
             fs=self.fs,
         )
 
-    def _batch_committed(self, conf, lock) -> None:
+    def _batch_committed(self, conf, lock, synced: int | None) -> int | None:
         """Bookkeeping after one batch's index rows commit: count it,
         and consolidate once ``stagingConsolidationThreshold`` batches
-        have accumulated."""
+        have accumulated. ``synced`` is the FileList version the indexed
+        set stands for; returns it as the consolidation leaves it (see
+        :meth:`_compact_tables`)."""
         self.meta.batches_since_compact += 1
         lock.refresh()
         if self.meta.batches_since_compact >= conf.staging_consolidation_threshold:
-            self._compact_tables()
+            synced = self._compact_tables(synced)
             self.meta.batches_since_compact = 0
+        return synced
 
     def _finish_update(self, conf, filelist_version: int | None) -> None:
         """The tail of every update: size accounting, auto-compaction,
@@ -825,7 +865,7 @@ class Index:
             conf.auto_compact_threshold is not None
             and self.meta.batches_since_compact >= conf.auto_compact_threshold
         ):
-            self._compact_tables()
+            filelist_version = self._compact_tables(filelist_version)
             self.meta.batches_since_compact = 0
         save_metadata(self.paths.metadata, self.meta, fs=self.fs)
         self._mark_synced(filelist_version)
@@ -896,12 +936,10 @@ class Index:
             added = self.filelist.table._latest_version()
             self.table.append(row)
             self._invalidate()
-            self._batch_committed(conf, lock)
             # synced before, and the only FileList commit since is this
             # one: the FileList is the synced set plus ``name``
-            self._finish_update(
-                conf, added if synced and added == (fp[0] or 0) + 1 else None
-            )
+            version = added if synced and added == (fp[0] or 0) + 1 else None
+            self._finish_update(conf, self._batch_committed(conf, lock, version))
         return True
 
     def _mark_synced(self, filelist_version: int | None) -> None:
@@ -1271,7 +1309,13 @@ class Index:
         row = idx.agg(F.sum("file_size")).collect()[0]
         self.meta.total_indexed_bytes = int(row[0] or 0)
 
-    def _compact_tables(self) -> None:
+    def _compact_tables(self, synced: int | None = None) -> int | None:
+        """Fold the index, spill and FileList tables to one segment each.
+        ``synced`` is the FileList version the indexed set stands for;
+        the result is the version that stands for it afterwards: the
+        FileList compaction's own commit when it folded exactly
+        ``synced`` and nothing committed in between, ``synced`` when the
+        FileList was not folded, else None."""
         self.table.compact()
         self._invalidate()
         for cfg in self.meta.indexes:
@@ -1280,11 +1324,25 @@ class Index:
             )
             if t.exists:
                 t.compact()
+        folded = self.filelist.table.compact()
+        if folded is None:
+            return synced
+        read, committed = folded
+        return committed if read == synced and committed == read + 1 else None
 
     def compact(self) -> "Index":
-        self._compact_tables()
-        self.meta.batches_since_compact = 0
-        save_metadata(self.paths.metadata, self.meta, fs=self.fs)
+        """Fold every table of the index to one segment, under the update
+        lock. A handle synced before stays synced."""
+        conf = self.conf
+        lock = self._update_lock(conf)
+        with lock, lock.heartbeat():
+            fp = self._tables_fingerprint()
+            synced = fp == getattr(self, "_synced_fingerprint", None)
+            version = self._compact_tables(fp[0] if synced else None)
+            self.meta.batches_since_compact = 0
+            save_metadata(self.paths.metadata, self.meta, fs=self.fs)
+            if synced:
+                self._mark_synced(version)
         return self
 
     def vacuum(self, retention_hours: float = 168.0) -> "Index":

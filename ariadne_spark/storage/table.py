@@ -201,26 +201,29 @@ class ParquetTable:
 
     def _commit(
         self, build_segments, retries: int = 20, extra: dict | None = None
-    ) -> None:
+    ) -> int | None:
         """Optimistically commit: recompute segments from the latest
-        manifest, write v+1 create-exclusive, retry on collision.
-        ``extra`` is a small JSON-able dict stored in the manifest
-        under ``"extra"`` — application metadata (e.g. a streaming
-        sink's last committed batch id) that versions ATOMICALLY with
-        the data and reads back without any Spark job
+        manifest, write v+1 create-exclusive, retry on collision, and
+        return v+1; ``build_segments`` returning None abandons the
+        commit (returns None). ``extra`` is a small JSON-able dict
+        stored in the manifest under ``"extra"`` — application metadata
+        (e.g. a streaming sink's last committed batch id) that versions
+        ATOMICALLY with the data and reads back without any Spark job
         (:meth:`manifest_extra`)."""
         self.fs.mkdirs(self._manifest_dir())
         for _ in range(retries):
             current = self._read_manifest()
             version = (current["version"] if current else 0) + 1
             segments = build_segments(current["segments"] if current else [])
+            if segments is None:
+                return None
             body: dict = {"segments": segments}
             if extra:
                 body["extra"] = extra
             doc = json.dumps(body, indent=0)
             target = _join(self._manifest_dir(), f"v{version:020d}.json")
             if self.fs.create_exclusive(target, doc):
-                return
+                return version
         raise TableCommitConflictError(self.path)
 
     def manifest_extra(self) -> dict:
@@ -272,9 +275,12 @@ class ParquetTable:
                     f"available: {vs}"
                 )
         m = self._read_manifest(version)
-        if m is None:
-            return None
-        segments = m["segments"]
+        return None if m is None else self._read_segments(m["segments"], columns)
+
+    def _read_segments(
+        self, segments: list[dict], columns: list[str] | None = None
+    ) -> DataFrame | None:
+        """The live rows of ``segments`` (see :meth:`read`)."""
         if not segments:
             return None
         if len(segments) == 1 or not self.key_cols:
@@ -489,17 +495,41 @@ class ParquetTable:
 
         return LOCAL_INDEX_MAX_BYTES if isinstance(self.fs, PosixFS) else -1
 
-    def compact(self) -> None:
-        """Fold all segments into one (OPTIMIZE analog). A local table
-        whose segments sum under :meth:`_local_compact_bound` folds
-        driver-side with pyarrow (:meth:`_live_arrow`), no Spark job."""
+    def compact(self) -> tuple[int, int] | None:
+        """Fold the segments of the latest manifest into one (OPTIMIZE
+        analog). A local table whose segments sum under
+        :meth:`_local_compact_bound` folds driver-side with pyarrow
+        (:meth:`_live_arrow`), no Spark job.
+
+        The commit keeps every segment committed after the fold's
+        manifest read, and the folded segment takes the highest folded
+        seq, so those later segments keep their precedence in both
+        dedup modes. When a concurrent rewrite removed a folded segment
+        the fold is stale and nothing commits. Returns (the version
+        folded, the version committed), or None when nothing committed."""
         m = self._read_manifest()
         if m is None or len(m["segments"]) <= 1:
-            return
+            return None
+        folded = m["segments"]
         live = None
-        if self._bytes_of(m["segments"]) <= self._local_compact_bound():
-            live = self._live_arrow(m["segments"])
-        self.overwrite(self.read() if live is None else live)
+        if self._bytes_of(folded) <= self._local_compact_bound():
+            live = self._live_arrow(folded)
+        data = self._read_segments(folded) if live is None else live
+        seg = self._write_segment(data)
+        new = {
+            "seq": max(s["seq"] for s in folded),
+            "dir": seg,
+            "schema": _spark_schema(data).json(),
+        }
+        dirs = {s["dir"] for s in folded}
+
+        def build(old):
+            if not dirs <= {s["dir"] for s in old}:
+                return None
+            return [new] + [s for s in old if s["dir"] not in dirs]
+
+        committed = self._commit(build)
+        return None if committed is None else (m["version"], committed)
 
     def _live_arrow(self, segments: list[dict]) -> pa.Table | None:
         """The live rows as Arrow (:func:`live_rows` over the segments in

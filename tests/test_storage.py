@@ -634,3 +634,76 @@ def test_segment_schema_in_manifest_and_inference_fallback(spark, storage):
         open(mf, "w").write(_json.dumps(doc))
     t2 = ParquetTable(spark, f"{storage}/tschema", key_cols=("k",))
     assert sorted(map(tuple, t2.read().collect())) == rows
+
+
+def _append_during_commit(monkeypatch, t, foreign):
+    """Run ``foreign()`` once, between ``t.compact``'s manifest read and
+    its commit."""
+    orig = t._commit
+    calls = {"n": 0}
+
+    def commit(build, *args, **kwargs):
+        if not calls["n"]:
+            foreign()
+        calls["n"] += 1
+        return orig(build, *args, **kwargs)
+
+    monkeypatch.setattr(t, "_commit", commit)
+
+
+@pytest.mark.parametrize("site", ["local", "spark"])
+@pytest.mark.parametrize("dedup", ["last", "first"])
+def test_compact_keeps_segment_appended_during_fold(spark, storage, monkeypatch, site, dedup):
+    path = f"{storage}/race-{site}-{dedup}"
+    t = ParquetTable(spark, path, key_cols=("k",), dedup=dedup)
+    t.append(spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"]))
+    t.append(spark.createDataFrame([(2, "B"), (3, "c")], ["k", "v"]))
+    if site == "spark":
+        monkeypatch.setattr(t, "_local_compact_bound", lambda: -1)
+    other = ParquetTable(spark, path, key_cols=("k",), dedup=dedup)
+    late = spark.createDataFrame([(3, "late"), (4, "d")], ["k", "v"])
+    _append_during_commit(monkeypatch, t, lambda: other.append(late))
+    folded, committed = t.compact()
+    assert (folded, committed) == (2, 4)
+    assert t.num_segments == 2
+    want = {(1, "a"), (2, "B"), (3, "late"), (4, "d")}
+    if dedup == "first":
+        want = {(1, "a"), (2, "b"), (3, "c"), (4, "d")}
+    assert rows_set(t.read()) == want
+    # a later append still takes precedence over both
+    t.append(spark.createDataFrame([(1, "z")], ["k", "v"]))
+    assert ((1, "z") in rows_set(t.read())) == (dedup == "last")
+
+
+def test_compact_abandons_fold_stale_by_concurrent_rewrite(spark, storage, monkeypatch):
+    path = f"{storage}/race-rewrite"
+    t = ParquetTable(spark, path, key_cols=("k",))
+    t.append(spark.createDataFrame([(1, "a")], ["k", "v"]))
+    t.append(spark.createDataFrame([(2, "b")], ["k", "v"]))
+    other = ParquetTable(spark, path, key_cols=("k",))
+    _append_during_commit(monkeypatch, t, lambda: other.delete_where(F.col("k") == 1))
+    assert t.compact() is None
+    assert rows_set(t.read()) == {(2, "b")}
+
+
+def test_index_compact_takes_update_lock(spark, storage, orders_files, monkeypatch):
+    from ariadne_spark import Index
+
+    df, files = orders_files
+    idx = Index.for_name("compact_lock", schema=df.schema, format="parquet", spark=spark)
+    idx.add_index("o_custkey")
+    for f in files:
+        idx.add_files([f]).update()
+    held = []
+    orig = IndexLock.acquire
+
+    def acquire(self):
+        held.append(self)
+        return orig(self)
+
+    monkeypatch.setattr(IndexLock, "acquire", acquire)
+    idx.compact()
+    assert len(held) == 1
+    assert idx.table.num_segments == idx.filelist.table.num_segments == 1
+    # a synced handle stays synced across its own compaction
+    assert idx._synced_fingerprint == idx._tables_fingerprint()

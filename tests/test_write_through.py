@@ -176,6 +176,38 @@ def test_fallback_multi_file_append_refreshes_through_spark(spark, crawl):
     assert got == _pairs(dd.incremental_near_dup(_docs(spark, 7000, 10), oracle, threshold=0.5))
 
 
+def test_filelist_compacts_and_handle_stays_synced(spark, crawl, monkeypatch, tmp_path):
+    """With consolidation after every batch, the FileList folds with the
+    index table, and the handle's own fold keeps it synced: the next
+    add_files -> update pair reads no filename set."""
+    import shutil
+
+    from ariadne_spark import Index
+
+    store, oracle, idx = crawl
+    spark.conf.set("spark.ariadne.stagingConsolidationThreshold", "1")
+    try:
+        for b in range(3):
+            pairs, want, idx, jobs = _batch(spark, store, oracle, idx, _docs(spark, 1000 * (b + 1), 15))
+            assert pairs == want and jobs == 0
+        assert idx.filelist.table.num_segments == 1
+        assert idx.table.num_segments == 1
+        assert idx.unindexed_files() == []
+        assert sorted(idx.filelist.filenames()) == dd._snapshot_files(spark, store, "signature")
+        extra = str(tmp_path / "extra.parquet")
+        shutil.copy(idx.filelist.filenames()[0], extra)
+        calls = []
+        monkeypatch.setattr(
+            Index, "unindexed_files", lambda self: calls.append(1) or []
+        )
+        idx.add_files([extra]).update()
+        assert calls == []
+        assert extra in {r["filename"] for r in idx.index_df.collect()}
+        assert idx.filelist.table.num_segments == 1
+    finally:
+        spark.conf.unset("spark.ariadne.stagingConsolidationThreshold")
+
+
 def test_window_store_write_through(spark, tmp_path):
     spark.conf.set("spark.ariadne.storagePath", str(tmp_path / "ariadne"))
     store, oracle = str(tmp_path / "win"), str(tmp_path / "win_oracle")
